@@ -156,7 +156,22 @@ private[graft] class GraftBatchScan(
           math.min(maxSplit, f.sizeBytes - start), Array.empty, 0L, f.sizeBytes))
     }
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** The last planning pass and the file list it planned. Spark asks
+    * for the partitions more than once per query (each physical-plan
+    * copy); the list only changes when a runtime filter replaces
+    * `currentEntries`, so an identity match replays the pass —
+    * hydration and cache-budget enforcement included — instead of
+    * redoing it. */
+  private var planned: (Seq[GraftTable.FileEntry], Array[InputPartition]) = _
+
+  override def planInputPartitions(): Array[InputPartition] = synchronized {
+    val entries = currentEntries
+    if (planned == null || !(planned._1 eq entries))
+      planned = (entries, planPartitions(entries))
+    planned._2
+  }
+
+  private def planPartitions(entries: Seq[GraftTable.FileEntry]): Array[InputPartition] = {
     // on-demand hydration fires with the POST-runtime-filter file list:
     // a DPP-pruned native scan on a metadata-only fleet follower pulls
     // exactly the surviving files (plus the MoR delete files the
@@ -165,13 +180,13 @@ private[graft] class GraftBatchScan(
     // EXCLUDED from hydration — the scan transfers column bytes, not
     // file bytes; MoR delete files (small, read whole, shared across
     // readers) always hydrate.
-    remotePaths = currentEntries.flatMap(f =>
+    remotePaths = entries.flatMap(f =>
       GraftTable.remoteReadPath(root, f.path).map(f.path -> _)).toMap
     GraftTable.hydrate(root,
-      currentEntries.map(_.path).filterNot(remotePaths.contains) ++
+      entries.map(_.path).filterNot(remotePaths.contains) ++
         plan.deletes.map(_.path))
     if (spjActive) {
-      val byKey = currentEntries.groupBy(keyOf)
+      val byKey = entries.groupBy(keyOf)
       groupKeys.zipWithIndex.map { case (k, i) =>
         GraftKeyedPartition(i,
           byKey.getOrElse(k, Seq.empty).map(wholeFile).toArray,
@@ -180,8 +195,8 @@ private[graft] class GraftBatchScan(
     } else {
       val openCost = spark.sessionState.conf.filesOpenCostInBytes
       val maxSplit = FilePartition.maxSplitBytes(spark,
-        currentEntries.map(_.sizeBytes + openCost).sum)
-      val files = currentEntries.flatMap(splitFile(_, maxSplit))
+        entries.map(_.sizeBytes + openCost).sum)
+      val files = entries.flatMap(splitFile(_, maxSplit))
         .sortBy(-_.length)
       FilePartition.getFilePartitions(spark, files, maxSplit)
         .toArray[InputPartition]
@@ -246,19 +261,18 @@ private[graft] class GraftBatchScan(
     GraftTable.remoteReadConf.foreach(_().foreach { case (k, v) => hc.set(k, v) })
   }
 
-  /** Mirrors Spark's own ParquetScan.createReaderFactory conf setup:
-    * the requested schema rides the broadcast hadoop conf, and the
-    * factory handles per-file schema clipping, missing-column
-    * null-fill, widened-type promotion, predicate pushdown, and
-    * vectorized/columnar reading — the SAME reader stack the V1
-    * plane's spark.read.parquet uses, minus the Row bridge. */
   /** One vectorized parquet reader factory for (file schema, requested
-    * schema, filters) — the requested schema rides the broadcast hadoop
-    * conf exactly as Spark's own ParquetScan.createReaderFactory sets
-    * it up, so per-file clipping, missing-column null-fill, widened
-    * types, pushdown, and columnar reads all behave identically. */
+    * schema, filters) — the SAME reader stack the V1 plane's
+    * spark.read.parquet uses, minus the Row bridge. The requested
+    * schema rides the broadcast hadoop conf exactly as Spark's own
+    * ParquetScan.createReaderFactory sets it up, so per-file clipping,
+    * missing-column null-fill, widened types, pushdown, and columnar
+    * reads all behave identically. Each call copies the session hadoop
+    * conf and broadcasts it, which is why the scan builds its factories
+    * once ([[readerFactory]]). */
   private def mkParquetFactory(dataSchema: StructType, requested: StructType,
       filters: Array[Filter]): ParquetPartitionReaderFactory = {
+    factoryBuilds += 1
     val sqlConf = spark.sessionState.conf
     val hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
     stampRangedFsConf(hadoopConf)
@@ -306,11 +320,28 @@ private[graft] class GraftBatchScan(
   private val outRenames: Seq[(String, Seq[String])] =
     plan.renames.filter { case (n, _) => dataCols.fieldNames.contains(n) }
 
-  override def createReaderFactory(): PartitionReaderFactory =
+  @volatile private var factoryBuilds = 0
+
+  /** [[mkParquetFactory]] calls so far (spec observability). */
+  private[graft] def parquetFactoryBuilds: Int = factoryBuilds
+
+  /** Built on first request and shared by every physical-plan copy:
+    * nothing it captures changes over the scan's life (runtime
+    * filtering narrows the file list, not the readers). */
+  private lazy val readerFactory: GraftMeteredFactory =
     GraftMeteredFactory(
       if (plan.deletes.isEmpty && !rowIdRequested && outRenames.isEmpty)
         GraftReaderFactory(mkParquetFactory(plan.schema, readDataSchema, pushedFilters))
       else morReaderFactory())
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+
+  /** Whether the MoR reader carries a deletion-vector factory (spec
+    * observability: built only when the snapshot has DV files). */
+  private[graft] def dvFactoryBuilt: Boolean = readerFactory.delegate match {
+    case m: GraftMorReaderFactory => m.dvFactory != null
+    case _ => false
+  }
 
   /** The wrapping read path — MoR snapshots and/or `_row_id` lineage:
     * files re-read through an EXTENDED schema (projection-pruned
@@ -409,10 +440,14 @@ private[graft] class GraftBatchScan(
           f.path.split('/').last -> f.firstRowId).toMap)
       else None,
       posDeletes = posDeletes,
-      posFactory = mkParquetFactory(posSchema, posSchema, Array.empty),
+      posFactory =
+        if (posDeletes.isEmpty) null
+        else mkParquetFactory(posSchema, posSchema, Array.empty),
       eqGroups = eqGroups,
       dvDeletes = dvDeletes,
-      dvFactory = mkParquetFactory(GraftDv.schema, GraftDv.schema, Array.empty),
+      dvFactory =
+        if (dvDeletes.isEmpty) null
+        else mkParquetFactory(GraftDv.schema, GraftDv.schema, Array.empty),
       renames = renames,
       renameConf = bcConf)
   }

@@ -129,10 +129,10 @@ private[lake] case class GraftMorReaderFactory(
     gfOrd: Int,                          // materialized _gf_row_id ordinal, or -1
     lineage: Option[Map[String, Option[Long]]],  // fileName -> firstRowId
     posDeletes: Seq[(String, Long)],
-    posFactory: ParquetPartitionReaderFactory,
+    posFactory: ParquetPartitionReaderFactory,  // null when posDeletes is empty
     eqGroups: Seq[GraftEqGroup],
     dvDeletes: Seq[(String, Long)] = Seq.empty,  // content=3 containers
-    dvFactory: ParquetPartitionReaderFactory = null,
+    dvFactory: ParquetPartitionReaderFactory = null,  // null when dvDeletes is empty
     renames: Seq[GraftRenameAlt] = Seq.empty,
     renameConf: org.apache.spark.broadcast.Broadcast[
       org.apache.spark.util.SerializableConfiguration] = null)

@@ -4278,12 +4278,13 @@ object GraftTable {
     *    generation's spec/tombstones must not merge through), layered
     *    otherwise — replayState's rule
     *  - schema: the last one declared
-    * None when no parquet+meta checkpoint covers `target`; callers
-    * gate on `belowThreshold` themselves. */
+    * None when no parquet+meta checkpoint covers `target`, or when
+    * that checkpoint's file count is below the distributed-planning
+    * threshold — decided from the meta alone, before any tail commit
+    * is read (planning then replays the log in memory instead). */
   private case class CkptTail(ck: Long, meta: Commit, tail: Seq[Commit],
       delta: scala.collection.mutable.LinkedHashMap[String, Option[FileEntry]],
       props: Map[String, String], schemaJson: Option[String]) {
-    def belowThreshold: Boolean = { val (c, t) = scaleOf(meta); c < t }
     def timestampMs: Long = tail.lastOption.map(_.timestampMs).getOrElse(meta.timestampMs)
     def touched: Seq[String] = delta.keySet.toSeq
     def tailAdds: Seq[FileEntry] = delta.values.flatten.toSeq
@@ -4293,8 +4294,9 @@ object GraftTable {
     val lin = lineageOf(root, target)
     listCkptFilesIds(root).filter(k => k <= lin.ckptCeiling &&
       Files.exists(logDir(root).resolve(s"ckptmeta-$k.json"))).sorted.lastOption
-      .map { k =>
-        val meta = parseCommit(Files.readString(logDir(root).resolve(s"ckptmeta-$k.json")))
+      .map(k => (k, parseCommit(Files.readString(logDir(root).resolve(s"ckptmeta-$k.json")))))
+      .filter { case (_, meta) => val (c, t) = scaleOf(meta); c >= t }
+      .map { case (k, meta) =>
         // off-main (staged WAP / branch) commits fold past the tail
         // exactly as replay does — the shared Lineage rule decides
         val tail = listCommitIds(root).filter(id => id > k && id <= target)
@@ -4368,7 +4370,7 @@ object GraftTable {
     val target = asOf.getOrElse(mainHeadId(root, ids))
     require(ids.contains(target),   // same loud contract as state()
       s"snapshot $target not in log (expired or never existed); have ${ids.min}..${ids.max}")
-    val ctOpt = ckptTail(root, target).filterNot(_.belowThreshold)
+    val ctOpt = ckptTail(root, target)
     if (ctOpt.isEmpty) return None
     val ct = ctOpt.get
     val schema = DataType.fromJson(ct.schemaJson.get).asInstanceOf[StructType]
@@ -6843,7 +6845,7 @@ object GraftTable {
       s"snapshot $target not in log (expired or never existed); have ${ids.min}..${ids.max}")
     // target itself has no parquet+meta pair (checked above), so the
     // shared replay resolves to a strictly earlier checkpoint
-    val ctOpt = ckptTail(root, target).filterNot(_.belowThreshold)
+    val ctOpt = ckptTail(root, target)
     if (ctOpt.isEmpty) return false
     val ct = ctOpt.get
     val (props, schemaJ, ts) = (ct.props, ct.schemaJson, ct.timestampMs)
@@ -7021,7 +7023,7 @@ object GraftTable {
     val ids = listCommitIds(root)
     require(ids.nonEmpty, s"not a GraftTable (empty log): $root")
     val target = mainHeadId(root, ids)
-    val (schema, props, stats) = ckptTail(root, target).filterNot(_.belowThreshold) match {
+    val (schema, props, stats) = ckptTail(root, target) match {
       case None =>
         val snap = state(root)
         val schema = DataType.fromJson(snap.schemaJson.getOrElse(
@@ -7276,7 +7278,7 @@ object GraftTable {
     if (ids.isEmpty) return None
     val target = asOf.getOrElse(mainHeadId(root, ids))
     if (!ids.contains(target)) return None   // V1 plane raises the loud error
-    ckptTail(root, target).filterNot(_.belowThreshold) match {
+    ckptTail(root, target) match {
       case Some(ct) =>
         val schema = DataType.fromJson(ct.schemaJson.get).asInstanceOf[StructType]
         if (renamesAmbiguous(schema)) return None

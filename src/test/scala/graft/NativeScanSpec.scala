@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{Filter, In}
 
 import graft.lake.{GraftBatchScan, GraftTable}
 import graft.sources.Tables
@@ -247,8 +249,65 @@ class NativeScanSpec extends SparkSpec {
       assert(sc.get.plannedFileCount == 8, s"planned ${sc.get.plannedFileCount}")
       assert(sc.get.liveFileCount == 2,
         s"runtime filter should keep 2 of 8 files, kept ${sc.get.liveFileCount}")
+      // the planned partitions cover exactly the kept files: the
+      // planning memo never serves the pre-filter list
+      def plannedDays(scan: GraftBatchScan): Set[Long] = {
+        val paths = scan.planInputPartitions().toSeq.flatMap {
+          case fp: FilePartition => fp.files.map(_.filePath.toString).toSeq
+          case other => fail(s"unexpected partition $other")
+        }.distinct
+        spark.read.parquet(paths: _*).select("day_k").distinct()
+          .collect().map(_.getLong(0)).toSet
+      }
+      assert(plannedDays(sc.get) == Set(1L, 2L))
+      // the same on a scan driven by hand: plan, runtime-filter, re-plan
+      val fresh = nativeScanOf(spark.sql("SELECT day_k, amount FROM graft.nsc.sales")).get
+      assert(plannedDays(fresh) == (0L until 8L).toSet)
+      fresh.filter(Array[Filter](In("day_k", Array[Any](3L, 6L))))
+      assert(plannedDays(fresh) == Set(3L, 6L))
     } finally
       spark.conf.unset("spark.sql.optimizer.dynamicPartitionPruning.useStats")
+  }
+
+  test("a native scan plans once per query: one reader factory, one hydration, no unused factories") {
+    spark.sql("""CREATE TABLE graft.nsc.once (id BIGINT, v STRING)
+      |TBLPROPERTIES ('write.delete.mode'='merge-on-read')""".stripMargin)
+    import spark.implicits._
+    (0L until 200L).map(i => (i, s"v${i % 10}")).toDF("id", "v")
+      .coalesce(1).createOrReplaceTempView("once_src")
+    spark.sql("INSERT INTO graft.nsc.once SELECT * FROM once_src")
+    val root = s"$wh/nsc/once"
+    GraftTable.deleteWhereMoR(spark, root, col("id") % 7 === 0)          // position
+    GraftTable.deleteEqualityMoR(spark, root, Seq("v3").toDF("v"))      // equality
+    val oracle = (0L until 200L).filter(i => i % 7 != 0 && i % 10 != 3)
+
+    // counts hydration dispatches for this table only; every other
+    // root passes through to whatever hook was installed before
+    val rootPath = java.nio.file.Paths.get(root).toAbsolutePath.normalize
+    val dispatches = new java.util.concurrent.atomic.AtomicInteger
+    val prev = GraftTable.hydrateFiles
+    val counting: (java.nio.file.Path, Seq[String]) => Unit = { (r, rels) =>
+      if (r.startsWith(rootPath)) dispatches.incrementAndGet()
+      prev.foreach(_(r, rels))
+    }
+    GraftTable.hydrateFiles = Some(counting)
+    try {
+      val q = spark.sql("SELECT id, v FROM graft.nsc.once")
+      val sc = nativeScanOf(q).get
+      assert(sc.morDeleteCount >= 2)
+      assert(q.collect().map(_.getLong(0)).sorted.toSeq == oracle)
+      assert(dispatches.get == 1, s"one hydration per query, saw ${dispatches.get}")
+      assert(sc.createReaderFactory() eq sc.createReaderFactory())
+      // plain + extended + position-delete + one equality group; no DV
+      // factory: the snapshot has no DV files
+      assert(sc.parquetFactoryBuilds == 4, s"built ${sc.parquetFactoryBuilds} factories")
+      assert(!sc.dvFactoryBuilt)
+
+      val q2 = spark.sql("SELECT id FROM graft.nsc.once WHERE id >= 100")
+      assert(q2.collect().map(_.getLong(0)).sorted.toSeq == oracle.filter(_ >= 100))
+      assert(dispatches.get == 2, s"one hydration per query, saw ${dispatches.get}")
+    } finally
+      if (GraftTable.hydrateFiles.exists(_ eq counting)) GraftTable.hydrateFiles = prev
   }
 
   test("storage-partitioned join: co-partitioned graft tables join with no shuffle") {
