@@ -5,7 +5,7 @@ import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, Offset
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** The CDC change feed as a Structured Streaming SOURCE — Delta's
   * `readChangeFeed` / Iceberg's changelog-as-stream workflow
@@ -72,10 +72,7 @@ private[lake] object GraftCdcStreamProvider {
   def cdcSchema(root: String): StructType = {
     GraftTable.beforeLogPoll.foreach(
       _(java.nio.file.Paths.get(root).toAbsolutePath.normalize))
-    val snap = GraftTable.state(root)
-    val base = DataType.fromJson(snap.schemaJson.getOrElse(
-      GraftTable.state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
-    base.add("_change_type", StringType)
+    GraftTable.state(root).schema.add("_change_type", StringType)
       .add("_commit_snapshot_id", LongType)
       .add("_commit_timestamp_ms", LongType)
   }

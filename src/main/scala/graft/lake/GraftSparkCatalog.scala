@@ -956,11 +956,7 @@ private[lake] class GraftSparkTable(fqName: String, root: String, asOf: Option[L
 
   override def name(): String = fqName
 
-  override def schema(): StructType = {
-    val snap = GraftTable.state(root, asOf)
-    DataType.fromJson(snap.schemaJson.getOrElse(
-      GraftTable.state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
-  }
+  override def schema(): StructType = GraftTable.state(root, asOf).schema
 
   /** Manifest-exact live-data size, for GraftBroadcastHints. */
   private[lake] def estimatedSizeBytes: Long =
@@ -1328,11 +1324,7 @@ private[lake] class GraftRelation(ctx: SQLContext, root: String, asOf: Option[Lo
 
   override def sqlContext: SQLContext = ctx
 
-  private val fullSchema: StructType = {
-    val snap = GraftTable.state(root, asOf)
-    DataType.fromJson(snap.schemaJson.getOrElse(
-      GraftTable.state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
-  }
+  private val fullSchema: StructType = GraftTable.state(root, asOf).schema
 
   override val schema: StructType = requiredCols match {
     case Some(cols) => StructType(cols.flatMap(c => fullSchema.fields.find(_.name == c)))

@@ -98,8 +98,10 @@ object GraftTable {
       properties: Map[String, String], schemaJson: Option[String],
       statsVersion: Option[Int] = None)
 
+  /** A replayed table state. `schema` is resolved once, by the header
+    * fold of the replay that built it. */
   case class Snapshot(snapshotId: Long, timestampMs: Long, operation: String,
-      files: Seq[FileEntry], properties: Map[String, String], schemaJson: Option[String])
+      files: Seq[FileEntry], properties: Map[String, String], schema: StructType)
 
   private implicit val formats: Formats = DefaultFormats
 
@@ -682,6 +684,10 @@ object GraftTable {
   private[lake] def parseCommit(s: String): Commit =
     JsonMethods.parse(s).extract[Commit]
 
+  /** The commit in log slot `id` — the one read point for commit slots. */
+  private def readCommit(root: String, id: Long): Commit =
+    parseCommit(Files.readString(commitPath(root, id)))
+
   private[lake] def listDir(p: Path): Seq[Path] =
     if (!Files.isDirectory(p)) Seq.empty
     else {
@@ -807,7 +813,7 @@ object GraftTable {
       Files.getLastModifiedTime(p).to(java.util.concurrent.TimeUnit.NANOSECONDS))
     if (kindMemo.size > 4096) kindMemo.clear()   // bounded
     kindMemo.computeIfAbsent(key, { _ =>
-      val c = parseCommit(Files.readString(p))
+      val c = readCommit(root, id)
       (Boolean.box(isStaged(c)), c.properties.get(txnDecisionProp), branchInfo(c))
     })
   }
@@ -944,22 +950,41 @@ object GraftTable {
   private[lake] def lineageOf(root: String, target: Long): Lineage =
     Lineage(root, target, branchInfoOfId(root, target))
 
+  /** The table header a lineage carries forward, folded commit by
+    * commit — THE one rule shared by replayState and ckptTail:
+    *  - properties: a REPLACE commit carries the table's COMPLETE new
+    *    config, so they reset wholesale (the old partition spec,
+    *    dropped-col tombstones etc. must not merge through); any other
+    *    commit layers its properties on top
+    *  - schema: the last one declared. */
+  private case class Header(props: Map[String, String], schemaJson: Option[String]) {
+    def fold(c: Commit): Header =
+      Header(if (c.operation == "replace") c.properties else props ++ c.properties,
+        c.schemaJson.orElse(schemaJson))
+    /** Commit 0 and every checkpoint carry a schema, so only a corrupt
+      * or hand-edited log ends a lineage without one. */
+    def schema(root: String, target: Long): StructType = schemaJson match {
+      case Some(j) => DataType.fromJson(j).asInstanceOf[StructType]
+      case None => throw new IllegalStateException(
+        s"snapshot $target at $root has no schema in its log lineage (corrupt or hand-edited log)")
+    }
+  }
+
   private def replayState(root: String, ids: Seq[Long], target: Long): Snapshot = {
     val lin = lineageOf(root, target)
     val ckpt = seedCheckpointIds(root).filter(_ <= lin.ckptCeiling).sorted.lastOption
     var files = Map.empty[String, FileEntry]
-    var props = Map.empty[String, String]
-    var schema: Option[String] = None
+    var hdr = Header(Map.empty, None)
     var op = ""
     var ts = 0L
     ckpt.foreach { k =>
       val c = checkpointCommit(root, k)
       files = versionedAdds(c).map(f => f.path -> f).toMap
-      props = c.properties; schema = c.schemaJson; op = c.operation; ts = c.timestampMs
+      hdr = Header(c.properties, c.schemaJson); op = c.operation; ts = c.timestampMs
     }
     val from = ckpt.map(_ + 1).getOrElse(ids.min)
     ids.filter(id => id >= from && id <= target).foreach { id =>
-      val c = parseCommit(Files.readString(commitPath(root, id)))
+      val c = readCommit(root, id)
       // an OFF-MAIN (staged WAP or branch) commit is in the log but
       // not in the main lineage: a staged commit's effects apply only
       // when it is itself the replay target (the audit read); a
@@ -967,16 +992,11 @@ object GraftTable {
       if (lin.includes(c)) {
         files = files -- c.removes
         files = files ++ versionedAdds(c).map(f => f.path -> f)
-        // a REPLACE commit carries the table's COMPLETE new config —
-        // properties reset wholesale (the old partition spec, dropped-col
-        // tombstones etc. must not merge through); other ops layer
-        props = if (c.operation == "replace") c.properties
-                else props ++ c.properties
-        schema = c.schemaJson.orElse(schema)
-        op = c.operation; ts = c.timestampMs
+        hdr = hdr.fold(c); op = c.operation; ts = c.timestampMs
       }
     }
-    Snapshot(target, ts, op, files.values.toSeq.sortBy(_.path), props, schema)
+    Snapshot(target, ts, op, files.values.toSeq.sortBy(_.path), hdr.props,
+      hdr.schema(root, target))
   }
 
   def latestSnapshotId(root: String): Long = listCommitIds(root).max
@@ -1535,7 +1555,7 @@ object GraftTable {
         if (slide) { slot += 1 }
         else if (!offMain && !occStaged && occBranch.isEmpty &&
             retries < retryBudget &&
-            scala.util.Try(parseCommit(Files.readString(commitPath(root, slot))))
+            scala.util.Try(readCommit(root, slot))
               .toOption.exists(retryCompatible(c0, _, id))) {
           retries += 1
           val parent = Some(slot)
@@ -1716,10 +1736,8 @@ object GraftTable {
   private def evolveSpecTo(root: String,
       next: (Seq[PTransform], StructType) => Seq[PTransform]): Long = {
     val snap = state(root)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
     val cur = tableSpec(snap.properties)
-    val spec = next(cur, schema)
+    val spec = next(cur, snap.schema)
     require(spec.map(_.label.toLowerCase).distinct.size == spec.size,
       s"duplicate partition transforms in '${renderSpec(spec)}'")
     val hist = specHistory(snap.properties).map(renderSpec) :+ renderSpec(spec)
@@ -1784,8 +1802,7 @@ object GraftTable {
     * semantics, no rewrite). */
   def addColumn(root: String, field: StructField): Long = {
     val snap = state(root)
-    val cur = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val cur = snap.schema
     // case-insensitive like the rename/drop guards: Spark resolves
     // column names case-insensitively by default, so ADD COLUMN 'TEXT'
     // alongside a live 'text' would pass a case-sensitive check here
@@ -1931,8 +1948,7 @@ object GraftTable {
     * that predate the column must read the same value forever. */
   def setColumnDefault(root: String, name: String, default: Option[String]): Long = {
     val snap = state(root)
-    val cur = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val cur = snap.schema
     val idx = cur.fields.indexWhere(_.name.equalsIgnoreCase(name))
     require(idx >= 0, s"no such column: $name")
     val f = cur.fields(idx)
@@ -1991,8 +2007,7 @@ object GraftTable {
     * columns; time travel before this commit sees the old schema. */
   def renameColumn(root: String, from: String, to: String): Long = {
     val snap = state(root)
-    val cur = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val cur = snap.schema
     val idx = cur.fields.indexWhere(_.name.equalsIgnoreCase(from))
     require(idx >= 0, s"no such column: $from")
     require(!cur.fields.exists(_.name.equalsIgnoreCase(to)), s"column exists: $to")
@@ -2024,8 +2039,7 @@ object GraftTable {
     * future ADD COLUMN cannot silently resurrect old values. */
   def dropColumn(root: String, name: String): Long = {
     val snap = state(root)
-    val cur = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val cur = snap.schema
     val idx = cur.fields.indexWhere(_.name.equalsIgnoreCase(name))
     require(idx >= 0, s"no such column: $name")
     require(cur.fields.length > 1, "cannot drop the last column")
@@ -2052,8 +2066,7 @@ object GraftTable {
     * old files could hold values the narrow type cannot represent. */
   def widenColumn(root: String, name: String, to: DataType): Long = {
     val snap = state(root)
-    val cur = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val cur = snap.schema
     val idx = cur.fields.indexWhere(_.name.equalsIgnoreCase(name))
     require(idx >= 0, s"no such column: $name")
     val f = cur.fields(idx)
@@ -2141,8 +2154,7 @@ object GraftTable {
       snap: Snapshot, commitProps: Map[String, String]): Long = {
     val conformed = conformAppendSchema(root, df, snap)
     val id = conformed.snapshotId + 1
-    val filled = fillWriteDefaults(df, DataType.fromJson(conformed.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType])
+    val filled = fillWriteDefaults(df, conformed.schema)
     val adds = writeDataFiles(spark, root, distribute(filled, conformed.properties), id,
       conformed.properties)
     val landed = commitOrCleanup(root, id, Commit(id, Some(id - 1),
@@ -2178,8 +2190,7 @@ object GraftTable {
 
   private def conformAppendSchema(root: String, df: DataFrame,
       snap: Snapshot, allowEvolution: Boolean = true): Snapshot = {
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val schema = snap.schema
     val merge = allowEvolution &&
       snap.properties.get("graft.merge-schema").exists(_.trim.equalsIgnoreCase("true"))
     var evolved = false
@@ -2333,9 +2344,7 @@ object GraftTable {
     // schema contract: footer-declared columns must conform (no
     // evolution here — adoption must never mutate the table's schema)
     conformAppendSchema(root, spark.read.parquet(fresh: _*), snap, allowEvolution = false)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
-    val statNames = schema.fields.filter(f => statsTypes.contains(f.dataType))
+    val statNames = snap.schema.fields.filter(f => statsTypes.contains(f.dataType))
       .map(_.name).toSet
     val id = snap.snapshotId + 1
     Files.createDirectories(dataDir(root))
@@ -2404,17 +2413,20 @@ object GraftTable {
   def snapshotTable(spark: SparkSession, sourceRoot: String,
       destRoot: String): Long = {
     val snap = state(sourceRoot)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(sourceRoot, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
     val props = snap.properties.filterNot { case (k, _) =>
       k.startsWith("graft.ref.") || k.startsWith("graft.txn.") ||
+        // WAP/branch bookkeeping names the source's snapshots, and a
+        // carried `graft.wap.staged` (layered in by a committed
+        // transaction) would mark the clone's commit 0 staged — off
+        // the main lineage, so its schema and properties would vanish
+        k.startsWith("graft.wap.") || k.startsWith("graft.branch.") ||
         k.startsWith(addFilesPropPrefix) || k == nextRowIdProp ||
         // the clone's own lineage holds no REPLACE: its generation
         // counter restarts (a carried counter with no marker file
         // would disagree with the clone's state forever)
         k == generationProp
     } + ("graft.snapshot.source" -> sourceRoot)
-    create(spark, destRoot, schema, props)
+    create(spark, destRoot, snap.schema, props)
     val adds = snap.files.map { f =>
       val src = Paths.get(sourceRoot, f.path)
       val dst = Paths.get(destRoot, f.path)
@@ -2516,8 +2528,7 @@ object GraftTable {
       "dynamic partition overwrite needs a declared partition spec " +
         s"($specProp); use overwriteWhere/truncate on unpartitioned tables")
     val id = snap.snapshotId + 1
-    val filled = fillWriteDefaults(df, DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType])
+    val filled = fillWriteDefaults(df, snap.schema)
     val adds = writeDataFiles(spark, root, distribute(filled, snap.properties), id, snap.properties)
     val newTuples = adds.flatMap(_.partition).toSet
     val removes = snap.files.filter(f =>
@@ -2544,7 +2555,6 @@ object GraftTable {
     val staged = state(stagedRoot)
     require(staged.files.forall(_.isData),
       s"staged replace generation may not carry delete files: $stagedRoot")
-    require(staged.schemaJson.nonEmpty, s"staged table has no schema: $stagedRoot")
     val id = snap.snapshotId + 1
     // the generation marker bumps BEFORE any new-generation file
     // becomes visible under data/: a live readStreamAppendOnly fails
@@ -2585,7 +2595,7 @@ object GraftTable {
     try commitOrCleanup(root, id, Commit(id, Some(snap.snapshotId),
       System.currentTimeMillis(), "replace", adds, snap.files.map(_.path),
       staged.properties ++ refs ++ opCfg + (generationProp -> newGen.toString),
-      staged.schemaJson))
+      Some(staged.schema.json)))
     catch { case e: Throwable =>
       // the marker bumped above but the generation never committed:
       // left alone it would disagree with generationProp FOREVER and
@@ -2749,8 +2759,6 @@ object GraftTable {
     val posDeletes = snap.files.filter(f =>
       f.content.contains(1) || f.content.contains(3))
     if (posDeletes.isEmpty) return snap.snapshotId
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
     val dataFiles = snap.files.filter(_.isData)
     // the delete files are read DIRECTLY below (not through readPaths),
     // so a lazy follower must hydrate them here or the read 404s
@@ -2777,7 +2785,7 @@ object GraftTable {
     // apply ALL deletes while rewriting (equality deletes included —
     // the rewritten file must not resurrect any deleted row), but only
     // the position-semantics delete files retire in this commit
-    val rewritten = readFiles(spark, root, schema, affected, snap.files.filter(_.isDelete))
+    val rewritten = readFiles(spark, root, snap.schema, affected, snap.files.filter(_.isDelete))
     val adds = writeDataFiles(spark, root, rewritten, id, snap.properties)
     commitOrCleanup(root, id, Commit(id, Some(id - 1), System.currentTimeMillis(),
       "rewrite_position_deletes", adds,
@@ -2937,7 +2945,7 @@ object GraftTable {
   def deleteEqualityMoR(spark: SparkSession, root: String,
       keys: DataFrame): Long = withDmlRetry(root, "delete") {
     val snap = state(root)
-    val schema = DataType.fromJson(snap.schemaJson.get).asInstanceOf[StructType]
+    val schema = snap.schema
     val cols = keys.columns.toSeq
     require(cols.nonEmpty && cols.forall(schema.fieldNames.contains),
       s"equality-delete columns must be table columns; got $cols")
@@ -3008,7 +3016,7 @@ object GraftTable {
       keyCols: Seq[String],
       txn: Option[(String, Long)] = None): Long = withDmlRetry(root, "merge") {
     val snap = state(root)
-    val schema = DataType.fromJson(snap.schemaJson.get).asInstanceOf[StructType]
+    val schema = snap.schema
     require(keyCols.nonEmpty && keyCols.forall(schema.fieldNames.contains),
       s"upsert key columns must be table columns; got $keyCols")
     txn.foreach { case (appId, version) =>
@@ -3064,8 +3072,7 @@ object GraftTable {
     val snap = state(root)
     val eqDeletes = snap.files.filter(_.content.contains(2))
     if (eqDeletes.isEmpty) return snap.snapshotId
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val schema = snap.schema
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     val dataFiles = snap.files.filter(_.isData)
     // key bounds per delete file, computed ONCE (not per data file!) —
@@ -3442,19 +3449,13 @@ object GraftTable {
 
   /** The table's current schema from the snapshot log — metadata only,
     * no scan construction. */
-  def tableSchema(root: String): StructType = {
-    val snap = state(root)
-    DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
-  }
+  def tableSchema(root: String): StructType = state(root).schema
 
   /** Snapshot read; `asOf` = time travel (reference:
     * SPARK_ICEBERG_GUIDE.md §8.8). */
   def read(spark: SparkSession, root: String, asOf: Option[Long] = None): DataFrame = {
     val snap = state(root, asOf)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
-    readFiles(spark, root, schema, snap.files.filter(_.isData), snap.files.filter(_.isDelete))
+    readFiles(spark, root, snap.schema, snap.files.filter(_.isData), snap.files.filter(_.isDelete))
   }
 
   // ── row lineage (`_row_id`, the Iceberg v3 design) ──────────────────
@@ -3532,8 +3533,7 @@ object GraftTable {
   private[lake] def readWithRowIdsPruned(spark: SparkSession, root: String,
       asOf: Option[Long], preds: Seq[Pred]): DataFrame = {
     val snap = state(root, asOf)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val schema = snap.schema
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     val data = prunedData(types, specHistory(snap.properties), preds,
       snap.files.filter(_.isData), statAliases(schema))
@@ -3966,8 +3966,7 @@ object GraftTable {
     * per generated case. */
   private[graft] def liveDataFiles(root: String, preds: Seq[Pred]): Seq[FileEntry] = {
     val snap = state(root)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val schema = snap.schema
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     prunedData(types, specHistory(snap.properties), preds,
       snap.files.filter(_.isData), statAliases(schema))
@@ -3988,8 +3987,7 @@ object GraftTable {
   def scan(spark: SparkSession, root: String, preds: Seq[Pred],
       asOf: Option[Long] = None): (DataFrame, Int, Int) = {
     val snap = state(root, asOf)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val schema = snap.schema
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     val dataFiles = snap.files.filter(_.isData)
     val live = prunedData(types, specHistory(snap.properties), preds, dataFiles,
@@ -4193,15 +4191,13 @@ object GraftTable {
   private[lake] def readFirstFiles(spark: SparkSession, root: String, n: Long,
       asOf: Option[Long] = None): DataFrame = {
     val snap = state(root, asOf)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
     var cum = 0L
     val subset = snap.files.filter(_.isData).takeWhile { f =>
       val need = cum < n
       cum += f.records
       need
     }
-    readFiles(spark, root, schema, subset, Seq.empty)
+    readFiles(spark, root, snap.schema, subset, Seq.empty)
   }
 
   /** (bytes, rows) of the data files surviving partition+stats pruning
@@ -4210,8 +4206,7 @@ object GraftTable {
     * for join sizing). */
   private[lake] def statsForScan(spark: SparkSession, root: String, snap: Snapshot,
       preds: Seq[Pred]): (Long, Long) = {
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val schema = snap.schema
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     val live = prunedData(types, specHistory(snap.properties), preds,
       snap.files.filter(_.isData), statAliases(schema))
@@ -4274,17 +4269,14 @@ object GraftTable {
     *    (a rollback commit that re-adds a path removed by an earlier
     *    tail commit keeps that file live; a flat union of removes
     *    would silently drop its rows)
-    *  - properties: reset wholesale across a REPLACE (the old
-    *    generation's spec/tombstones must not merge through), layered
-    *    otherwise — replayState's rule
-    *  - schema: the last one declared
+    *  - properties and schema: replayState's Header fold
     * None when no parquet+meta checkpoint covers `target`, or when
     * that checkpoint's file count is below the distributed-planning
     * threshold — decided from the meta alone, before any tail commit
     * is read (planning then replays the log in memory instead). */
   private case class CkptTail(ck: Long, meta: Commit, tail: Seq[Commit],
       delta: scala.collection.mutable.LinkedHashMap[String, Option[FileEntry]],
-      props: Map[String, String], schemaJson: Option[String]) {
+      props: Map[String, String], schema: StructType) {
     def timestampMs: Long = tail.lastOption.map(_.timestampMs).getOrElse(meta.timestampMs)
     def touched: Seq[String] = delta.keySet.toSeq
     def tailAdds: Seq[FileEntry] = delta.values.flatten.toSeq
@@ -4300,21 +4292,16 @@ object GraftTable {
         // off-main (staged WAP / branch) commits fold past the tail
         // exactly as replay does — the shared Lineage rule decides
         val tail = listCommitIds(root).filter(id => id > k && id <= target)
-          .map(id => parseCommit(Files.readString(commitPath(root, id))))
+          .map(readCommit(root, _))
           .filter(lin.includes)
         val delta = scala.collection.mutable.LinkedHashMap.empty[String, Option[FileEntry]]
         tail.foreach { c =>
           c.removes.foreach(p => delta(p) = None)
           versionedAdds(c).foreach(e => delta(e.path) = Some(e))
         }
-        var props = meta.properties - "graft.ckpt.file-count"
-        var schemaJ = meta.schemaJson
-        tail.foreach { c =>
-          props = if (c.operation == "replace") c.properties
-                  else props ++ c.properties
-          schemaJ = c.schemaJson.orElse(schemaJ)
-        }
-        CkptTail(k, meta, tail, delta, props, schemaJ)
+        val hdr = tail.foldLeft(
+          Header(meta.properties - "graft.ckpt.file-count", meta.schemaJson))(_ fold _)
+        CkptTail(k, meta, tail, delta, hdr.props, hdr.schema(root, target))
       }
   }
 
@@ -4373,7 +4360,7 @@ object GraftTable {
     val ctOpt = ckptTail(root, target)
     if (ctOpt.isEmpty) return None
     val ct = ctOpt.get
-    val schema = DataType.fromJson(ct.schemaJson.get).asInstanceOf[StructType]
+    val schema = ct.schema
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     val specs = specHistory(ct.props)
     val props = ct.props
@@ -4575,8 +4562,7 @@ object GraftTable {
       root: String): (StructType, Map[String, String]) =
     planner.map(p => (p.schema, p.properties)).getOrElse {
       val s = state(root)
-      (DataType.fromJson(s.schemaJson.getOrElse(
-        state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType], s.properties)
+      (s.schema, s.properties)
     }
 
   /** DELETE whose WHERE needs the full SQL analyzer — IN/EXISTS/scalar
@@ -4787,14 +4773,12 @@ object GraftTable {
     val base = branches(root).getOrElse(name,
       throw new IllegalArgumentException(s"no such branch: '$name'"))
     val head = branchHeadId(root, name)
-    val snap = state(root, Some(head))
-    val endSchema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val endSchema = state(root, Some(head)).schema
     val commits = listCommitIds(root)
       .filter(id => id > base && id <= head)
       .filter(id => branchInfoOfId(root, id).contains((name, base)))
       .sorted
-      .map(id => parseCommit(Files.readString(commitPath(root, id))))
+      .map(readCommit(root, _))
     val parts = commits.flatMap { c =>
       changesOf(spark, root, c, endSchema).map(
         _.withColumn("_commit_snapshot_id", lit(c.snapshotId))
@@ -4816,7 +4800,7 @@ object GraftTable {
       toInclusive: Long): Seq[(Long, Long)] =
     listCommitIds(root)
       .filter(id => id > fromExclusive && id <= toInclusive).sorted
-      .map(id => parseCommit(Files.readString(commitPath(root, id))))
+      .map(readCommit(root, _))
       .filterNot(isOffMain(root, _))
       .map(c => c.snapshotId -> (
         if (maintenanceOps(c.operation)) 0L
@@ -4846,11 +4830,9 @@ object GraftTable {
     require(inRange == toInclusive - fromExclusive,
       s"change range ($fromExclusive, $toInclusive] has expired commits " +
         s"(log starts at ${ids.min}); narrow the range or use the checkpointed state")
-    val snap = state(root, Some(toInclusive))
-    val endSchema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val endSchema = state(root, Some(toInclusive)).schema
     val commits = ids.filter(id => id > fromExclusive && id <= toInclusive).sorted
-      .map(id => parseCommit(Files.readString(commitPath(root, id))))
+      .map(readCommit(root, _))
     // base schema at the range start (clamped to the oldest retained
     // commit — a from of 0 over an expired prefix has no state there)
     val baseId = math.max(fromExclusive, ids.min)
@@ -4871,10 +4853,8 @@ object GraftTable {
   private def mergeRangePrevNames(root: String, fromExclusive: Long,
       toInclusive: Long, baseId: Long, endSchema: StructType,
       commits: Seq[Commit]): StructType = {
-    val histJson = (state(root, Some(baseId)).schemaJson.toSeq ++
-      commits.flatMap(_.schemaJson)).distinct
-    if (histJson.isEmpty) return endSchema
-    val histSchemas = histJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
+    val histSchemas = (state(root, Some(baseId)).schema +: commits.flatMap(_.schemaJson)
+      .map(j => DataType.fromJson(j).asInstanceOf[StructType])).distinct
     val hists: Seq[(StructField, Seq[String], Boolean)] = endSchema.fields.toSeq.map { f =>
       val names = scala.collection.mutable.LinkedHashSet[String](f.name)
       prevNames(f).foreach(names += _)
@@ -5090,8 +5070,7 @@ object GraftTable {
     // window: the silent corruption the guard exists to catch.)
     val snap = state(root)
     val pinnedGen = committedGeneration(snap.properties)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val schema = snap.schema
     val guarded = !snap.properties.get("graft.stream.generation-guard").contains("false")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_generation_ok", es => GenerationGuard(es(0), es(1)), "built-in")
@@ -5152,8 +5131,7 @@ object GraftTable {
   def readWhere(spark: SparkSession, root: String, condition: Column,
       asOf: Option[Long] = None): DataFrame = {
     val snap = state(root, asOf)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val schema = snap.schema
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     val preds = extractPreds(conditionExpr(spark, schema, condition), types)
     val live = prunedData(types, specHistory(snap.properties), preds,
@@ -5167,7 +5145,7 @@ object GraftTable {
   def snapshotsTable(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     listCommitIds(root).map { id =>
-      val c = parseCommit(Files.readString(commitPath(root, id)))
+      val c = readCommit(root, id)
       // the Iceberg snapshot-summary record counts, straight off the
       // commit's own adds (metadata-plane; no replay, no file reads)
       (c.snapshotId, c.timestampMs, c.operation, c.adds.size.toLong,
@@ -5336,8 +5314,8 @@ object GraftTable {
   private def refRetention(root: String, props: Map[String, String],
       kind: String, name: String, snapshotId: Long): (Long, Option[Long]) = {
     val created = refLongProp(props, refCreatedKey(kind, name)).getOrElse {
-      val p = commitPath(root, snapshotId)
-      if (Files.exists(p)) parseCommit(Files.readString(p)).timestampMs else 0L
+      if (Files.exists(commitPath(root, snapshotId))) readCommit(root, snapshotId).timestampMs
+      else 0L
     }
     (created, refLongProp(props, refMaxAgeKey(kind, name)))
   }
@@ -5497,8 +5475,7 @@ object GraftTable {
     val snap = conformAppendSchema(root, df, state(root, Some(head)),
       allowEvolution = false)
     val id = math.max(snap.snapshotId, listCommitIds(root).max) + 1
-    val filled = fillWriteDefaults(df, DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType])
+    val filled = fillWriteDefaults(df, snap.schema)
     val adds = writeDataFiles(spark, root, distribute(filled, snap.properties), id,
       snap.properties)
     commitOrCleanup(root, id, Commit(id, Some(snap.snapshotId),
@@ -5517,8 +5494,7 @@ object GraftTable {
     val head = branchHeadId(root, name)
     val base = branches(root)(name)
     val snap = state(root, Some(head))
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val schema = snap.schema
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     val preds = extractPreds(conditionExpr(spark, schema, condition), types)
     val dataFiles = snap.files.filter(_.isData)
@@ -5550,8 +5526,7 @@ object GraftTable {
     val head = branchHeadId(root, name)
     val base = branches(root)(name)
     val snap = state(root, Some(head))
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val schema = snap.schema
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     require(keyCols.nonEmpty && keyCols.forall(types.contains),
       s"bad merge keys: $keyCols")
@@ -5594,7 +5569,7 @@ object GraftTable {
     val diverged = listCommitIds(root)
       .filter(id => id > base && id <= mainSnap.snapshotId)
       .filterNot(id => isOffMainId(root, id))
-      .map(id => parseCommit(Files.readString(commitPath(root, id))))
+      .map(readCommit(root, _))
       .filterNot(_.operation == "set_properties")
     require(diverged.isEmpty,
       s"cannot fast-forward '$name': main advanced past the branch base $base " +
@@ -5722,12 +5697,10 @@ object GraftTable {
       head: Long): (Seq[FileEntry], Seq[String]) = {
     val baseSnap = state(root, Some(base))
     val branchSnap = state(root, Some(head))
-    def schemaOf(s: Snapshot): String =
-      s.schemaJson.getOrElse(state(root, Some(0L)).schemaJson.get)
-    require(schemaOf(mainSnap) == schemaOf(baseSnap),
+    require(mainSnap.schema == baseSnap.schema,
       s"cannot $verb '$name': main changed schema since the branch base $base — " +
         "re-branch from the current head and re-apply")
-    require(schemaOf(branchSnap) == schemaOf(baseSnap),
+    require(branchSnap.schema == baseSnap.schema,
       s"cannot $verb '$name': the branch changed schema; schema evolution " +
         "publishes through fast_forward (clean ancestor) only")
     require(mainSnap.properties.get(specProp) == baseSnap.properties.get(specProp) &&
@@ -5751,10 +5724,9 @@ object GraftTable {
       s"cannot $verb '$name': ${eqSides.mkString(" and ")} added equality-delete " +
         "file(s) since the base, whose sequence-rule scope cannot survive the " +
         "lineage interleave — fold them (rewrite_equality_deletes) and retry")
-    val schema = DataType.fromJson(schemaOf(mainSnap)).asInstanceOf[StructType]
     def overlap(deletes: Seq[FileEntry], removedPaths: Set[String]): Seq[String] =
       if (deletes.isEmpty || removedPaths.isEmpty) Seq.empty
-      else deleteVictims(spark, root, schema, deletes,
+      else deleteVictims(spark, root, mainSnap.schema, deletes,
         baseSnap.files.filter(f => f.isData && removedPaths.contains(f.path)))
         .map(_.path)
     val branchOnGone = overlap(adds.filter(_.isDelete), mainRemoved)
@@ -5801,7 +5773,7 @@ object GraftTable {
     val moved = listCommitIds(root)
       .filter(id => id > base && id <= newBase)
       .filterNot(id => isOffMainId(root, id))
-      .exists(id => parseCommit(Files.readString(commitPath(root, id)))
+      .exists(id => readCommit(root, id)
         .operation != "set_properties")
     require(moved,
       s"branch '$name': main has not advanced past base $base — nothing to " +
@@ -5868,8 +5840,7 @@ object GraftTable {
     // stages under one wap id, published together by cherrypickWap),
     // while main data writes still block on the first pending stage
     val id = math.max(snap.snapshotId, listCommitIds(root).max) + 1
-    val filled = fillWriteDefaults(df, DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType])
+    val filled = fillWriteDefaults(df, snap.schema)
     val adds = writeDataFiles(spark, root, distribute(filled, snap.properties), id, snap.properties)
     commitOrCleanup(root, id, Commit(id, Some(snap.snapshotId),
       System.currentTimeMillis(), "wap_append", adds, Seq.empty,
@@ -5908,7 +5879,7 @@ object GraftTable {
   def cherrypickSnapshot(root: String, stagedId: Long): Long = {
     require(listCommitIds(root).contains(stagedId),
       s"no snapshot $stagedId in the log (expired or never existed)")
-    val c = parseCommit(Files.readString(commitPath(root, stagedId)))
+    val c = readCommit(root, stagedId)
     require(isStaged(c),
       s"cherrypick_snapshot publishes staged (WAP) snapshots; " +
         s"$stagedId is a committed '${c.operation}'")
@@ -5928,7 +5899,7 @@ object GraftTable {
     // rows under itself (they were not live when it ran). Refuse and
     // ask for a re-stage rather than silently delete the new rows.
     val eqAfter = listCommitIds(root).filter(_ > stagedId)
-      .map(id => parseCommit(Files.readString(commitPath(root, id))))
+      .map(readCommit(root, _))
       .filter(c => !effectiveStaged(root, c) && c.adds.exists(_.content.contains(2)))
     require(eqAfter.isEmpty,
       s"cannot cherrypick $stagedId: equality delete(s) landed after it " +
@@ -5975,7 +5946,7 @@ object GraftTable {
     require(wapId.trim.nonEmpty, "wap id must be non-empty")
     val snap = state(root)
     val all = listCommitIds(root).sorted
-      .map(id => parseCommit(Files.readString(commitPath(root, id))))
+      .map(readCommit(root, _))
     val group = all.filter(c => isStaged(c) &&
         c.properties.get(wapIdProp).contains(wapId))
       .filterNot(c =>
@@ -6020,7 +5991,7 @@ object GraftTable {
     require(isStagedId(root, stagedId),
       s"abandon_staged_snapshot retires staged (WAP) snapshots only; " +
         s"$stagedId is committed")
-    require(!parseCommit(Files.readString(commitPath(root, stagedId)))
+    require(!readCommit(root, stagedId)
         .properties.contains(txnDecisionProp),
       s"snapshot $stagedId belongs to a cross-table transaction — retire " +
         "its whole group via GraftTransaction.abort()")
@@ -6163,7 +6134,7 @@ object GraftTable {
     val ids = listCommitIds(root)
     val mh = mainHeadId(root, ids)
     val foreign = ids.filter(id => id > mh && isStagedId(root, id)).filterNot { id =>
-      parseCommit(Files.readString(commitPath(root, id)))
+      readCommit(root, id)
         .properties.get(txnDecisionProp).contains(decisionPath)
     }
     require(foreign.isEmpty,
@@ -6177,8 +6148,7 @@ object GraftTable {
     requireNoForeignPending(root, decisionPath)
     val snap = conformAppendSchema(root, df, state(root), allowEvolution = false)
     val id = math.max(snap.snapshotId, listCommitIds(root).max) + 1
-    val filled = fillWriteDefaults(df, DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType])
+    val filled = fillWriteDefaults(df, snap.schema)
     val adds = writeDataFiles(spark, root, distribute(filled, snap.properties), id,
       snap.properties)
     commitOrCleanup(root, id, Commit(id, Some(snap.snapshotId),
@@ -6269,7 +6239,7 @@ object GraftTable {
     // committed stages are on-main now (isStagedId is decision-aware),
     // so scan ABOVE the pre-decision head by raw parse
     val tail = ids.filter(_ > math.min(mh, ids.max - 64))   // bounded scan
-      .map(id => parseCommit(Files.readString(commitPath(root, id))))
+      .map(readCommit(root, _))
       .filter(isStaged)
     val decided = tail.groupBy(_.properties.get(txnDecisionProp)).collect {
       case (Some(path), cs) if decisionOf(path).isDefined => (path, cs)
@@ -6324,7 +6294,7 @@ object GraftTable {
     // adds seen so far in the window (always newer than any seed)
     val within = scala.collection.mutable.Map.empty[String, FileEntry]
     val acts = ids.flatMap { id =>
-      val c = parseCommit(Files.readString(commitPath(root, id)))
+      val c = readCommit(root, id)
       c.adds.foreach(f => within(f.path) = f)
       c.adds.map(f => (1, c.snapshotId, f.path, Option(f))) ++
         c.removes.sorted.map(p => (2, c.snapshotId, p, within.get(p)))
@@ -6370,7 +6340,7 @@ object GraftTable {
   def metadataLogEntriesTable(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     listCommitIds(root).map { id =>
-      val c = parseCommit(Files.readString(commitPath(root, id)))
+      val c = readCommit(root, id)
       (c.timestampMs, f"_graft_log/$id%010d.json", c.snapshotId)
     }.toDF("timestamp_ms", "file", "latest_snapshot_id")
   }
@@ -6391,7 +6361,7 @@ object GraftTable {
     def driverPath: DataFrame = {
       val all = scala.collection.mutable.LinkedHashMap.empty[String, FileEntry]
       (ckIds.map(k => checkpointCommit(root, k)) ++
-        ids.map(id => parseCommit(Files.readString(commitPath(root, id)))))
+        ids.map(readCommit(root, _)))
         .foreach(c => c.adds.foreach(f => all.getOrElseUpdate(f.path, f)))
       val livePaths = state(root).files.map(_.path).toSet
       all.values.toSeq.sortBy(_.path)
@@ -6409,7 +6379,7 @@ object GraftTable {
       return driverPath
     // post-checkpoint tail, last action per path wins (replayState's
     // discipline) — it decides liveness for every tail-touched path
-    val commits = ids.map(id => parseCommit(Files.readString(commitPath(root, id))))
+    val commits = ids.map(readCommit(root, _))
     val delta = scala.collection.mutable.LinkedHashMap.empty[String, Option[FileEntry]]
     commits.filter(_.snapshotId > ckIds.max).foreach { c =>
       c.removes.foreach(p => delta(p) = None)
@@ -6452,7 +6422,7 @@ object GraftTable {
     import spark.implicits._
     val ids = listCommitIds(root)
     ids.map { id =>
-      val c = parseCommit(Files.readString(commitPath(root, id)))
+      val c = readCommit(root, id)
       (c.snapshotId, c.parentId.getOrElse(-1L), c.operation, c.timestampMs)
     }.toDF("snapshot_id", "parent_id", "operation", "made_current_at_ms")
   }
@@ -6511,8 +6481,7 @@ object GraftTable {
       if (targetFileSizeBytes > 0) targetFileSizeBytes
       else snap.properties.get("write.target-file-size-bytes")
         .map(_.toLong).getOrElse(128L * 1024 * 1024)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val schema = snap.schema
     val deletes = snap.files.filter(_.isDelete)
     val smallAll = snap.files.filter(f => f.isData && f.sizeBytes < target)
     // rewrite_data_files(where => ...): compaction scoped to the
@@ -6612,8 +6581,7 @@ object GraftTable {
   def rewriteDataFilesSorted(spark: SparkSession, root: String,
       sortCols: Seq[String], targetFileSizeBytes: Long = -1L): Long = {
     val snap = state(root)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val schema = snap.schema
     require(sortCols.nonEmpty && sortCols.forall(schema.fieldNames.contains),
       s"bad sort columns: $sortCols")
     val dataFiles = snap.files.filter(_.isData)
@@ -6658,8 +6626,7 @@ object GraftTable {
       zCols: Seq[String], targetFileSizeBytes: Long = -1L,
       buckets: Int = 64): Long = {
     val snap = state(root)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+    val schema = snap.schema
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     require(zCols.size >= 2, s"z-order needs >= 2 columns, got $zCols")
     require(zCols.forall(schema.fieldNames.contains), s"bad z columns: $zCols")
@@ -6803,10 +6770,8 @@ object GraftTable {
   }
 
   private def writeCheckpointArtifacts(root: String, snap: Snapshot): Unit = {
-    val schemaJ = snap.schemaJson.orElse(
-      state(root, Some(listCommitIds(root).min)).schemaJson)
     val c = Commit(snap.snapshotId, None, snap.timestampMs, "checkpoint",
-      snap.files, Seq.empty, snap.properties, schemaJ)
+      snap.files, Seq.empty, snap.properties, Some(snap.schema.json))
     writeCheckpoint(logDir(root).resolve(s"checkpoint-${snap.snapshotId}.json"), toJson(c))
     writeCheckpoint(logDir(root).resolve(s"ckptmeta-${snap.snapshotId}.json"),
       toJson(c.copy(adds = Seq.empty, properties = snap.properties +
@@ -6848,7 +6813,7 @@ object GraftTable {
     val ctOpt = ckptTail(root, target)
     if (ctOpt.isEmpty) return false
     val ct = ctOpt.get
-    val (props, schemaJ, ts) = (ct.props, ct.schemaJson, ct.timestampMs)
+    val (props, schemaJ, ts) = (ct.props, Some(ct.schema.json), ct.timestampMs)
     // the new checkpoint's meta is stamped CURRENT, so ckptFilesDf
     // (inside ckptSurvivorsDf) normalizes a pre-stamp previous list
     // before its stats are carried forward
@@ -6960,7 +6925,7 @@ object GraftTable {
     // (the txn dir's own decision file, shared by other tables, is
     // untouched)
     val liveTxn = listCommitIds(root)
-      .map(id => parseCommit(Files.readString(commitPath(root, id))))
+      .map(readCommit(root, _))
       .flatMap(_.properties.get(txnDecisionProp))
       .map(txnIdOfDecision).toSet
     listDir(logDir(root)).map(_.getFileName.toString)
@@ -6989,7 +6954,7 @@ object GraftTable {
   def expireSnapshotsOlderThan(root: String, olderThanMs: Long): Unit = {
     val ids = listCommitIds(root)
     val survivors = ids.filter { id =>
-      parseCommit(Files.readString(commitPath(root, id))).timestampMs >= olderThanMs
+      readCommit(root, id).timestampMs >= olderThanMs
     }
     val retain = if (survivors.isEmpty) 1 else (ids.max - survivors.min + 1).toInt
     expireSnapshots(root, retain)
@@ -7000,7 +6965,7 @@ object GraftTable {
     * resolves the MAIN lineage (the audit read is by explicit id). */
   def snapshotIdsAtOrBefore(root: String, tsMs: Long): Seq[Long] =
     listCommitIds(root).filter { id =>
-      val c = parseCommit(Files.readString(commitPath(root, id)))
+      val c = readCommit(root, id)
       c.timestampMs <= tsMs && !isOffMain(root, c)
     }
 
@@ -7026,9 +6991,7 @@ object GraftTable {
     val (schema, props, stats) = ckptTail(root, target) match {
       case None =>
         val snap = state(root)
-        val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-          state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
-        (schema, snap.properties, Seq(
+        (snap.schema, snap.properties, Seq(
           ("files", snap.files.count(_.isData).toString),
           // content=1 diagnostics (reference: SPARK_ICEBERG_GUIDE.md
           // §8.10 counts data vs delete files)
@@ -7037,7 +7000,6 @@ object GraftTable {
           ("total_bytes", snap.files.filter(_.isData).map(_.sizeBytes).sum.toString),
           ("total_records", snap.files.filter(_.isData).map(_.records).sum.toString)))
       case Some(ct) =>
-        val schema = DataType.fromJson(ct.schemaJson.get).asInstanceOf[StructType]
         // ONE job: per-content rollups over checkpoint survivors,
         // combined with the driver-held tail adds
         val agg = ckptSurvivorsDf(spark, root, ct).groupBy(col("content") === 0)
@@ -7047,7 +7009,7 @@ object GraftTable {
             (r.getLong(1), r.getAs[Long]("recs"), r.getAs[Long]("bytes"))).toMap
         val (ckData, ckDel) = (agg.getOrElse(true, (0L, 0L, 0L)), agg.getOrElse(false, (0L, 0L, 0L)))
         val (tData, tDel) = (ct.tailAdds.filter(_.isData), ct.tailAdds.filter(_.isDelete))
-        (schema, ct.props, Seq(
+        (ct.schema, ct.props, Seq(
           ("files", (ckData._1 + tData.size).toString),
           ("delete_files", (ckDel._1 + tDel.size).toString),
           ("delete_records", (ckDel._2 + tDel.map(_.records).sum).toString),
@@ -7098,7 +7060,7 @@ object GraftTable {
       val spark = sparkOpt.get
       import spark.implicits._
       val commitAdds = listCommitIds(root)
-        .flatMap(id => parseCommit(Files.readString(commitPath(root, id)))
+        .flatMap(id => readCommit(root, id)
           .adds.map(_.path))
       val referenced = ckParquets.map(p =>
           spark.read.parquet(p.toString).select(col("path")))
@@ -7109,7 +7071,7 @@ object GraftTable {
     } else {
       val referenced: Set[String] =
         (listCommitIds(root).map(id =>
-            parseCommit(Files.readString(commitPath(root, id)))) ++
+            readCommit(root, id)) ++
           ckIds.map(k => checkpointCommit(root, k)))
           .flatMap(_.adds.map(_.path)).toSet
       rels.filterNot(referenced.contains).sorted
@@ -7161,8 +7123,7 @@ object GraftTable {
     // and REPLACE-ing again)
     val crossed = listCommitIds(root)
       .filter(id => id > snapshotId && id <= current.snapshotId)
-      .filter(id => parseCommit(
-        Files.readString(commitPath(root, id))).operation == "replace")
+      .filter(id => readCommit(root, id).operation == "replace")
     require(crossed.isEmpty,
       s"rollback across REPLACE TABLE is unsupported: snapshot(s) " +
         s"${crossed.mkString(", ")} replaced the table's schema lineage; " +
@@ -7280,7 +7241,7 @@ object GraftTable {
     if (!ids.contains(target)) return None   // V1 plane raises the loud error
     ckptTail(root, target) match {
       case Some(ct) =>
-        val schema = DataType.fromJson(ct.schemaJson.get).asInstanceOf[StructType]
+        val schema = ct.schema
         if (renamesAmbiguous(schema)) return None
         val types = schema.fields.map(f => f.name -> f.dataType).toMap
         val specs = specHistory(ct.props)
@@ -7317,8 +7278,7 @@ object GraftTable {
           renameAlts(schema)))
       case None =>
         val snap = state(root, asOf)
-        val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-          state(root, Some(0L)).schemaJson.get)).asInstanceOf[StructType]
+        val schema = snap.schema
         if (renamesAmbiguous(schema)) return None
         val deletes = snap.files.filter(_.isDelete)
         if (!morNativeEligible(spark, schema, deletes)) return None

@@ -17,6 +17,17 @@ class GraftTableSpec extends SparkSpec {
   private def freshRoot(name: String): String =
     scratchRoot("graft-lake-test", name)
 
+  test("a log lineage with no schema fails loudly, naming the root and snapshot") {
+    val root = freshRoot("no-schema")
+    Files.createDirectories(Paths.get(root, "_graft_log"))
+    // a hand-edited commit 0: every well-formed create carries a schema
+    Files.writeString(Paths.get(root, "_graft_log", "0000000000.json"),
+      """{"snapshotId":0,"timestampMs":1,"operation":"create","adds":[],""" +
+        """"removes":[],"properties":{},"schemaJson":null,"statsVersion":2}""")
+    val e = intercept[IllegalStateException](GraftTable.tableSchema(root))
+    assert(e.getMessage.contains(root) && e.getMessage.contains("snapshot 0"), e.getMessage)
+  }
+
   test("create persists schema + table properties; double create fails") {
     val root = freshRoot("create")
     val n = Tables.nation(spark, sf)

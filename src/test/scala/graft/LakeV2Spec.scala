@@ -366,6 +366,12 @@ class LakeV2Spec extends SparkSpec {
     GraftTable.append(spark, src, df0.repartition(2))
     GraftTable.deleteWhereMoR(spark, src, col("id") < 5L)          // pos deletes
     GraftTable.deleteEqualityMoR(spark, src, Seq("v5").toDF("v"))  // eq deletes
+    // a committed transaction layers its stage markers into the main
+    // lineage's properties; the clone must not inherit them (a staged
+    // commit 0 would drop the clone's schema and properties)
+    val txn = GraftTable.beginTransaction(freshRoot("snap-txns"))
+    txn.append(spark, src, Seq((101L, "txn")).toDF("id", "v"))
+    txn.commit()
     val dst = freshRoot("snap-dst")
     GraftTable.snapshotTable(spark, src, dst)
     def ids(r: String): Set[Long] =
@@ -1320,6 +1326,68 @@ class LakeV2Spec extends SparkSpec {
     assert(feed.filter(col("_commit_snapshot_id") === 1L)
       .agg(sum(col("id"))).head().getLong(0) == 3L,
       "pre-widen int rows must up-convert exactly in the feed")
+  }
+
+  // Expiry drops commit 0 — the only commit whose schema a reader could
+  // once fall back to. Every schema consumer must serve the snapshot's
+  // own schema, on the in-memory replay plane (default threshold) and
+  // on the checkpoint-tail plane (threshold 1: ckptTail/planNativeScan).
+  Seq("replay" -> None, "checkpoint-tail" -> Some("1")).foreach { case (plane, threshold) =>
+    test(s"schemas survive the expiry of commit 0 ($plane planning)") {
+      import spark.implicits._
+      import org.apache.spark.sql.types._
+      val name = s"expire_schema_${plane.replace('-', '_')}"
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.lv2")
+      spark.sql(s"DROP TABLE IF EXISTS graft.lv2.$name")
+      val props = threshold.map(t =>
+        s" TBLPROPERTIES ('graft.planning.distributed-threshold' = '$t')").getOrElse("")
+      spark.sql(s"CREATE TABLE graft.lv2.$name (a INT)$props")            // 0
+      val root = s"${SparkSpec.sqlWarehouse}/lv2/$name"
+      GraftTable.append(spark, root, Seq(1).toDF("a"))                       // 1
+      GraftTable.addColumn(root, StructField("b", StringType))               // 2
+      GraftTable.append(spark, root, Seq((2, "x")).toDF("a", "b"))          // 3
+      GraftTable.widenColumn(root, "a", LongType)                           // 4
+      GraftTable.append(spark, root, Seq((3L, "y")).toDF("a", "b"))         // 5
+      // keep {3, 4, 5}: the checkpoint lands at 3, commits 0-2 drop, and
+      // the oldest retained snapshot still predates the widening
+      GraftTable.expireSnapshots(root, retainLast = 3)
+      assert(!Files.exists(Paths.get(root, "_graft_log", "0000000000.json")))
+      def cols(s: StructType): Seq[(String, DataType)] =
+        s.fields.toSeq.map(f => f.name -> f.dataType)
+      val widened = Seq("a" -> LongType, "b" -> StringType)
+      val narrow = Seq("a" -> IntegerType, "b" -> StringType)
+
+      assert(cols(GraftTable.tableSchema(root)) == widened)
+      assert(cols(GraftTable.read(spark, root).schema) == widened)
+      val described = spark.sql(s"DESCRIBE TABLE graft.lv2.$name").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(described.get("a").contains("bigint") && described.get("b").contains("string"))
+      val d = GraftTable.describeTable(spark, root).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(d("col: a") == "bigint" && d("col: b") == "string")
+      val cdc = new graft.lake.GraftCdcStreamProvider()
+        .sourceSchema(spark.sqlContext, None, "graft-cdc", Map("path" -> root))._2
+      assert(cols(cdc).take(2) == widened)
+      val plan = GraftTable.planScan(spark, root, Seq(Ge("a", "2")))
+      assert(plan.distributed == threshold.isDefined)
+      assert(cols(plan.df.schema) == widened && plan.df.count() == 2)
+
+      // a further append of a LONG value conforms to the widened schema
+      GraftTable.append(spark, root, Seq((3000000000L, "z")).toDF("a", "b"))
+      val sqlOut = spark.sql(s"SELECT a, b FROM graft.lv2.$name")
+      assert(cols(sqlOut.schema) == widened)
+      assert(sqlOut.as[(Long, String)].collect().sorted.toSeq ==
+        Seq((1L, null), (2L, "x"), (3L, "y"), (3000000000L, "z")))
+
+      // time travel to the oldest retained snapshot keeps its own schema
+      assert(cols(GraftTable.read(spark, root, Some(3L)).schema) == narrow)
+      val oldPlan = GraftTable.planScan(spark, root, Seq.empty, asOf = Some(3L))
+      assert(plan.distributed == oldPlan.distributed)
+      assert(cols(oldPlan.df.schema) == narrow && oldPlan.df.count() == 2)
+      val oldSql = spark.sql(s"SELECT a, b FROM graft.lv2.$name VERSION AS OF 3")
+      assert(cols(oldSql.schema) == narrow)
+      assert(oldSql.as[(Int, String)].collect().sorted.toSeq == Seq((1, null), (2, "x")))
+    }
   }
 
   test(".entries/.metadata_log_entries/.all_files track adds, removes, and expiry") {
