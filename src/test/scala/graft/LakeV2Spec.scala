@@ -1328,10 +1328,10 @@ class LakeV2Spec extends SparkSpec {
       "pre-widen int rows must up-convert exactly in the feed")
   }
 
-  // Expiry drops commit 0 — the only commit whose schema a reader could
-  // once fall back to. Every schema consumer must serve the snapshot's
-  // own schema, on the in-memory replay plane (default threshold) and
-  // on the checkpoint-tail plane (threshold 1: ckptTail/planNativeScan).
+  // Expiry drops commit 0, which declared the table's first schema.
+  // Every schema consumer must serve the snapshot's own schema, on the
+  // in-memory replay plane (default threshold) and on the
+  // checkpoint-tail plane (threshold 1: ckptTail/planNativeScan).
   Seq("replay" -> None, "checkpoint-tail" -> Some("1")).foreach { case (plane, threshold) =>
     test(s"schemas survive the expiry of commit 0 ($plane planning)") {
       import spark.implicits._
