@@ -357,9 +357,6 @@ private[graft] class GraftBatchScan(
       .map(f => (s"$root/${f.path}", f.sizeBytes))
     val dvDeletes = plan.deletes.filter(_.content.contains(3))
       .map(f => (s"$root/${f.path}", f.sizeBytes))
-    val posSchema = StructType(Seq(
-      StructField("file_path", StringType, nullable = false),
-      StructField("pos", LongType, nullable = false)))
     // one group per (snapshot, key columns): same sequence bound, same
     // keys — shard files of one keyed delete share one key set
     val eqGroupsRaw = plan.deletes.filter(_.content.contains(2))
@@ -442,7 +439,8 @@ private[graft] class GraftBatchScan(
       posDeletes = posDeletes,
       posFactory =
         if (posDeletes.isEmpty) null
-        else mkParquetFactory(posSchema, posSchema, Array.empty),
+        else mkParquetFactory(GraftTable.posDeleteSchema, GraftTable.posDeleteSchema,
+          Array.empty),
       eqGroups = eqGroups,
       dvDeletes = dvDeletes,
       dvFactory =

@@ -956,11 +956,19 @@ object GraftTable {
     *    config, so they reset wholesale (the old partition spec,
     *    dropped-col tombstones etc. must not merge through); any other
     *    commit layers its properties on top
+    *  - per-commit lineage markers (staged, WAP id, txn decision,
+    *    branch name/base) describe the commit itself, never the table:
+    *    they stay out of the header, so a committed transaction or a
+    *    publish cannot leave main reporting itself staged. Readers ask
+    *    the commit (isStaged, branchInfo); table-level memos such as
+    *    `graft.wap.published.<id>` still layer.
     *  - schema: the last one declared. */
   private case class Header(props: Map[String, String], schemaJson: Option[String]) {
-    def fold(c: Commit): Header =
-      Header(if (c.operation == "replace") c.properties else props ++ c.properties,
+    def fold(c: Commit): Header = {
+      val own = c.properties -- commitMarkerProps
+      Header(if (c.operation == "replace") own else props ++ own,
         c.schemaJson.orElse(schemaJson))
+    }
     /** Commit 0 and every checkpoint carry a schema, so only a corrupt
       * or hand-edited log ends a lineage without one. */
     def schema(root: String, target: Long): StructType = schemaJson match {
@@ -969,6 +977,9 @@ object GraftTable {
         s"snapshot $target at $root has no schema in its log lineage (corrupt or hand-edited log)")
     }
   }
+
+  private lazy val commitMarkerProps: Set[String] =
+    Set(wapStagedProp, wapIdProp, txnDecisionProp, branchNameProp, branchBaseProp)
 
   private def replayState(root: String, ids: Seq[Long], target: Long): Snapshot = {
     val lin = lineageOf(root, target)
@@ -980,7 +991,9 @@ object GraftTable {
     ckpt.foreach { k =>
       val c = checkpointCommit(root, k)
       files = versionedAdds(c).map(f => f.path -> f).toMap
-      hdr = Header(c.properties, c.schemaJson); op = c.operation; ts = c.timestampMs
+      // checkpoints written before the marker rule may carry markers
+      hdr = Header(c.properties -- commitMarkerProps, c.schemaJson)
+      op = c.operation; ts = c.timestampMs
     }
     val from = ckpt.map(_ + 1).getOrElse(ids.min)
     ids.filter(id => id >= from && id <= target).foreach { id =>
@@ -1287,8 +1300,13 @@ object GraftTable {
       case None => new LocalStaging(root, Paths.get(root, s".stage-${UUID.randomUUID()}"))
     }
 
+  /** `binned`: `df` is [[readBinsForRewrite]]'s, each task holding whole
+    * bins. The bin is the outermost partition directory, so each bin is
+    * one file per tuple, in source (file, position) order unless the
+    * table declares a sort order. */
   private def writeDataFiles(spark: SparkSession, root: String, df0: DataFrame,
-      snapshotId: Long, props: Map[String, String]): Seq[FileEntry] = {
+      snapshotId: Long, props: Map[String, String],
+      binned: Boolean = false): Seq[FileEntry] = {
     // every table-schema data write (append, CoW rewrite, merge,
     // compaction) funnels through here — CHECK constraints ride the
     // write's own row pass
@@ -1306,30 +1324,25 @@ object GraftTable {
       // columns is then already satisfied and Spark inserts no second
       // sort that would undo this one.
       val sortCols = liveSortCols(df, props)
+      val order =
+        if (binned && sortCols.isEmpty) Seq(col("_gf_ord"), col("_gf_pos")) else sortCols
+      // partitioned tables: derive one rendered string column per
+      // transform, let Spark's partitioned committer split files by
+      // tuple (the _gp_ columns live only in the directory names,
+      // which we harvest below — row data keeps the source columns)
+      val withParts = spec.zipWithIndex.foldLeft(df) { case (d, (t, i)) =>
+        d.withColumn(s"_gp_$i", transformCol(t, types(t.col)))
+      }
+      val partCols = (if (binned) Seq("_gf_bin") else Nil) ++ spec.indices.map(i => s"_gp_$i")
+      val sorted =
+        if (order.isEmpty) withParts
+        else withParts.sortWithinPartitions(partCols.map(col(_).asc) ++ order: _*)
+      val writer = (if (binned) sorted.drop("_gf_ord", "_gf_pos") else sorted)
+        .write.option("compression", codec).options(bloomOptions(props))
+        .options(staging.writerOptions)
       withMicrosTimestamps(spark) {
-        if (spec.isEmpty) {
-          val sorted =
-            if (sortCols.isEmpty) df else df.sortWithinPartitions(sortCols: _*)
-          sorted.write.option("compression", codec).options(bloomOptions(props))
-            .options(staging.writerOptions)
-            .parquet(staging.target)
-        } else {
-          // partitioned write: derive one rendered string column per
-          // transform, let Spark's partitioned committer split files by
-          // tuple (the _gp_ columns live only in the directory names,
-          // which we harvest below — row data keeps the source columns)
-          val withParts = spec.zipWithIndex.foldLeft(df) { case (d, (t, i)) =>
-            d.withColumn(s"_gp_$i", transformCol(t, types(t.col)))
-          }
-          val sorted =
-            if (sortCols.isEmpty) withParts
-            else withParts.sortWithinPartitions(
-              spec.indices.map(i => col(s"_gp_$i").asc) ++ sortCols: _*)
-          sorted.write.option("compression", codec).options(bloomOptions(props))
-            .options(staging.writerOptions)
-            .partitionBy(spec.indices.map(i => s"_gp_$i"): _*)
-            .parquet(staging.target)
-        }
+        (if (partCols.isEmpty) writer else writer.partitionBy(partCols: _*))
+          .parquet(staging.target)
       }
       // _gf_* (lineage) columns are physical plumbing, not query columns:
       // no manifest stats for them
@@ -1340,7 +1353,7 @@ object GraftTable {
         if (spec.isEmpty) None
         else Some {
           rel.split('/').dropRight(1).collect {
-            case seg if seg.contains("=") =>
+            case seg if seg.startsWith("_gp_") =>
               val Array(k, v) = seg.split("=", 2)
               val i = k.stripPrefix("_gp_").toInt
               spec(i).label -> unescapePath(v)
@@ -2415,10 +2428,7 @@ object GraftTable {
     val snap = state(sourceRoot)
     val props = snap.properties.filterNot { case (k, _) =>
       k.startsWith("graft.ref.") || k.startsWith("graft.txn.") ||
-        // WAP/branch bookkeeping names the source's snapshots, and a
-        // carried `graft.wap.staged` (layered in by a committed
-        // transaction) would mark the clone's commit 0 staged — off
-        // the main lineage, so its schema and properties would vanish
+        // WAP/branch memos name the source's snapshots
         k.startsWith("graft.wap.") || k.startsWith("graft.branch.") ||
         k.startsWith(addFilesPropPrefix) || k == nextRowIdProp ||
         // the clone's own lineage holds no REPLACE: its generation
@@ -2639,6 +2649,13 @@ object GraftTable {
       ckptPlanner(spark, root, None))
   }
 
+  /** The position-delete file schema the writer below emits. Every
+    * read of those files declares it (GraftDv.schema is the container
+    * twin), so none pays a one-task schema-inference job. */
+  private[lake] val posDeleteSchema: StructType = StructType(Seq(
+    StructField("file_path", StringType, nullable = false),
+    StructField("pos", LongType, nullable = false)))
+
   private def deleteWhereMoRImpl(spark: SparkSession, root: String,
       condition: Column, prunePreds: Seq[Pred],
       planner: Option[CkptPlanner],
@@ -2769,7 +2786,8 @@ object GraftTable {
     val affectedNames =
       posDeletes.filter(_.content.contains(1)) match {
         case Seq() => Set.empty[String]
-        case ps => spark.read.parquet(ps.map(f => s"$root/${f.path}"): _*)
+        case ps => spark.read.schema(posDeleteSchema)
+          .parquet(ps.map(f => s"$root/${f.path}"): _*)
           .select(col("file_path")).distinct()
           .collect().map(r => r.getString(0).split('/').last).toSet
       }
@@ -2816,7 +2834,7 @@ object GraftTable {
     hydrate(root, (pos ++ dvs).map(_.path))
     val baseName = (c: Column) => substring_index(c, "/", -1)
     val posPart = Option.when(pos.nonEmpty)(
-      spark.read.parquet(pos.map(f => s"$root/${f.path}"): _*)
+      spark.read.schema(posDeleteSchema).parquet(pos.map(f => s"$root/${f.path}"): _*)
         .select(baseName(col("file_path")).as("_gf_name"), col("pos").as("_gf_pos")))
     val dvPart = Option.when(dvs.nonEmpty)(
       GraftDv.positionsDf(spark, dvs.map(f => s"$root/${f.path}"), "_gf_name", "_gf_pos"))
@@ -3466,14 +3484,11 @@ object GraftTable {
     * inherited (firstRowId + position) for plainly-written files, the
     * materialized `_gf_row_id` physical column for rewrite outputs
     * (firstRowId == -1), NULL for pre-lineage files. The per-file
-    * dispatch is a broadcast join on the unique file basename — the
-    * same O(files) metadata the read already planned with. */
-  private def withLineageCol(spark: SparkSession, df: DataFrame,
-      files: Seq[FileEntry]): DataFrame = {
-    import spark.implicits._
-    val m = files.filter(_.isData)
-      .map(f => (f.path.split('/').last, f.firstRowId))
-      .toDF("_gf_lin_name", "_gf_first")
+    * dispatch is a broadcast join of `m` (basename `_gf_lin_name` →
+    * `_gf_first`, plus any columns to carry onto every row) on the
+    * unique file basename — the same O(files) metadata the read
+    * already planned with. */
+  private def withLineageCol(df: DataFrame, m: DataFrame): DataFrame =
     // substring_index, not a regexp: "([^/]+)$" backtracks across the
     // whole path per ROW, and this column is on every rewrite/lineage
     // read's hot path (measured 4.6 s → 1.9 s on q26's bin rewrite)
@@ -3484,7 +3499,6 @@ object GraftTable {
           .when(col("_gf_first").isNotNull, col("_gf_first") + col("_gf_pos"))
           .otherwise(lit(null).cast(LongType)))
       .drop("_gf_lin_name", "_gf_first")
-  }
 
   /** Read a file set with the `_gf_row_id` lineage column attached —
     * the rewrite paths' input reader (identity survives compaction
@@ -3501,7 +3515,10 @@ object GraftTable {
     val core = liveRowsWithIds(spark, root, schema, data.map(_.path),
       deletes.map(f => (f.path, f.content.getOrElse(1), f.eqCols.getOrElse(Seq.empty))),
       extraPhys = Seq(rowIdPhys))
-    withLineageCol(spark, core, data).drop("_gf_path", "_gf_pos", "_gf_snap")
+    import spark.implicits._
+    val m = data.map(f => (f.path.split('/').last, f.firstRowId))
+      .toDF("_gf_lin_name", "_gf_first")
+    withLineageCol(core, m).drop("_gf_path", "_gf_pos", "_gf_snap")
   }
 
   private[lake] def lineageRewriteEnabled(spark: SparkSession): Boolean =
@@ -3514,6 +3531,28 @@ object GraftTable {
       schema: StructType, files: Seq[FileEntry], deletes: Seq[FileEntry]): DataFrame =
     if (lineageRewriteEnabled(spark)) readFilesWithLineage(spark, root, schema, files, deletes)
     else readFiles(spark, root, schema, files, deletes)
+
+  /** Bin-pack compaction's input: every bin's files in ONE MoR read
+    * (deletes apply once for all bins), each row tagged with its bin
+    * (`_gf_bin`, zero-padded so bin directories list in bin order) and
+    * its source order (`_gf_ord`, the file's place in bin-pack order,
+    * then `_gf_pos`). The tags ride the lineage join's broadcast map,
+    * so binning costs no extra join. With the lineage kill switch off,
+    * `_gf_row_id` is dropped and the outputs stay unstamped. */
+  private def readBinsForRewrite(spark: SparkSession, root: String,
+      schema: StructType, bins: Seq[Seq[FileEntry]], deletes: Seq[FileEntry]): DataFrame = {
+    import spark.implicits._
+    val w = (bins.size - 1).toString.length
+    val files = bins.zipWithIndex.flatMap { case (b, i) => b.map(_ -> s"%0${w}d".format(i)) }
+    val core = liveRowsWithIds(spark, root, schema, files.map(_._1.path),
+      deletes.map(f => (f.path, f.content.getOrElse(1), f.eqCols.getOrElse(Seq.empty))),
+      extraPhys = Seq(rowIdPhys))
+    val m = files.zipWithIndex.map { case ((f, bin), ord) =>
+      (f.path.split('/').last, f.firstRowId, bin, ord)
+    }.toDF("_gf_lin_name", "_gf_first", "_gf_bin", "_gf_ord")
+    val tagged = withLineageCol(core, m).drop("_gf_path", "_gf_snap")
+    if (lineageRewriteEnabled(spark)) tagged else tagged.drop(rowIdPhys.name)
+  }
 
   private def stampRewriteAdds(spark: SparkSession, adds: Seq[FileEntry]): Seq[FileEntry] =
     if (lineageRewriteEnabled(spark)) adds.map(f => f.copy(firstRowId = Some(-1L)))
@@ -3912,7 +3951,7 @@ object GraftTable {
       // executor-side and union in — one anti-join either way.
       val baseName = (c: Column) => substring_index(c, "/", -1)
       val posPart = Option.when(posD.nonEmpty)(
-        spark.read.parquet(posD.map(d => s"$root/${d._1}"): _*)
+        spark.read.schema(posDeleteSchema).parquet(posD.map(d => s"$root/${d._1}"): _*)
           .select(baseName(col("file_path")).as("_gf_name"), col("pos").as("_gf_pos")))
       val dvPart = Option.when(dvD.nonEmpty)(
         GraftDv.positionsDf(spark, dvD.map(d => s"$root/${d._1}"), "_gf_name", "_gf_pos"))
@@ -4300,7 +4339,8 @@ object GraftTable {
           versionedAdds(c).foreach(e => delta(e.path) = Some(e))
         }
         val hdr = tail.foldLeft(
-          Header(meta.properties - "graft.ckpt.file-count", meta.schemaJson))(_ fold _)
+          Header(meta.properties - "graft.ckpt.file-count" -- commitMarkerProps,
+            meta.schemaJson))(_ fold _)
         CkptTail(k, meta, tail, delta, hdr.props, hdr.schema(root, target))
       }
   }
@@ -4972,7 +5012,8 @@ object GraftTable {
         hydrate(root, (posFiles ++ dvFiles).map(_.path))
         val posNames =
           if (posFiles.isEmpty) Set.empty[String]
-          else spark.read.parquet(posFiles.map(f => s"$root/${f.path}"): _*)
+          else spark.read.schema(posDeleteSchema)
+            .parquet(posFiles.map(f => s"$root/${f.path}"): _*)
             .select(substring_index(col("file_path"), "/", -1)).distinct()
             .collect().map(_.getString(0)).toSet
         // a DV container NAMES its victims in its own name column — no
@@ -5221,7 +5262,7 @@ object GraftTable {
     val dvD = files.filter(_.content.contains(3))
     hydrate(root, (posD ++ dvD).map(_.path))
     val posPart = Option.when(posD.nonEmpty)(
-      spark.read.parquet(posD.map(f => s"$root/${f.path}"): _*)
+      spark.read.schema(posDeleteSchema).parquet(posD.map(f => s"$root/${f.path}"): _*)
         .select(
           substring_index(col("file_path"), "/", -1).as("file_path"),
           col("pos"),
@@ -6468,8 +6509,11 @@ object GraftTable {
 
   /** Bin-pack compaction — rewrite_data_files (reference:
     * SPARK_ICEBERG_GUIDE.md §8.3). Greedy first-fit over files smaller
-    * than the target; each bin rewrites into one file. Rewrites run as
-    * one distributed job; only file *metadata* transits the driver. */
+    * than the target; each bin rewrites into one file (one per
+    * partition tuple on a partitioned table). Bins are a planning
+    * concept only (Delta OPTIMIZE's bin-packing): every bin rewrites
+    * in one read → shuffle → write, and only file *metadata* transits
+    * the driver. */
   def rewriteDataFiles(spark: SparkSession, root: String,
       targetFileSizeBytes: Long = -1L,
       minInputFiles: Int = 2,
@@ -6498,7 +6542,7 @@ object GraftTable {
         else prunedData(types, specHistory(snap.properties), preds, smallAll,
           statAliases(schema))
     }
-    if (small.size < minInputFiles) return snap.snapshotId
+    if (small.isEmpty || small.size < minInputFiles) return snap.snapshotId
     // clustered tables: order candidate files by the partition
     // column's min stat UNDER THE COLUMN'S OWN COMPARATOR (a
     // lexicographic sort would put numeric "10" before "2") so each
@@ -6536,36 +6580,12 @@ object GraftTable {
         retiredNamesMeta(schema, snap.properties)
       else (None, Map.empty[String, String])
     val id = snap.snapshotId + 1   // planned against snap: conflicts fail loudly
-    // one write job per bin (each bin → exactly one output file),
-    // submitted concurrently — the Spark scheduler interleaves them,
-    // so compaction wall-clock is bounded by the largest bin, not
-    // bins × job latency
-    val adds = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      // pin the session conf for the whole parallel block so the
-      // per-call set/restore inside writeDataFiles cannot race (the
-      // inner pin then restores to the same pinned value)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(8, bins.size))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try withMicrosTimestamps(spark) {
-        Await.result(
-          Future.traverse(bins) { bin => Future {
-            // apply live position deletes while rewriting: the compacted
-            // file must not resurrect MoR-deleted rows (the stale delete
-            // entries keep referencing the retired paths — harmless).
-            // Row lineage rides along: the input's _gf_row_id column is
-            // written back out, and the -1 stamp tells readers to use it.
-            // coalesce(1), measured against repartition(1) (r20): both
-            // give one task per output file, and the single-task parquet
-            // encode dominates the bin — the shuffle's n-way read
-            // parallelism bought nothing at gate scale (5.4/6.0 s vs
-            // 5.5/5.3 s warm q26), so keep the exchange-free shape
-            val df = readFilesForRewrite(spark, root, schema, bin, deletes).coalesce(1)
-            stampRewriteAdds(spark, writeDataFiles(spark, root, df, id, snap.properties))
-          }}, Duration.Inf).flatten
-      } finally pool.shutdown()
-    }
+    // one shuffle puts each bin whole in one task; live deletes apply
+    // in the read, so compacted files never resurrect deleted rows
+    val binnedRows = readBinsForRewrite(spark, root, schema, bins, deletes)
+      .repartition(bins.size, col("_gf_bin"))
+    val adds = stampRewriteAdds(spark,
+      writeDataFiles(spark, root, binnedRows, id, snap.properties, binned = true))
     commitOrCleanup(root, id, Commit(id, Some(id - 1), System.currentTimeMillis(),
       "rewrite_data_files", adds, small.map(_.path), retProps, retSchemaJ))
   }

@@ -156,6 +156,160 @@ class RowLineageSpec extends SparkSpec {
       rows.map(r => (r.getLong(0), r.getLong(1))).toSeq)
   }
 
+  // ── one-job bin-pack compaction ─────────────────────────────────────
+
+  /** Data files in path order (the unclustered planner's bin order),
+    * packed next-fit at `target` the way rewriteDataFiles plans bins. */
+  private def planBins(root: String, target: Long): Seq[Seq[GraftTable.FileEntry]] = {
+    val data = GraftTable.state(root).files.filter(_.isData).sortBy(_.path)
+    data.foldLeft(Vector.empty[Vector[GraftTable.FileEntry]]) { (bins, f) =>
+      if (bins.nonEmpty && bins.last.map(_.sizeBytes).sum + f.sizeBytes <= target)
+        bins.init :+ (bins.last :+ f)
+      else bins :+ Vector(f)
+    }
+  }
+
+  /** A file's rows in physical order, projected to `cols`. */
+  private def physRows(root: String, path: String, cols: String*): Seq[Row] =
+    spark.read.parquet(s"$root/$path").select(cols.map(col): _*).collect().toSeq
+
+  /** Runs `body` and counts the SQL executions that wrote parquet under
+    * `root`. Listener delivery is asynchronous but ordered, so a marker
+    * query run afterwards flushes every earlier event. */
+  private def dataWritesUnder(root: String)(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val writes = new java.util.concurrent.atomic.AtomicInteger
+    val marker = s"flush-${java.util.UUID.randomUUID()}"
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        if (qe.logical.exists {
+          case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toUri.getPath.startsWith(root + "/")
+          case _ => false
+        }) writes.incrementAndGet()
+        if (funcName == "collect" && qe.logical.toString.contains(marker)) flushed.countDown()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(marker)).collect()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never flushed")
+    } finally spark.listenerManager.unregister(listener)
+    writes.get
+  }
+
+  /** Eight single-file appends of shuffled keys, then every MoR delete
+    * kind: a position-delete file folded into a DV container, a fresh
+    * position-delete file, and two equality-delete groups. */
+  private def morTable(root: String): Unit = {
+    import spark.implicits._
+    GraftTable.create(spark, root, schema)
+    val rnd = new scala.util.Random(17)
+    (0 until 8).foreach { i =>
+      val ks = rnd.shuffle((i * 20 until i * 20 + 20).toList)
+      GraftTable.append(spark, root, spark.createDataFrame(
+        ks.map(k => Row(k.toLong, s"v${(k * 7919) % 1000}")).asJava, schema).coalesce(1))
+    }
+    GraftTable.deleteWhereMoR(spark, root, col("k") % 7 === 0)
+    GraftTable.rewriteDeletesToDV(spark, root)
+    GraftTable.deleteWhereMoR(spark, root, col("k") % 11 === 0)
+    GraftTable.deleteEqualityMoR(spark, root, Seq(5L, 50L).toDF("k"))
+    GraftTable.deleteEqualityMoR(spark, root, Seq(101L, 150L).toDF("k"))
+    val kinds = GraftTable.state(root).files.flatMap(_.content).toSet
+    assert(Set(1, 2, 3).subsetOf(kinds), s"delete kinds present: $kinds")
+  }
+
+  private def rowsWithIds(root: String): Set[(Long, String, Long)] =
+    GraftTable.readWithRowIds(spark, root).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+
+  test("bin-pack compaction: one write for every bin, one file per bin, source order kept") {
+    val root = freshRoot("onejob")
+    morTable(root)
+    val before = rowsWithIds(root)
+    val live = before.map(_._1)
+    val target = GraftTable.state(root).files.filter(_.isData).map(_.sizeBytes).max * 2 + 1
+    val bins = planBins(root, target)
+    assert(bins.size >= 3, s"want >= 3 bins, planned ${bins.size}")
+    val srcPaths = bins.flatten.map(_.path).toSet
+    // each bin's expected output: its files' surviving rows, file by
+    // file in bin order, each in physical (position) order
+    val expected = bins.map(_.flatMap(f =>
+      physRows(root, f.path, "k").map(_.getLong(0)).filter(live))).toSet
+    val writes = dataWritesUnder(root) {
+      GraftTable.rewriteDataFiles(spark, root, targetFileSizeBytes = target)
+    }
+    assert(writes === 1, "every bin must rewrite in one write execution")
+    val outs = GraftTable.state(root).files.filter(_.isData)
+    assert(outs.forall(f => !srcPaths(f.path) && f.firstRowId.contains(-1L)))
+    assert(outs.size === bins.size, "one output file per bin")
+    assert(outs.map(f => physRows(root, f.path, "k").map(_.getLong(0))).toSet === expected)
+    assert(rowsWithIds(root) === before, "rows and _row_ids survive compaction")
+  }
+
+  test("bin-pack compaction keeps a declared sort order; the lineage kill switch still binpacks") {
+    val root = freshRoot("onejob-sorted")
+    morTable(root)
+    GraftTable.setWriteOrder(root, Seq(("v", false)), "none")
+    val before = rowsWithIds(root)
+    val target = GraftTable.state(root).files.filter(_.isData).map(_.sizeBytes).max * 2 + 1
+    val bins = planBins(root, target)
+    assert(bins.size >= 3, s"want >= 3 bins, planned ${bins.size}")
+    GraftTable.rewriteDataFiles(spark, root, targetFileSizeBytes = target)
+    val outs = GraftTable.state(root).files.filter(_.isData)
+    assert(outs.size === bins.size)
+    outs.foreach { f =>
+      val vs = physRows(root, f.path, "v").map(_.getString(0))
+      assert(vs === vs.sorted.reverse, s"${f.path} ignores the declared order")
+    }
+    assert(rowsWithIds(root) === before)
+    // kill switch: same one-file-per-bin rewrite, outputs unstamped
+    val plain = spark.newSession()
+    plain.conf.set("spark.graft.row-lineage.rewrite", "false")
+    GraftTable.append(spark, root, df(1000 until 1010).coalesce(1))
+    val target2 = GraftTable.state(root).files.filter(_.isData).map(_.sizeBytes).sum + 1
+    GraftTable.rewriteDataFiles(plain, root, targetFileSizeBytes = target2)
+    val one = GraftTable.state(root).files.filter(_.isData)
+    assert(one.size === 1 && !one.head.firstRowId.contains(-1L))
+    assert(GraftTable.read(spark, root).count() === before.size + 10)
+  }
+
+  test("bin-pack compaction on a partitioned table: one file per bin and tuple") {
+    val root = freshRoot("onejob-part")
+    val pschema = StructType(schema.fields :+ StructField("p", IntegerType, nullable = false))
+    GraftTable.create(spark, root, pschema, Map(GraftTable.specProp -> "identity(p)"))
+    (0 until 6).foreach { i =>
+      GraftTable.append(spark, root, spark.createDataFrame(
+        (i * 20 until i * 20 + 20).map(k => Row(k.toLong, s"v$k", k % 2)).asJava, pschema)
+        .coalesce(1))
+    }
+    GraftTable.deleteWhereMoR(spark, root, col("k") % 9 === 0)
+    val live = GraftTable.read(spark, root).select("k").collect().map(_.getLong(0)).toSet
+    val target = GraftTable.state(root).files.filter(_.isData).map(_.sizeBytes).max * 3 + 1
+    val bins = planBins(root, target)
+    assert(bins.size >= 3, s"want >= 3 bins, planned ${bins.size}")
+    def tuple(f: GraftTable.FileEntry): Map[String, String] = f.partition.get
+    val expected = bins.flatMap { b =>
+      b.groupBy(tuple).map { case (t, fs) =>
+        t -> b.filter(fs.contains).flatMap(f =>
+          physRows(root, f.path, "k").map(_.getLong(0)).filter(live))
+      }
+    }.toSet
+    assert(expected.map(_._1).size === 2 && expected.size > bins.size)
+    GraftTable.rewriteDataFiles(spark, root, targetFileSizeBytes = target)
+    val outs = GraftTable.state(root).files.filter(_.isData)
+    outs.foreach { f =>
+      val ps = physRows(root, f.path, "p").map(_.getInt(0)).toSet
+      assert(ps.map(_.toString) === Set(tuple(f)("p")), s"${f.path} carries the wrong tuple")
+    }
+    assert(outs.map(f => tuple(f) -> physRows(root, f.path, "k").map(_.getLong(0))).toSet ===
+      expected)
+  }
+
   test("lineage survives the checkpoint parquet roundtrip") {
     val root = freshRoot("ckpt")
     GraftTable.create(spark, root, schema)

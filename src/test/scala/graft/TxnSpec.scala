@@ -64,6 +64,28 @@ class TxnSpec extends SparkSpec {
     assert(GraftTable.read(spark, r2).count() == 4L)
   }
 
+  test("a committed transaction leaves no per-commit marker in main's properties") {
+    val root = freshRoot("markers")
+    mk(root, Seq((1L, "base")))
+    val t = GraftTable.beginTransaction(txnDir("markers"))
+    t.append(spark, root, Seq((2L, "txn")).toDF("id", "v"))
+    t.commit()
+    val markers = Set(GraftTable.wapStagedProp, GraftTable.wapIdProp,
+      "graft.txn.decision", "graft.branch.name", "graft.branch.base")
+    def leaked(): Set[String] =
+      GraftTable.state(root).properties.keySet.intersect(markers) ++
+        GraftTable.propertiesTable(spark, root).as[(String, String)].collect()
+          .map(_._1).toSet.intersect(markers)
+    assert(leaked().isEmpty, s"main reports per-commit markers: ${leaked()}")
+    // the next append lands on main, not off-lineage
+    val next = GraftTable.append(spark, root, Seq((3L, "after")).toDF("id", "v"))
+    assert(GraftTable.state(root).snapshotId === next)
+    assert(GraftTable.read(spark, root).count() === 3L)
+    // a checkpoint seeds later replays with the same header
+    GraftTable.rewriteManifests(root)
+    assert(leaked().isEmpty, s"checkpointed main reports markers: ${leaked()}")
+  }
+
   test("row-level op in a transaction: delete + append commit together; ordering rule is loud") {
     val (r1, r2) = (freshRoot("b1"), freshRoot("b2"))
     mk(r1, Seq((1L, "keep"), (2L, "drop")))
