@@ -140,6 +140,12 @@ private[graft] class GraftBatchScan(
     * runtime filtering, so only surviving files resolve. */
   @volatile private var remotePaths: Map[String, String] = Map.empty
 
+  /** The table root's storage binding, resolved once per scan: it
+    * resolves in-place reads, hydrates, and supplies the client conf
+    * for exactly the URIs it mints. */
+  private lazy val nroot = GraftTable.rootPath(root)
+  private lazy val store = LakeStore.at(nroot)
+
   private def pathFor(f: GraftTable.FileEntry): SparkPath =
     SparkPath.fromPathString(remotePaths.getOrElse(f.path, s"$root/${f.path}"))
 
@@ -180,11 +186,10 @@ private[graft] class GraftBatchScan(
     // EXCLUDED from hydration — the scan transfers column bytes, not
     // file bytes; MoR delete files (small, read whole, shared across
     // readers) always hydrate.
-    remotePaths = entries.flatMap(f =>
-      GraftTable.remoteReadPath(root, f.path).map(f.path -> _)).toMap
-    GraftTable.hydrate(root,
-      entries.map(_.path).filterNot(remotePaths.contains) ++
-        plan.deletes.map(_.path))
+    remotePaths = store.remoteReads(nroot, entries.map(_.path))
+    val local = entries.map(_.path).filterNot(remotePaths.contains) ++
+      plan.deletes.map(_.path)
+    if (local.nonEmpty) store.hydrate(nroot, local)
     if (spjActive) {
       val byKey = entries.groupBy(keyOf)
       groupKeys.zipWithIndex.map { case (k, i) =>
@@ -252,14 +257,12 @@ private[graft] class GraftBatchScan(
   /** The in-place scan scheme on a reader-bound hadoop conf: the
     * fs.grafts3.impl mapping (so Path.getFileSystem can instantiate
     * GraftRangedFs for grafts3:// URIs — a no-op for local paths) PLUS
-    * the per-token client conf so executor JVMs outside the
+    * the client conf of this scan's store so executor JVMs outside the
     * driver-local registry rebuild the client (the s3a shape). One
     * helper, both factory sites: a read path that ships the scheme
     * without the client conf fails on real clusters only. */
-  private def stampRangedFsConf(hc: org.apache.hadoop.conf.Configuration): Unit = {
-    locally { val (k, v) = GraftRangedFs.confKey; hc.set(k, v) }
-    GraftTable.remoteReadConf.foreach(_().foreach { case (k, v) => hc.set(k, v) })
-  }
+  private def stampRangedFsConf(hc: org.apache.hadoop.conf.Configuration): Unit =
+    (GraftRangedFs.confKey +: store.remoteReadConf(nroot)).foreach { case (k, v) => hc.set(k, v) }
 
   /** One vectorized parquet reader factory for (file schema, requested
     * schema, filters) — the SAME reader stack the V1 plane's

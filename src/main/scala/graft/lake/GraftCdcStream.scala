@@ -65,13 +65,12 @@ class GraftCdcStreamProvider extends StreamSourceProvider with DataSourceRegiste
 
 private[lake] object GraftCdcStreamProvider {
   /** End schema of the table + the three CDC columns (the same shape
-    * GraftTable.changes emits). Fires the poll hook FIRST: on a blank
+    * GraftTable.changes emits). Fires the store's log poll FIRST: on a blank
     * follower the schema itself lives only in the store's commit log,
     * and without the sync the advertised "one readStream, zero manual
     * sync calls" contract would die here before the first poll. */
   def cdcSchema(root: String): StructType = {
-    GraftTable.beforeLogPoll.foreach(
-      _(java.nio.file.Paths.get(root).toAbsolutePath.normalize))
+    beforeLogPoll(root)
     GraftTable.state(root).schema.add("_change_type", StringType)
       .add("_commit_snapshot_id", LongType)
       .add("_commit_timestamp_ms", LongType)
@@ -79,18 +78,22 @@ private[lake] object GraftCdcStreamProvider {
 
   /** Latest published (on-main) snapshot id — a staged WAP or branch
     * head must not become an offset bound that later re-serves its
-    * rows out of order once published. The beforeLogPoll hook fires
+    * rows out of order once published. The store's log poll fires
     * FIRST: a mounted auto-sync follower pulls new remote commits
     * here, so every poll (and the stream-start head resolution) sees
     * the store's current head with zero manual sync calls. */
   def mainHead(root: String): Long = {
-    // normalized: a cwd-relative or dotted stream path must still hit
-    // the mount's component-wise startsWith, or auto-sync silently
-    // stalls the follower at its bootstrap head
-    GraftTable.beforeLogPoll.foreach(
-      _(java.nio.file.Paths.get(root).toAbsolutePath.normalize))
+    beforeLogPoll(root)
     GraftTable.listCommitIds(root)
       .filterNot(id => GraftTable.isOffMainId(root, id)).max
+  }
+
+  // normalized: a cwd-relative or dotted stream path must still hit the
+  // mount's component-wise root, or auto-sync silently stalls the
+  // follower at its bootstrap head
+  private def beforeLogPoll(root: String): Unit = {
+    val p = GraftTable.rootPath(root)
+    LakeStore.at(p).beforeLogPoll(p)
   }
 
   /** First-start head resolution, durably pinned under the stream's

@@ -1216,8 +1216,8 @@ object GraftS3 {
     * worse, a failure of the stolen upload would surface in the WRONG
     * mount's close while the victim's commit lands referencing a
     * never-mirrored artifact. Foreign entries are never drained here;
-    * abandoned ones are consumed by the crash-cleanup hook
-    * ([[discardDispatch]]) instead. NESTED mounts narrow the scope
+    * abandoned ones are consumed by the crash cleanup
+    * ([[discardOn]]) instead. NESTED mounts narrow the scope
     * further: a warehouse mount closing over a still-open table mount
     * must not consume the table's entries (subtree containment alone
     * would — the same theft one level down), so an entry drains only
@@ -1244,15 +1244,17 @@ object GraftS3 {
   }
 
   // ── mount registries ────────────────────────────────────────────────
-  // Mount/unmount is REGISTRY-based, not captured-prev chaining: with
-  // parallel suites (or parallel tables) mounting concurrently, a
-  // chained hook's close() would blindly restore ITS captured prev and
-  // wipe any hook mounted after it (the r13 unscoped-hook flake class,
-  // ABA edition). Here close() removes only its own registry entry;
-  // one dispatcher stays installed while any entry lives, and targets
-  // resolve to the LONGEST matching mount root (component-wise
-  // startsWith — "/x/t10" is never captured by a mount for "/x/t1").
-  private final case class Mount(root: Path, prefix: String, client: Client)
+  // Every mount binds one LakeStore on its root (LakeStore.bind: the
+  // registry resolves each path to its longest-root store and hands the
+  // rest down). The per-shape lists below answer the cross-shape
+  // questions a store asks: is this root also arbitrated, budgeted,
+  // owned by a deeper mirror?
+  /** `token`: the grafts3 authority of a DIRECT-WRITE mirror
+    * (mountArtifactMirror(directWrite = true)) — staged parquet writes
+    * under `root` target the store through it and publish by
+    * server-side copy. */
+  private final case class Mount(root: Path, prefix: String, client: Client,
+      token: Option[String] = None)
 
   /** A hydration mount additionally carries the local-cache budget and
     * its LRU bookkeeping: `touched` maps mount-relative artifact path →
@@ -1260,7 +1262,7 @@ object GraftS3 {
     * mount's own monitor — eviction decisions are rare and driver-side),
     * `trackedBytes` is the running total so budget checks are O(1),
     * not O(touched files). Only files that passed through the hydrate
-    * hook are tracked — exactly the set a budgeted follower
+    * plane are tracked — exactly the set a budgeted follower
     * accumulates. */
   private final class HydMount(val root: Path, val prefix: String,
       val client: Client, val maxLocalBytes: Option[Long],
@@ -1324,24 +1326,18 @@ object GraftS3 {
         m.bytesEvicted.get, m.filesEvicted.get,
         m.hydrateHits.get, m.hydrateMisses.get)
     }
-  /** A DIRECT-WRITE mount (mountArtifactMirror(directWrite = true)):
-    * staged parquet writes under `root` target the store through the
-    * grafts3 scheme bound to `token`; publishes are server-side
-    * copies. The mirror Mount still registers alongside — ops that
-    * fall back to local staging (CTAS `.staging` publishes, add_files
-    * of local sources) keep the mirror-then-evict path. */
-  private final case class DirectMount(root: Path, prefix: String,
-      client: Client, token: String, unregister: AutoCloseable)
-  private val hookLock = new Object
   private val arbMounts = new java.util.concurrent.CopyOnWriteArrayList[Mount]()
   private val mirMounts = new java.util.concurrent.CopyOnWriteArrayList[Mount]()
-  private val directMounts = new java.util.concurrent.CopyOnWriteArrayList[DirectMount]()
   private val hydMounts = new java.util.concurrent.CopyOnWriteArrayList[HydMount]()
-  private var hydPrev: Option[(Path, Seq[String]) => Unit] = None
-  private var arbPrev: Option[(Path, String) => Boolean] = None
-  private var mirPrevPlace: (Path, Path) => Unit = null
-  private var mirPrevCkpt: Option[Path => Unit] = None
-  private var mirPrevDiscard: Option[Path => Unit] = None
+
+  /** Register `m` in its shape's list and bind `store` on `root`; the
+    * handle unbinds, then unregisters. */
+  private def mounted[M](registry: java.util.concurrent.CopyOnWriteArrayList[M],
+      m: M, root: Path)(store: LakeStore => LakeStore): AutoCloseable = {
+    registry.add(m)
+    val binding = LakeStore.bind(root)(store)
+    () => { binding.close(); registry.remove(m) }
+  }
 
   /** Longest-match owner over any mount-shaped registry. `>=` on the
     * tie: an equal-root REMOUNT (e.g. after credential rotation) must
@@ -1362,32 +1358,28 @@ object GraftS3 {
   private def ownerOfTarget(mounts: java.util.concurrent.CopyOnWriteArrayList[Mount],
       target: Path): Option[Mount] = ownerOf(mounts, target)(_.root)
 
-  private lazy val arbDispatch: (Path, String) => Boolean = (target, content) =>
-    ownerOfTarget(arbMounts, target) match {
-      case Some(m) =>
-        awaitReferenced(target, content)   // referenced artifacts durably remote FIRST
-        val won = m.client.putIfAbsent(keyFor(m.root, target, m.prefix),
-          content.getBytes(UTF_8))
-        // bounded-disk WRITER: the moment a commit WINS its slot, every
-        // artifact it references is durably remote (the barrier above)
-        // and consumed from the pending-upload map — the local copies
-        // become CACHE, not the only copy, and a budgeted mount may
-        // evict them. BEST-EFFORT by construction: the slot is already
-        // durably won, so an eviction hiccup (a transient size-probe
-        // failure, a concurrent evictLocalData racing a delete) must
-        // never surface as a commit failure — the caller would retry
-        // onto slot N+1 and replay a commit that already exists. The
-        // next commit's (or scan's) sweep re-enforces the budget.
-        if (won) {
-          try trackMirrored(target, content)
-          catch {
-            case _: InterruptedException => Thread.currentThread().interrupt()
-            case scala.util.control.NonFatal(_) => ()
-          }
-        }
-        won
-      case None => arbPrev.forall(_(target, content))
+  private def arbitrateOn(m: Mount, target: Path, content: String): Unit = {
+    awaitReferenced(target, content)   // referenced artifacts durably remote FIRST
+    val won = m.client.putIfAbsent(keyFor(m.root, target, m.prefix),
+      content.getBytes(UTF_8))
+    // bounded-disk WRITER: the moment a commit WINS its slot, every
+    // artifact it references is durably remote (the barrier above)
+    // and consumed from the pending-upload map — the local copies
+    // become CACHE, not the only copy, and a budgeted mount may
+    // evict them. BEST-EFFORT by construction: the slot is already
+    // durably won, so an eviction hiccup (a transient size-probe
+    // failure, a concurrent evictLocalData racing a delete) must
+    // never surface as a commit failure — the caller would retry
+    // onto slot N+1 and replay a commit that already exists. The
+    // next commit's (or scan's) sweep re-enforces the budget.
+    if (won) {
+      try trackMirrored(target, content)
+      catch {
+        case _: InterruptedException => Thread.currentThread().interrupt()
+        case scala.util.control.NonFatal(_) => ()
+      }
     }
+  }
 
   /** The WRITE twin of the follower cache budget (the reference writes
     * `warehouse=s3a://…` with no node holding a local lake copy —
@@ -1441,11 +1433,13 @@ object GraftS3 {
     }
   }
 
-  private lazy val placeDispatch: (Path, Path) => Unit = (src, dst) => {
+  private def placeOn(m: Mount, below: LakeStore, src: Path, dst: Path): Unit = {
     // the local placement first: the upload streams from the final
     // immutable path (src is consumed by the move)
-    mirPrevPlace(src, dst)
-    ownerOfTarget(mirMounts, dst).foreach { m =>
+    below.place(src, dst)
+    // nested mirrors: the innermost one uploads; an outer mirror is
+    // reached here only as the inner one's `below`
+    if (ownerOfTarget(mirMounts, dst).contains(m)) {
       // WITHOUT a commit arbiter on this root there is no pre-slot
       // barrier to await the upload — fall back to the synchronous
       // mirror (the upload is durably remote before the placement
@@ -1543,102 +1537,76 @@ object GraftS3 {
     * unreferenced garbage now) and the remote twin is deleted
     * best-effort, closing the orphan-object window pruneRemote would
     * otherwise catch only at maintenance time. */
-  private lazy val discardDispatch: Path => Unit = p => {
+  private def discardOn(m: Mount, p: Path): Unit = {
     val f = pendingUploads.remove(p)
-    if (f != null) {
-      try f.get() catch { case _: Throwable => () }
-      ownerOfTarget(mirMounts, p).foreach { m =>
-        try m.client.delete(keyFor(m.root, p, m.prefix))
-        catch { case _: Throwable => () }
-      }
-    } else ownerOf(directMounts, p)(_.root).foreach { m =>
-      // a direct-write artifact has no local copy and no pending-upload
-      // entry — the lost-race cleanup's only trace is the remote
-      // object, so close the orphan window here (best-effort, like the
-      // mirrored arm; pruneRemote remains the maintenance-time catch)
+    if (f != null) try f.get() catch { case _: Throwable => () }
+    // a direct-write artifact has no local copy and no pending-upload
+    // entry — the lost-race cleanup's only trace is the remote object,
+    // so close the orphan window here too (pruneRemote remains the
+    // maintenance-time catch)
+    if (f != null || m.token.isDefined)
       try m.client.delete(keyFor(m.root, p, m.prefix))
       catch { case scala.util.control.NonFatal(_) => () }
-    }
-    mirPrevDiscard.foreach(_(p))
   }
 
-  // ── direct-write staging dispatch ───────────────────────────────────
-  private var stagePrev: Option[Path => Option[GraftTable.RemoteStage]] = None
-  private lazy val stageDispatch: Path => Option[GraftTable.RemoteStage] = tableRoot => {
+  // ── direct-write staging ────────────────────────────────────────────
+  private def stageOn(m: Mount, token: String, tableRoot: Path): Option[LakeStore.RemoteStage] = {
     // CTAS/RTAS stage their whole TABLE under `<warehouse>/.staging/
     // <uuid>` and publish by a local directory move — remote stage
     // keys minted from the pre-publish root would go stale at that
     // move, so those roots keep the local staging + mirror path (the
-    // move's placements re-key correctly through placeDispatch). The
+    // move's placements re-key correctly through the mirror). The
     // check is scoped BELOW the mount root: a warehouse that itself
     // lives under some ancestor dir named `.staging` must not silently
     // lose direct-write for every table.
-    ownerOf(directMounts, tableRoot)(_.root) match {
-      case Some(m) if {
-        val rel = m.root.relativize(tableRoot)
-        (0 until rel.getNameCount).exists(i => rel.getName(i).toString == ".staging")
-      } => None
-      case Some(m) => Some(new GraftTable.RemoteStage {
-        private def join(a: String, b: String): String =
-          if (a.isEmpty || a.endsWith("/")) a + b else a + "/" + b
-        private val tableKey = keyFor(m.root, tableRoot, m.prefix)
-        private def keyOf(uri: String): String =
-          uri.stripPrefix(s"grafts3://${m.token}/")
-        def newStageUri(): String =
-          s"grafts3://${m.token}/${join(tableKey,
-            s".stage-${java.util.UUID.randomUUID()}")}"
-        def conf: Seq[(String, String)] =
-          GraftRangedFs.confKey +: m.client.confEntriesFor(m.token) ++: Seq(
-            // v2 commit: tasks merge straight into the job output dir —
-            // one server-side copy per artifact instead of two (task
-            // commit + job commit); v2's weaker failure atomicity is
-            // moot here because the stage is op-private and any
-            // failure discards it wholesale
-            "mapreduce.fileoutputcommitter.algorithm.version" -> "2",
-            // the stage is harvested by listing, not by marker
-            "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
-        def listStage(uri: String): Seq[(String, Long)] = {
-          val p = keyOf(uri) + "/"
-          m.client.listWithSizes(p).map { case (k, sz) =>
-            (k.stripPrefix(p),
-              if (sz >= 0) sz else m.client.sizeOf(k).getOrElse(0L))
-          }
+    val rel = m.root.relativize(tableRoot)
+    if ((0 until rel.getNameCount).exists(i => rel.getName(i).toString == ".staging")) None
+    else Some(new LakeStore.RemoteStage {
+      private def join(a: String, b: String): String =
+        if (a.isEmpty || a.endsWith("/")) a + b else a + "/" + b
+      private val tableKey = keyFor(m.root, tableRoot, m.prefix)
+      private def keyOf(uri: String): String =
+        uri.stripPrefix(s"grafts3://$token/")
+      def newStageUri(): String =
+        s"grafts3://$token/${join(tableKey,
+          s".stage-${java.util.UUID.randomUUID()}")}"
+      def conf: Seq[(String, String)] =
+        GraftRangedFs.confKey +: m.client.confEntriesFor(token) ++: Seq(
+          // v2 commit: tasks merge straight into the job output dir —
+          // one server-side copy per artifact instead of two (task
+          // commit + job commit); v2's weaker failure atomicity is
+          // moot here because the stage is op-private and any
+          // failure discards it wholesale
+          "mapreduce.fileoutputcommitter.algorithm.version" -> "2",
+          // the stage is harvested by listing, not by marker
+          "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
+      def listStage(uri: String): Seq[(String, Long)] = {
+        val p = keyOf(uri) + "/"
+        m.client.listWithSizes(p).map { case (k, sz) =>
+          (k.stripPrefix(p),
+            if (sz >= 0) sz else m.client.sizeOf(k).getOrElse(0L))
         }
-        def stagedUri(uri: String, rel: String): String = s"$uri/$rel"
-        def finalizeTo(uri: String, rel: String, tableRel: String): Unit = {
-          val src = join(keyOf(uri), rel)
-          m.client.copyObject(src, join(tableKey, tableRel))
-          m.client.delete(src)
-        }
-        def dropStaged(uri: String, rel: String): Unit =
-          m.client.delete(join(keyOf(uri), rel))
-        def discard(uri: String): Unit =
-          m.client.list(keyOf(uri) + "/").foreach(m.client.delete)
-      })
-      case None => stagePrev.flatMap(_(tableRoot))
-    }
+      }
+      def stagedUri(uri: String, rel: String): String = s"$uri/$rel"
+      def finalizeTo(uri: String, rel: String, tableRel: String): Unit = {
+        val src = join(keyOf(uri), rel)
+        m.client.copyObject(src, join(tableKey, tableRel))
+        m.client.delete(src)
+      }
+      def dropStaged(uri: String, rel: String): Unit =
+        m.client.delete(join(keyOf(uri), rel))
+      def discard(uri: String): Unit =
+        m.client.list(keyOf(uri) + "/").foreach(m.client.delete)
+    })
   }
 
-  private lazy val ckptDispatch: Path => Unit = dir => {
-    ownerOfTarget(mirMounts, dir).foreach { m =>
-      val s = Files.list(dir)
-      try s.iterator().asScala.filter(Files.isRegularFile(_))
-        .foreach(f => m.client.putFile(keyFor(m.root, f, m.prefix), f))
-      finally s.close()
-    }
-    mirPrevCkpt.foreach(_(dir))
+  private def checkpointOn(m: Mount, dir: Path): Unit = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.filter(Files.isRegularFile(_))
+      .foreach(f => m.client.putFile(keyFor(m.root, f, m.prefix), f))
+    finally s.close()
   }
 
-  /** The demand-fill data plane: a planned read's pruned file list
-    * arrives here (GraftTable.hydrateFiles) and exactly the locally
-    * MISSING files pull from the store — in parallel, streamed to
-    * disk, atomically materialized. The pre-slot barrier is what makes
-    * this safe with a metadata-only sync: a commit slot is visible
-    * remotely ONLY after every artifact it references is durably
-    * remote, so any file a synced commit names is guaranteed
-    * fetchable; a 404 therefore means a genuinely pruned/foreign
-    * object and fails the read loudly rather than serving a torn
-    * table. */
   /** In-flight hydrations keyed by FINAL LOCAL PATH — the download
     * twin of [[pendingUploads]]: two concurrent scans (or a scan
     * racing a CDC replan) that both plan the same missing 100 GB
@@ -1648,49 +1616,56 @@ object GraftS3 {
   private val pendingHydrations =
     new java.util.concurrent.ConcurrentHashMap[Path, java.util.concurrent.Future[_]]()
 
-  private lazy val hydDispatch: (Path, Seq[String]) => Unit = (tableRoot, rels) => {
-    ownerOf(hydMounts, tableRoot)(_.root).foreach { m =>
-      val wanted = rels.distinct
-      val missing = wanted.filter(r => !Files.exists(tableRoot.resolve(r)))
-      m.hydrateHits.addAndGet((wanted.size - missing.size).toLong)
-      m.hydrateMisses.addAndGet(missing.size.toLong)
-      if (missing.nonEmpty) {
-        val futs = missing.map { r =>
-          val local = tableRoot.resolve(r)
-          val key = keyFor(m.root, local, m.prefix)
-          val f = pendingHydrations.computeIfAbsent(local,
-            _ => hydPool.submit(new java.util.concurrent.Callable[Unit] {
-              def call(): Unit =
-                if (!Files.exists(local)) {
-                  if (!m.client.getToFile(key, local))
-                    throw new java.nio.file.NoSuchFileException(
-                      s"on-demand hydration: $key is referenced by a synced commit " +
-                        "but missing remotely (pruned or foreign object)")
-                  // ledger INSIDE the transfer task: two scans sharing
-                  // one pendingHydrations future count the pull once
-                  m.filesHydrated.incrementAndGet()
-                  localSizeOpt(local).foreach(m.bytesHydrated.addAndGet)
-                }
-            }))
-          (local, f)
-        }
-        // await EVERY future (collect the first error, rethrow after
-        // the loop): throwing at the first failed sibling would leave
-        // the rest stranded in the map as COMPLETED futures — a later
-        // evict + re-scan would then adopt the stale future, skip the
-        // download, and fail the read on a missing local file
-        var firstErr: Throwable = null
-        futs.foreach { case (local, f) =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException =>
-            if (firstErr == null) firstErr = e.getCause }
-          finally pendingHydrations.remove(local, f)
-        }
-        if (firstErr != null) throw firstErr
+  /** The demand-fill data plane: a planned read's pruned file list
+    * arrives here (LakeStore.hydrate) and exactly the locally
+    * MISSING files pull from the store — in parallel, streamed to
+    * disk, atomically materialized. The pre-slot barrier is what makes
+    * this safe with a metadata-only sync: a commit slot is visible
+    * remotely ONLY after every artifact it references is durably
+    * remote, so any file a synced commit names is guaranteed
+    * fetchable; a 404 therefore means a genuinely pruned/foreign
+    * object and fails the read loudly rather than serving a torn
+    * table. */
+  private def hydrateOn(m: HydMount, tableRoot: Path, rels: Seq[String]): Unit = {
+    val wanted = rels.distinct
+    val missing = wanted.filter(r => !Files.exists(tableRoot.resolve(r)))
+    m.hydrateHits.addAndGet((wanted.size - missing.size).toLong)
+    m.hydrateMisses.addAndGet(missing.size.toLong)
+    if (missing.nonEmpty) {
+      val futs = missing.map { r =>
+        val local = tableRoot.resolve(r)
+        val key = keyFor(m.root, local, m.prefix)
+        val f = pendingHydrations.computeIfAbsent(local,
+          _ => hydPool.submit(new java.util.concurrent.Callable[Unit] {
+            def call(): Unit =
+              if (!Files.exists(local)) {
+                if (!m.client.getToFile(key, local))
+                  throw new java.nio.file.NoSuchFileException(
+                    s"on-demand hydration: $key is referenced by a synced commit " +
+                      "but missing remotely (pruned or foreign object)")
+                // ledger INSIDE the transfer task: two scans sharing
+                // one pendingHydrations future count the pull once
+                m.filesHydrated.incrementAndGet()
+                localSizeOpt(local).foreach(m.bytesHydrated.addAndGet)
+              }
+          }))
+        (local, f)
       }
-      enforceCacheBudget(m, tableRoot, rels)
+      // await EVERY future (collect the first error, rethrow after
+      // the loop): throwing at the first failed sibling would leave
+      // the rest stranded in the map as COMPLETED futures — a later
+      // evict + re-scan would then adopt the stale future, skip the
+      // download, and fail the read on a missing local file
+      var firstErr: Throwable = null
+      futs.foreach { case (local, f) =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException =>
+          if (firstErr == null) firstErr = e.getCause }
+        finally pendingHydrations.remove(local, f)
+      }
+      if (firstErr != null) throw firstErr
     }
-    hydPrev.foreach(_(tableRoot, rels))
+    enforceCacheBudget(m, tableRoot, rels)
   }
 
   /** The automatic half of the cache-eviction story: after a scan's
@@ -1885,51 +1860,29 @@ object GraftS3 {
       client, maxLocalBytes,
       if (readInPlace) Some(GraftRangedFs.register(client)) else None)
     censusLocal(m)
-    hookLock.synchronized {
-      if (hydMounts.isEmpty) {
-        val cur = GraftTable.hydrateFiles
-        if (!cur.exists(_ eq hydDispatch)) {
-          hydPrev = cur
-          GraftTable.hydrateFiles = Some(hydDispatch)
+    val un = mounted(hydMounts, m, m.root)(below => new LakeStore.Layer(below) {
+      override def hydrate(tableRoot: Path, rels: Seq[String]): Unit =
+        hydrateOn(m, tableRoot, rels)
+      override def isLazyRoot(tableRoot: Path): Boolean = true
+      // in place: the ranged mount maps each locally absent artifact to
+      // `grafts3://<token>/<remote key>` (a hydrated copy is the faster
+      // read); mounts without the ranged shape resolve nothing
+      override def remoteReads(tableRoot: Path, rels: Seq[String]): Map[String, String] =
+        m.ranged.fold(Map.empty[String, String]) { case (token, _) =>
+          rels.iterator.filterNot(r => Files.exists(tableRoot.resolve(r))).map { r =>
+            r -> s"grafts3://$token/${keyFor(m.root, tableRoot.resolve(r), m.prefix)}"
+          }.toMap
         }
-        val curProbe = GraftTable.lazyRootProbe
-        if (!curProbe.exists(_ eq lazyProbe)) {
-          lazyProbePrev = curProbe
-          GraftTable.lazyRootProbe = Some(lazyProbe)
+      // exactly this mount's client conf: a scan ships the credentials
+      // of the store that minted its URIs, never another mount's
+      override def remoteReadConf(tableRoot: Path): Seq[(String, String)] =
+        m.ranged.fold(Seq.empty[(String, String)]) { case (token, _) =>
+          m.client.confEntriesFor(token)
         }
-      }
-      if (readInPlace) {
-        val curRes = GraftTable.resolveRemoteRead
-        if (!curRes.exists(_ eq resolveDispatch)) {
-          resolvePrev = curRes
-          // capture the conf hook's prev alongside the resolver's (they
-          // install and restore as a PAIR): a chained prior resolver
-          // ships its executor-side conf through remoteReadConf, and an
-          // unconditional None on unmount would silently strand it
-          resolveConfPrev = GraftTable.remoteReadConf
-          GraftTable.resolveRemoteRead = Some(resolveDispatch)
-          GraftTable.remoteReadConf = Some(resolveConfDispatch)
-        }
-      }
-      installPullLog()
-      hydMounts.add(m)
-    }
-    () => hookLock.synchronized {
-      hydMounts.remove(m)
-      m.ranged.foreach(_._2.close())
-      if (hydMounts.isEmpty) {
-        if (GraftTable.hydrateFiles.exists(_ eq hydDispatch))
-          GraftTable.hydrateFiles = hydPrev
-        if (GraftTable.lazyRootProbe.exists(_ eq lazyProbe))
-          GraftTable.lazyRootProbe = lazyProbePrev
-      }
-      if (!hydMounts.asScala.exists(_.ranged.isDefined) &&
-          GraftTable.resolveRemoteRead.exists(_ eq resolveDispatch)) {
-        GraftTable.resolveRemoteRead = resolvePrev
-        GraftTable.remoteReadConf = resolveConfPrev
-      }
-      maybeUninstallPullLog()
-    }
+      override def pullLogObject(tableRoot: Path, rel: String): Unit =
+        pullLogOn(m.root, m.prefix, m.client, tableRoot, rel)
+    })
+    () => { un.close(); m.ranged.foreach(_._2.close()) }
   }
 
   /** Mount-time census of PRE-EXISTING local data/delete artifacts
@@ -1968,39 +1921,6 @@ object GraftS3 {
       found.foreach { case (rel, size, _) => m.touch(rel, size) }
     }
   }
-
-  /** In-place read resolution: the owning RANGED mount maps (table
-    * root, rel) to `grafts3://<token>/<remote key>` — the native scan
-    * then reads footer + projected column chunks straight off the
-    * store. Mounts without the ranged shape resolve nothing (their
-    * roots keep hydrating). */
-  private var resolvePrev: Option[(Path, String) => Option[String]] = None
-  private var resolveConfPrev: Option[() => Seq[(String, String)]] = None
-  private lazy val resolveDispatch: (Path, String) => Option[String] =
-    (tableRoot, rel) =>
-      ownerOf(hydMounts, tableRoot)(_.root).flatMap(m => m.ranged.map { case (token, _) =>
-        s"grafts3://$token/${keyFor(m.root, tableRoot.resolve(rel), m.prefix)}"
-      }).orElse(resolvePrev.flatMap(_(tableRoot, rel)))
-
-  /** Conf entries for every live RANGED mount — the scan adds them to
-    * its broadcast hadoop conf so executor JVMs that can't see the
-    * driver-local registry rebuild the client from conf (the s3a
-    * shape; in local[*] the registry wins and these are unused). */
-  private lazy val resolveConfDispatch: () => Seq[(String, String)] = () => {
-    val acc = Seq.newBuilder[(String, String)]
-    hydMounts.forEach(m => m.ranged.foreach { case (token, _) =>
-      acc ++= m.client.confEntriesFor(token)
-    })
-    acc.result()
-  }
-
-  /** Is `target` under any on-demand hydration mount? Read paths that
-    * cannot fire the hydrate hook consult this to refuse loudly
-    * instead of silently serving the already-hydrated subset. */
-  private lazy val lazyProbe: Path => Boolean = target =>
-    ownerOf(hydMounts, target)(_.root).isDefined ||
-      hydMounts.asScala.exists(_.root.startsWith(target))
-  private var lazyProbePrev: Option[Path => Boolean] = None
 
   /** The eager METADATA plane of a lazy follower: pull the commit log
     * (slots, checkpoint headers, checkpoint parquet file-lists — all
@@ -2063,19 +1983,15 @@ object GraftS3 {
     client: Client, metadataOnly: Boolean)
   private val syncMounts =
     new java.util.concurrent.CopyOnWriteArrayList[SyncMount]()
-  private var syncPrev: Option[Path => Unit] = None
 
-  private lazy val pollDispatch: Path => Unit = tableRoot => {
-    ownerOf(syncMounts, tableRoot)(_.root).foreach { best =>
-      // warehouse-level mounts: the table's key prefix is the mount
-      // prefix plus the table's warehouse-relative path — exactly
-      // keyFor's rule (syncMetadata/syncRemote re-normalize the
-      // trailing slash themselves)
-      val pfx = keyFor(best.root, tableRoot, best.prefix)
-      if (best.metadataOnly) syncMetadata(tableRoot, best.client, pfx)
-      else syncRemote(tableRoot, best.client, pfx)
-    }
-    syncPrev.foreach(_(tableRoot))
+  private def pollOn(m: SyncMount, tableRoot: Path): Unit = {
+    // warehouse-level mounts: the table's key prefix is the mount
+    // prefix plus the table's warehouse-relative path — exactly
+    // keyFor's rule (syncMetadata/syncRemote re-normalize the
+    // trailing slash themselves)
+    val pfx = keyFor(m.root, tableRoot, m.prefix)
+    if (m.metadataOnly) syncMetadata(tableRoot, m.client, pfx)
+    else syncRemote(tableRoot, m.client, pfx)
   }
 
   /** Mount LIVE auto-sync for a fleet follower at `root`: the CDC
@@ -2094,23 +2010,11 @@ object GraftS3 {
     // component-wise startsWith (the dispatch side normalizes too)
     val m = SyncMount(root.toAbsolutePath.normalize,
       normPrefix(prefix), client, metadataOnly)
-    hookLock.synchronized {
-      if (syncMounts.isEmpty) {
-        val cur = GraftTable.beforeLogPoll
-        if (!cur.exists(_ eq pollDispatch)) {
-          syncPrev = cur
-          GraftTable.beforeLogPoll = Some(pollDispatch)
-        }
-      }
-      installPullLog()
-      syncMounts.add(m)
-    }
-    () => hookLock.synchronized {
-      syncMounts.remove(m)
-      if (syncMounts.isEmpty && GraftTable.beforeLogPoll.exists(_ eq pollDispatch))
-        GraftTable.beforeLogPoll = syncPrev
-      maybeUninstallPullLog()
-    }
+    mounted(syncMounts, m, m.root)(below => new LakeStore.Layer(below) {
+      override def beforeLogPoll(tableRoot: Path): Unit = pollOn(m, tableRoot)
+      override def pullLogObject(tableRoot: Path, rel: String): Unit =
+        pullLogOn(m.root, m.prefix, m.client, tableRoot, rel)
+    })
   }
 
   /** Mount the object store as `root`'s commit arbiter: every
@@ -2131,24 +2035,11 @@ object GraftS3 {
     * Returns an un-mount handle. */
   def mountCommitArbiter(root: Path, client: Client,
       prefix: String = ""): AutoCloseable = {
-    val m = Mount(root, normPrefix(prefix), client)
-    hookLock.synchronized {
-      if (arbMounts.isEmpty) {
-        val cur = GraftTable.commitArbiter
-        // a custom wrapper may still hold the dispatcher from an
-        // earlier mount cycle — never capture ourselves as prev
-        if (!cur.exists(_ eq arbDispatch)) {
-          arbPrev = cur
-          GraftTable.commitArbiter = Some(arbDispatch)
-        }
-      }
-      arbMounts.add(m)
-    }
-    () => hookLock.synchronized {
-      arbMounts.remove(m)
-      if (arbMounts.isEmpty && GraftTable.commitArbiter.exists(_ eq arbDispatch))
-        GraftTable.commitArbiter = arbPrev
-    }
+    val m = Mount(root.toAbsolutePath.normalize, normPrefix(prefix), client)
+    mounted(arbMounts, m, m.root)(below => new LakeStore.Layer(below) {
+      override def arbitrate(target: Path, content: String): Unit =
+        arbitrateOn(m, target, content)
+    })
   }
 
   /** Mirror every artifact placed under `root` to the store (data /
@@ -2164,64 +2055,25 @@ object GraftS3 {
     * [[pruneRemote]] dropped the store's copies of expired commits. */
   def mountArtifactMirror(root: Path, client: Client,
       prefix: String = "", directWrite: Boolean = false): AutoCloseable = {
-    val m = Mount(root.toAbsolutePath.normalize, normPrefix(prefix), client)
-    val direct =
-      if (!directWrite) None
-      else {
-        val (token, unreg) = GraftRangedFs.register(client)
-        Some(DirectMount(m.root, m.prefix, client, token, unreg))
-      }
-    hookLock.synchronized {
-      if (mirMounts.isEmpty) {
-        if (!(GraftTable.placeArtifact eq placeDispatch)) {
-          mirPrevPlace = GraftTable.placeArtifact
-          GraftTable.placeArtifact = placeDispatch
-        }
-        if (!GraftTable.checkpointPlaced.exists(_ eq ckptDispatch)) {
-          mirPrevCkpt = GraftTable.checkpointPlaced
-          GraftTable.checkpointPlaced = Some(ckptDispatch)
-        }
-        if (!GraftTable.artifactDiscarded.exists(_ eq discardDispatch)) {
-          mirPrevDiscard = GraftTable.artifactDiscarded
-          GraftTable.artifactDiscarded = Some(discardDispatch)
-        }
-      }
-      direct.foreach { d =>
-        if (directMounts.isEmpty) {
-          val cur = GraftTable.remoteStage
-          if (!cur.exists(_ eq stageDispatch)) {
-            stagePrev = cur
-            GraftTable.remoteStage = Some(stageDispatch)
-          }
-        }
-        directMounts.add(d)
-      }
-      mirMounts.add(m)
-    }
+    // ops that stage locally even under direct-write (CTAS `.staging`
+    // publishes, add_files of local sources) keep the mirror-then-evict
+    // path through `place`
+    val direct = if (directWrite) Some(GraftRangedFs.register(client)) else None
+    val m = Mount(root.toAbsolutePath.normalize, normPrefix(prefix), client,
+      direct.map(_._1))
+    val un = mounted(mirMounts, m, m.root)(below => new LakeStore.Layer(below) {
+      override def place(src: Path, dst: Path): Unit = placeOn(m, below, src, dst)
+      override def checkpointPlaced(dir: Path): Unit = checkpointOn(m, dir)
+      override def artifactDiscarded(p: Path): Unit = discardOn(m, p)
+      override def remoteStage(tableRoot: Path): Option[LakeStore.RemoteStage] =
+        m.token.fold(below.remoteStage(tableRoot))(stageOn(m, _, tableRoot))
+    })
     () =>
       // nothing of THIS mount's in flight outlives it — and a failed
       // upload must still UNMOUNT (a throwing close that leaves the
-      // dispatch installed would poison every later suite in the
-      // shared JVM)
+      // binding live would poison every later suite in the shared JVM)
       try flushAll(m)
-      finally hookLock.synchronized {
-        mirMounts.remove(m)
-        direct.foreach { d =>
-          directMounts.remove(d)
-          d.unregister.close()
-          if (directMounts.isEmpty &&
-              GraftTable.remoteStage.exists(_ eq stageDispatch))
-            GraftTable.remoteStage = stagePrev
-        }
-        if (mirMounts.isEmpty) {
-          if (GraftTable.placeArtifact eq placeDispatch)
-            GraftTable.placeArtifact = mirPrevPlace
-          if (GraftTable.checkpointPlaced.exists(_ eq ckptDispatch))
-            GraftTable.checkpointPlaced = mirPrevCkpt
-          if (GraftTable.artifactDiscarded.exists(_ eq discardDispatch))
-            GraftTable.artifactDiscarded = mirPrevDiscard
-        }
-      }
+      finally { un.close(); direct.foreach(_._2.close()) }
   }
 
   /** Crash recovery / DR for an arbitrated mount: the store holds
@@ -2580,7 +2432,7 @@ object GraftS3 {
     * the final commit, a crashed seal's decision mirror) are not
     * picked up by an IDLE poll — checkpoints are derived state the
     * next commit's listing (or DR) re-covers, and txn decisions pull
-    * on demand at classification time (GraftTable.pullLogObject). */
+    * on demand at classification time (LakeStore.pullLogObject). */
   private def idleAtHead(root: Path, client: Client, p: String): Boolean =
     localHead(root.resolve("_graft_log")).exists { h =>
       client.sizeOf(p + f"_graft_log/${h + 1}%010d.json").isEmpty &&
@@ -2590,7 +2442,7 @@ object GraftS3 {
   /** The idle poll's decision sweep: a crashed seal's txn decision
     * lands remotely with NO new slot, so the probe alone would never
     * deliver it — and a MOUNT-LESS follower calling syncMetadata/
-    * syncRemote directly has no pullLogObject hook either. One
+    * syncRemote directly has no store to pull through either. One
     * targeted GET per locally-in-doubt transaction (usually zero,
     * computed from the memoized off-main tail — never a list page)
     * keeps decision liveness for every caller shape. */
@@ -2612,39 +2464,15 @@ object GraftS3 {
     * NO accompanying commit slot (a transaction's decision mirror when
     * the seal crashed before its property commit): the O(1) idle probe
     * deliberately never lists letter-named keys, so such objects are
-    * pulled on demand at the moment replay needs them. Consults the
-    * auto-sync registry first, then the hydration mounts (both
-    * follower shapes); absence local AND remote = still in doubt, a
-    * no-op — never an error. */
-  private var pullLogPrev: Option[(Path, String) => Unit] = None
-  private lazy val pullLogDispatch: (Path, String) => Unit = (tableRoot, rel) => {
-    val mount = ownerOf(syncMounts, tableRoot)(_.root)
-      .map(m => (m.root, m.prefix, m.client))
-      .orElse(ownerOf(hydMounts, tableRoot)(_.root)
-        .map(m => (m.root, m.prefix, m.client)))
-    mount.foreach { case (mroot, mpfx, client) =>
-      val local = tableRoot.resolve(rel)
-      if (!Files.exists(local))
-        client.get(keyFor(mroot, local, mpfx)).foreach(writeLocalAtomic(local, _))
-    }
-    pullLogPrev.foreach(_(tableRoot, rel))
+    * pulled on demand at the moment replay needs them. Served by both
+    * follower shapes (auto-sync and hydration); absence local AND
+    * remote = still in doubt, a no-op — never an error. */
+  private def pullLogOn(mroot: Path, mpfx: String, client: Client,
+      tableRoot: Path, rel: String): Unit = {
+    val local = tableRoot.resolve(rel)
+    if (!Files.exists(local))
+      client.get(keyFor(mroot, local, mpfx)).foreach(writeLocalAtomic(local, _))
   }
-
-  /** Install/uninstall the on-demand log-object pull; called under
-    * [[hookLock]] by both follower mounts (auto-sync and hydration) —
-    * idempotent, prev captured once, restored when BOTH registries
-    * drain. */
-  private def installPullLog(): Unit = {
-    val cur = GraftTable.pullLogObject
-    if (!cur.exists(_ eq pullLogDispatch)) {
-      pullLogPrev = cur
-      GraftTable.pullLogObject = Some(pullLogDispatch)
-    }
-  }
-  private def maybeUninstallPullLog(): Unit =
-    if (syncMounts.isEmpty && hydMounts.isEmpty &&
-        GraftTable.pullLogObject.exists(_ eq pullLogDispatch))
-      GraftTable.pullLogObject = pullLogPrev
 
   /** The slot-named (`%010d.json`) files of a local `_graft_log` dir —
     * THE shared definition of the local commit plane for syncRemote,
@@ -2670,7 +2498,9 @@ object GraftS3 {
   private def normPrefix(p: String): String =
     if (p.isEmpty || p.endsWith("/")) p else p + "/"
 
+  // mount roots are absolute and normalized; a table may name its
+  // paths relative to the working directory
   private def keyFor(root: Path, target: Path, prefix: String): String =
-    prefix + root.relativize(target).toString
+    prefix + root.relativize(target.toAbsolutePath.normalize).toString
       .replace(java.io.File.separatorChar, '/')
 }

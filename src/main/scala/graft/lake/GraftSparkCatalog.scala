@@ -48,7 +48,7 @@ object GraftSparkCatalog {
     * warehouse, prefix, region — everything except the credentials).
     * The value retains the full key (credentials included) plus the
     * AutoCloseable mount handles: a catalog re-initialized with the
-    * SAME identity and key is a no-op (no duplicate hook stacking),
+    * SAME identity and key is a no-op (no duplicate store bindings),
     * while one re-initialized after a CREDENTIAL ROTATION closes the
     * superseded mount before registering the new one — without this,
     * every rotation would leak a registry entry + HTTP client signing
@@ -184,11 +184,10 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     // Arbiter + artifact mirror mount at WAREHOUSE level, so every
     // table under this catalog arbitrates its commits against the
     // store with warehouse-relative key namespacing (multi-table-safe
-    // by construction). The hooks live as long as the session's cached
-    // catalog instance and are scoped to this warehouse root,
-    // delegating foreign paths — same discipline as every other global
-    // hook. The mounted-set guard keeps a re-initialized catalog (new
-    // session, same JVM) from stacking duplicate hooks.
+    // by construction). The bindings live as long as the session's
+    // cached catalog instance and cover this warehouse root only. The
+    // mounted-set guard keeps a re-initialized catalog (new session,
+    // same JVM) from binding duplicates.
     Option(options.get("s3.endpoint")).foreach { ep =>
       def req(k: String) = Option(options.get(k)).getOrElse(
         throw new IllegalArgumentException(

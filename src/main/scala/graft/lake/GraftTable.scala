@@ -423,213 +423,59 @@ object GraftTable {
         .format(java.time.format.DateTimeFormatter.ofPattern(pattern))
     }
 
-  /** Atomic put-if-absent. A rename would silently REPLACE an existing
-    * target on POSIX (rename(2) semantics), losing a concurrent
-    * writer's commit — a hard link both is atomic and fails with
-    * FileAlreadyExistsException when the target exists, which is
-    * exactly the object-store conditional-put this stands in for. */
-  /** Place one immutable, uniquely-named artifact (data / delete /
-    * replace-generation file) at its final path. ATOMIC_MOVE on a
-    * rename-capable FS; the object-store twin is a plain PUT —
-    * correctness never depends on rename atomicity here because every
-    * name is unique (snapshot-prefix + uuid) and unreferenced until
-    * the commit JSON wins its put-if-absent createLink. Pluggable so
-    * LakeV2Spec can drive a full lifecycle through a copy+delete shim
-    * (the no-rename-filesystem probe). Checkpoint staging keeps its
-    * own rename: it races identical writers over DERIVED state and
-    * discards losers. */
-  @volatile private[graft] var placeArtifact: (Path, Path) => Unit =
-    (src, dst) => Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
+  /** `root` as the absolute, normalized path the store registry matches
+    * component-wise: a relative or dotted table root would silently
+    * miss its binding. */
+  private[lake] def rootPath(root: String): Path = Paths.get(root).toAbsolutePath.normalize
 
-  /** Invoked with the checkpoint-parquet DIRECTORY after a WINNING
-    * atomic move (losers of the identical-writer checkpoint race never
-    * fire it). Lets a mounted object store mirror derived planning
-    * state, so a blank-machine restore keeps O(1) replay even after
-    * the store's copies of expired commits are pruned. Same scoping
-    * discipline as placeArtifact: gate on your own root, delegate the
-    * rest. */
-  @volatile private[graft] var checkpointPlaced: Option[Path => Unit] = None
-
-  /** Scan-time on-demand hydration hook: invoked with (table root,
-    * table-relative paths) for exactly the data/delete files a planned
-    * read is about to open — BEFORE any of them is opened. A mounted
-    * object store (GraftS3.mountOnDemandHydration) pulls the locally
-    * missing ones here, which is what turns a fleet follower from a
-    * full REPLICA into a READER: the metadata plane (commit log +
-    * checkpoints, KB-sized) syncs eagerly, while a 100 TB table's data
-    * files transfer only when a pruned scan actually selects them.
-    * None (default) = every referenced file is local, the no-op. Same
-    * scoping discipline as every global hook: gate on your own root,
-    * delegate foreign roots. */
-  @volatile private[graft] var hydrateFiles: Option[(Path, Seq[String]) => Unit] = None
-
-  /** Fire [[hydrateFiles]] for a planned read's file list (both choke
-    * points below call this; double-firing is an idempotent existence
-    * check per path). Normalized to ABSOLUTE form before dispatch: the
-    * mount registry matches roots component-wise, and a relative or
-    * dotted table root would silently miss its mount — the read then
-    * fails on a missing local file instead of hydrating (the exact
-    * hazard the auto-sync plane normalizes against). */
+  /** Hydrate a planned read's file list through the root's store before
+    * any of it is opened (every choke point below calls this;
+    * double-firing is an idempotent existence check per path). */
   private[lake] def hydrate(root: String, rels: Seq[String]): Unit =
-    hydrateFiles.foreach(h =>
-      if (rels.nonEmpty) h(Paths.get(root).toAbsolutePath.normalize, rels))
+    if (rels.nonEmpty) { val p = rootPath(root); LakeStore.at(p).hydrate(p, rels) }
 
-  /** True when `root` is a LAZY-FOLLOWER data root (an on-demand
-    * hydration mount covers it): live data files may be locally absent
-    * by design. Read paths that open table-relative files WITHOUT
-    * going through [[hydrate]] must either hydrate first or refuse
-    * loudly on such a root — silently serving the hydrated subset is
-    * the wrong-results class the lazy-follower invariant forbids.
-    * Installed by GraftS3.mountOnDemandHydration; None = no lazy
-    * roots in this JVM. */
-  @volatile private[graft] var lazyRootProbe: Option[Path => Boolean] = None
-
-  private[lake] def isLazyRoot(root: String): Boolean =
-    lazyRootProbe.exists(_(Paths.get(root).toAbsolutePath.normalize))
-
-  /** Scan-time IN-PLACE read resolution: invoked with (table root,
-    * table-relative artifact path), returns the remote URI the scan
-    * should read the artifact from DIRECTLY (a `grafts3://` path
-    * served over ranged GETs) — or None to read locally/hydrate. The
-    * ranged-read twin of [[hydrateFiles]]: where hydration transfers
-    * the FILE and caches it, in-place resolution transfers only the
-    * bytes the reader actually requests (parquet footer + projected
-    * column chunks) and caches nothing. Installed by
-    * GraftS3.mountOnDemandHydration(readInPlace = true). */
-  @volatile private[graft] var resolveRemoteRead:
-    Option[(Path, String) => Option[String]] = None
-
-  /** Conf entries (`fs.grafts3.<token>.*`) executor JVMs need to
-    * rebuild the ranged-read clients from the scan's broadcast hadoop
-    * conf — the registry that serves local[*] is driver-only. Set
-    * alongside [[resolveRemoteRead]]. */
-  @volatile private[graft] var remoteReadConf:
-    Option[() => Seq[(String, String)]] = None
-
-  /** Direct-to-store staging (the task-side write plane, reference:
-    * spark-defaults.conf:10 — executors write `s3a://…` directly, no
-    * node funnels the data bytes): when a mounted object store claims
-    * a table root (GraftS3.mountArtifactMirror with directWrite =
-    * true), every staged parquet write under it targets a REMOTE
-    * staging URI instead of a local `.stage-*` dir. Task output
-    * streams to the store as multipart parts, footer stats read back
-    * over ranged GETs, and the committed artifact is published by a
-    * SERVER-SIDE copy — a data file never lands on any local disk,
-    * not even transiently (the mirror-then-evict path's documented
-    * residual). The pre-slot durability ordering is inherited for
-    * free: the artifact is remote the moment it is published, before
-    * the commit slot is ever arbitrated. */
-  private[graft] trait RemoteStage {
-    /** Fresh unique staging directory URI for ONE write op. */
-    def newStageUri(): String
-    /** Hadoop-conf entries the write job and the footer reads need to
-      * resolve the staging scheme on every JVM (filesystem impl,
-      * client conf, committer algorithm). */
-    def conf: Seq[(String, String)]
-    /** Staged files after the write job: (path relative to the stage
-      * URI, size in bytes). */
-    def listStage(uri: String): Seq[(String, Long)]
-    /** Absolute URI of one staged file (footer stats reads). */
-    def stagedUri(uri: String, rel: String): String
-    /** Publish one staged object at its final table-relative path:
-      * server-side copy, then staged-key delete. */
-    def finalizeTo(uri: String, rel: String, tableRel: String): Unit
-    /** Drop one staged object (an empty split). */
-    def dropStaged(uri: String, rel: String): Unit
-    /** Drop the whole stage (job markers, leftovers, aborts). */
-    def discard(uri: String): Unit
+  /** True when `root` is a LAZY-FOLLOWER data root — its own store or
+    * one bound under it serves on-demand hydration: live data files may
+    * be locally absent by design. Read paths that open table-relative
+    * files WITHOUT going through [[hydrate]] must either hydrate first
+    * or refuse loudly on such a root — silently serving the hydrated
+    * subset is the wrong-results class the lazy-follower invariant
+    * forbids. */
+  private[lake] def isLazyRoot(root: String): Boolean = {
+    val p = rootPath(root)
+    LakeStore.at(p).isLazyRoot(p) ||
+      LakeStore.within(p).exists { case (r, store) => store.isLazyRoot(r) }
   }
 
-  /** Resolver: table root → the direct-write stage ops when a mounted
-    * store claims it. Same global-hook discipline as placeArtifact:
-    * gate on your own root, delegate the rest. */
-  @volatile private[graft] var remoteStage: Option[Path => Option[RemoteStage]] = None
+  /** Ready a V1 read through the root's store, resolved once: data
+    * files a ranged mount serves IN PLACE map to `grafts3://` URIs
+    * (footer + projected column chunks; Catalyst pushes the projection
+    * into the parquet scan, so the V1 plane transfers column bytes
+    * too); every other data file, and `deletes` (MoR delete files,
+    * small and read whole — the native plane's rule), hydrates. Returns
+    * (per-path URI map, the DataFrameReader options that open those
+    * URIs: the grafts3 FileSystem impl plus the client conf of the
+    * store that minted them — file-source options merge into the
+    * scan's hadoop conf via newHadoopConfWithOptions). */
+  private def prepareV1Read(root: String, dataPaths: Seq[String],
+      deletes: Seq[String] = Seq.empty): (Map[String, String], Map[String, String]) = {
+    val p = rootPath(root)
+    val store = LakeStore.at(p)
+    val remote = store.remoteReads(p, dataPaths)
+    val local = (if (remote.isEmpty) dataPaths else dataPaths.filterNot(remote.contains)) ++ deletes
+    if (local.nonEmpty) store.hydrate(p, local)
+    (remote, if (remote.isEmpty) Map.empty
+      else (GraftRangedFs.confKey +: store.remoteReadConf(p)).toMap)
+  }
 
-  /** Resolve one artifact for a planned read: the remote in-place URI
-    * when a ranged-read mount owns the root AND the file is not
-    * already local (a hydrated copy is the faster read — use it). */
-  private[lake] def remoteReadPath(root: String, rel: String): Option[String] =
-    resolveRemoteRead.flatMap { res =>
-      val nroot = Paths.get(root).toAbsolutePath.normalize
-      if (Files.exists(nroot.resolve(rel))) None else res(nroot, rel)
-    }
-
-  /** DataFrameReader options that let the V1 plane's spark.read.parquet
-    * open `grafts3://` URIs — the V1 twin of the native scan's
-    * stampRangedFsConf: the scheme's FileSystem impl plus the
-    * per-token client conf executor JVMs outside the driver-local
-    * registry rebuild from (file-source options merge into the scan's
-    * hadoop conf via newHadoopConfWithOptions). Only consulted when a
-    * read actually resolved a remote path. */
-  private def rangedReadOptions: Map[String, String] =
-    (GraftRangedFs.confKey +: remoteReadConf.map(_()).getOrElse(Seq.empty)).toMap
-
-  /** Resolve a V1 read's data paths: evicted/never-hydrated files on a
-    * ranged mount read IN PLACE (grafts3:// — footer + projected
-    * column chunks; Catalyst pushes the projection into the parquet
-    * scan, so the V1 plane transfers column bytes too), everything
-    * else reads its local path. Returns (per-path URI map, the paths
-    * that still need hydration). */
-  private def resolveV1Reads(root: String,
-      dataPaths: Seq[String]): (Map[String, String], Seq[String]) =
-    resolveRemoteRead match {
-      case None => (Map.empty, dataPaths)   // no mount: zero per-path work
-      case Some(res) =>
-        // normalize ONCE — a 100k-file plan must not re-normalize the
-        // same root per file; the per-file work is the exists check
-        // (hydrated copies stay local) plus the mount lookup
-        val nroot = Paths.get(root).toAbsolutePath.normalize
-        val remote = dataPaths.flatMap { p =>
-          if (Files.exists(nroot.resolve(p))) None else res(nroot, p).map(p -> _)
-        }.toMap
-        (remote, dataPaths.filterNot(remote.contains))
-    }
-
-  /** Invoked with the table ROOT before the CDC stream source reads
-    * the local log head for a poll: a mounted fleet follower
-    * (GraftS3.mountAutoSync) pulls new remote commits here, making
-    * "follow a remote table live" a single `readStream` with ZERO
-    * manual sync calls — each poll costs one start-after-bounded list
-    * page in the steady state. Same scoping discipline as every
-    * global hook: gate on your own root, delegate the rest. */
-  @volatile private[graft] var beforeLogPoll: Option[Path => Unit] = None
-
-  /** Best-effort targeted pull of one table-relative LOG object for a
-    * follower root, invoked with (table root, relative path) — the
-    * liveness companion of [[beforeLogPoll]] for metadata that can
-    * land remotely with NO new commit slot (a transaction's decision
-    * mirror when the seal crashed before its property commit): the
-    * follower's O(1) idle poll never lists letter-named keys, so
-    * replay pulls exactly the object it needs at the moment it needs
-    * it. Implementations must no-op on roots they don't own and on
-    * remote absence (still in doubt is a valid state, never an
-    * error). */
-  @volatile private[graft] var pullLogObject: Option[(Path, String) => Unit] = None
-
-  /** Invoked with the ABSOLUTE path of a placed artifact being deleted
-    * WITHOUT ever being committed — the lost-race cleanup and the
-    * orphan sweep. A mounted mirror (GraftS3) consumes the path's
-    * pending-upload entry here: without it, an op that places
-    * artifacts but dies before arbitration leaves its path-keyed
-    * futures in the map until unmount, and a long-lived driver
-    * mounting once per process would accumulate one dead entry per
-    * failed op. Same scoping discipline as placeArtifact: gate on your
-    * own root, delegate the rest. */
-  @volatile private[graft] var artifactDiscarded: Option[Path => Unit] = None
-
-  /** Pluggable put-if-absent ARBITER for the commit plane — when
-    * mounted (GraftS3.mountCommitArbiter), the object store decides
-    * slot ownership via conditional PUT BEFORE the local file
-    * materializes, so the store is the source of truth across a fleet
-    * of writers; a remote loss throws the same IllegalStateException
-    * the createLink path does, keeping every slot-race retry loop
-    * unchanged. None (default) = local-FS createLink is the arbiter.
-    * Global hook, suites run in parallel: implementations must scope
-    * on the target path and delegate foreign paths. */
-  @volatile private[graft] var commitArbiter: Option[(Path, String) => Boolean] = None
-
+  /** Atomic put-if-absent, arbitrated first by the target's store. A
+    * rename would silently REPLACE an existing target on POSIX
+    * (rename(2) semantics), losing a concurrent writer's commit — a
+    * hard link both is atomic and fails with
+    * FileAlreadyExistsException when the target exists, which is
+    * exactly the object-store conditional-put this stands in for. */
   private[graft] def writeAtomic(target: Path, content: String): Unit = {
-    commitArbiter.foreach(_(target, content))   // loser throws ISE (412)
+    LakeStore.at(target).arbitrate(target, content)   // loser throws ISE (412)
     val tmp = target.getParent.resolve(s".tmp-${UUID.randomUUID()}")
     Files.writeString(tmp, content)
     try Files.createLink(target, tmp)
@@ -1213,7 +1059,7 @@ object GraftTable {
     }
 
   /** One write op's staging plane — a local `.stage-*` dir (default)
-    * or the direct-to-store remote stage ([[remoteStage]]) — factored
+    * or the store's direct-to-store remote stage — factored
     * so writeDataFiles and the delete-file writers share one
     * write→harvest→publish→cleanup shape regardless of where the
     * bytes land. */
@@ -1260,7 +1106,7 @@ object GraftTable {
       // mount's intra-op backpressure may evict dst the moment its
       // upload confirms — a post-place stat would race that eviction
       val size = Files.size(tmp.resolve(rel))
-      placeArtifact(tmp.resolve(rel), dst)
+      LakeStore.at(dst).place(tmp.resolve(rel), dst)
       size
     }
     def dropStaged(rel: String): Unit = Files.deleteIfExists(tmp.resolve(rel))
@@ -1268,7 +1114,7 @@ object GraftTable {
     def close(): Unit = deleteTree(tmp)
   }
 
-  private final class RemoteStaging(rs: RemoteStage) extends Staging {
+  private final class RemoteStaging(rs: LakeStore.RemoteStage) extends Staging {
     private val uri = rs.newStageUri()
     private val sizes = scala.collection.mutable.Map.empty[String, Long]
     def target: String = uri
@@ -1294,11 +1140,13 @@ object GraftTable {
     def close(): Unit = rs.discard(uri)
   }
 
-  private def newStaging(root: String): Staging =
-    remoteStage.flatMap(_(Paths.get(root).toAbsolutePath.normalize)) match {
+  private def newStaging(root: String): Staging = {
+    val p = rootPath(root)
+    LakeStore.at(p).remoteStage(p) match {
       case Some(rs) => new RemoteStaging(rs)
       case None => new LocalStaging(root, Paths.get(root, s".stage-${UUID.randomUUID()}"))
     }
+  }
 
   /** `binned`: `df` is [[readBinsForRewrite]]'s, each task holding whole
     * bins. The bin is the outermost partition directory, so each bin is
@@ -1546,18 +1394,16 @@ object GraftTable {
         // staged (WAP) snapshot keeps blocking MAIN writes by the WAP
         // discipline (publish or abandon first), but never blocks
         // branch writes.
-        // Remote arbitration (commitArbiter mounted) can surface a 412
-        // BEFORE the winning writer materializes its slot locally —
-        // classifying the occupant from a missing file would downgrade
-        // a retryable append-vs-append race into a spurious conflict.
-        // Wait briefly for the winner's local write; past the bound,
-        // classification falls through to the conservative throw
-        // exactly as before.
-        if (commitArbiter.isDefined) {
-          var waited = 0
-          while (!Files.exists(commitPath(root, slot)) && waited < 50) {
-            Thread.sleep(10); waited += 1
-          }
+        // Remote arbitration can surface a 412 BEFORE the winning
+        // writer materializes its slot locally — classifying the
+        // occupant from a missing file would downgrade a retryable
+        // append-vs-append race into a spurious conflict. Wait briefly
+        // for the winner's local write (a local createLink loss finds
+        // it at once); past the bound, classification falls through to
+        // the conservative throw exactly as before.
+        var waited = 0
+        while (!Files.exists(commitPath(root, slot)) && waited < 50) {
+          Thread.sleep(10); waited += 1
         }
         val occStaged = scala.util.Try(isStagedId(root, slot)).getOrElse(false)
         val occBranch = scala.util.Try(branchInfoOfId(root, slot)).getOrElse(None)
@@ -1580,7 +1426,7 @@ object GraftTable {
           c.adds.foreach { f =>
             val abs = Paths.get(root, f.path)
             Files.deleteIfExists(abs)
-            artifactDiscarded.foreach(_(abs))
+            LakeStore.at(abs).artifactDiscarded(abs)
           }
           if (occStaged) throw new IllegalStateException(
             s"snapshot $slot is a pending staged (WAP) commit: publish it with " +
@@ -2581,7 +2427,7 @@ object GraftTable {
     val adds = staged.files.sortBy(_.path).zipWithIndex.map { case (f, i) =>
       val name = f"$id%010d-$i%05d-${UUID.randomUUID()}.parquet"
       val dst = dataDir(root).resolve(name)
-      placeArtifact(Paths.get(stagedRoot, f.path), dst)
+      LakeStore.at(dst).place(Paths.get(stagedRoot, f.path), dst)
       // rename preserves mtime: a staged write older than the orphan
       // horizon would sit in data/ as an unreferenced "old" file for
       // the move→commit window, where a concurrent
@@ -3899,11 +3745,9 @@ object GraftTable {
       dataPaths: Seq[String], deletes: Seq[(String, Int, Seq[String])]): DataFrame =
     if (dataPaths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else if (deletes.isEmpty) {
-      val (remote, toHydrate) = resolveV1Reads(root, dataPaths)
-      hydrate(root, toHydrate)
-      var rd = spark.read.schema(physReadSchema(schema))
-      if (remote.nonEmpty) rd = rd.options(rangedReadOptions)
-      val raw = rd.parquet(dataPaths.map(p => remote.getOrElse(p, s"$root/$p")): _*)
+      val (remote, opts) = prepareV1Read(root, dataPaths)
+      val raw = spark.read.options(opts).schema(physReadSchema(schema))
+        .parquet(dataPaths.map(p => remote.getOrElse(p, s"$root/$p")): _*)
       if (hasRenames(schema)) logicalProject(raw, schema) else raw
     }
     else liveRowsWithIds(spark, root, schema, dataPaths, deletes)
@@ -3914,18 +3758,13 @@ object GraftTable {
   private def liveRowsWithIds(spark: SparkSession, root: String, schema: StructType,
       dataPaths: Seq[String], deletes: Seq[(String, Int, Seq[String])],
       extraPhys: Seq[StructField] = Seq.empty): DataFrame = {
-    // data files may read IN PLACE on a ranged mount; MoR delete files
-    // always hydrate (small, read whole, shared across readers — the
-    // native plane's rule)
-    val (remote, toHydrate) = resolveV1Reads(root, dataPaths)
-    hydrate(root, toHydrate ++ deletes.map(_._1))
+    val (remote, opts) = prepareV1Read(root, dataPaths, deletes.map(_._1))
     val posD = deletes.filter(_._2 == 1)
     val dvD = deletes.filter(_._2 == 3)
     val eqD = deletes.filter(_._2 == 2)
-    var rd = spark.read
+    var df = spark.read.options(opts)
       .schema(StructType(physReadSchema(schema).fields ++ extraPhys))
-    if (remote.nonEmpty) rd = rd.options(rangedReadOptions)
-    var df = rd.parquet(dataPaths.map(p => remote.getOrElse(p, s"$root/$p")): _*)
+      .parquet(dataPaths.map(p => remote.getOrElse(p, s"$root/$p")): _*)
       .withColumn("_gf_path", col("_metadata.file_path"))
       .withColumn("_gf_pos", col("_metadata.row_index"))
       // anchored regexp over the short file NAME, not the full path:
@@ -5088,7 +4927,7 @@ object GraftTable {
 
   def readStreamAppendOnly(spark: SparkSession, root: String): DataFrame = {
     // The directory stream reads data/ by GLOB, not through the
-    // planned-read choke points, so the hydration hook can never fire
+    // planned-read choke points, so the store's hydration never fires
     // for it — and hydrating once at start would still silently miss
     // every LATER commit's files (the source polls the directory, and
     // a metadata-only follower never materializes new data files
@@ -6120,12 +5959,11 @@ object GraftTable {
     * (best-effort — still-absent everywhere = still in doubt). */
   private def decisionFor(root: String, path: String): Option[String] = {
     val mirror = decisionMirror(root, txnIdOfDecision(path))
-    decisionOf(path).orElse(decisionOf(mirror)).orElse(
-      pullLogObject.flatMap { pull =>
-        pull(Paths.get(root).toAbsolutePath.normalize,
-          s"_graft_log/txn-${txnIdOfDecision(path)}.decision")
-        decisionOf(mirror)
-      })
+    decisionOf(path).orElse(decisionOf(mirror)).orElse {
+      val p = rootPath(root)
+      LakeStore.at(p).pullLogObject(p, s"_graft_log/txn-${txnIdOfDecision(path)}.decision")
+      decisionOf(mirror)
+    }
   }
 
   private def txnCommitted(root: String, c: Commit): Boolean =
@@ -6154,11 +5992,9 @@ object GraftTable {
       // the winner's local decision file exists — wait it out before
       // reading the verdict (the same hazard class commitOrCleanup's
       // occupant classifier guards against).
-      if (commitArbiter.isDefined) {
-        var waited = 0
-        while (decisionOf(decisionPath).isEmpty && waited < 50) {
-          Thread.sleep(10); waited += 1
-        }
+      var waited = 0
+      while (decisionOf(decisionPath).isEmpty && waited < 50) {
+        Thread.sleep(10); waited += 1
       }
       val existing = decisionOf(decisionPath)
       if (!existing.contains(verdict)) throw new IllegalStateException(
@@ -6786,7 +6622,7 @@ object GraftTable {
     }
     // outside the race try: a mirror failure must stay a loud MIRROR
     // failure, never read as a lost checkpoint race
-    if (won) checkpointPlaced.foreach(_(target))
+    if (won) LakeStore.at(target).checkpointPlaced(target)
   }
 
   private def writeCheckpointArtifacts(root: String, snap: Snapshot): Unit = {
@@ -6853,13 +6689,13 @@ object GraftTable {
     if (Files.exists(targetPq)) {
       writeCheckpoint(logDir(root).resolve(s"ckptmeta-$target.json"),
         toJson(Commit(target, None, ts, "checkpoint", Seq.empty, Seq.empty,
-          props + ("graft.ckpt.file-count" ->
-            spark.read.parquet(targetPq.toString).count().toString), schemaJ)))
+          props + ("graft.ckpt.file-count" -> footerRowCount(spark, targetPq).toString),
+          schemaJ)))
       return true
     }
     val tmp = Paths.get(root, s".ckpt-stage-${UUID.randomUUID()}")
     newDf.write.parquet(tmp.toString)
-    val newCount = spark.read.parquet(tmp.toString).count()
+    val newCount = footerRowCount(spark, tmp)
     writeCheckpoint(logDir(root).resolve(s"ckptmeta-$target.json"),
       toJson(Commit(target, None, ts, "checkpoint", Seq.empty, Seq.empty,
         props + ("graft.ckpt.file-count" -> newCount.toString), schemaJ)))
@@ -6873,9 +6709,14 @@ object GraftTable {
     }
     // outside the race try: a mirror failure must stay a loud MIRROR
     // failure, never read as a lost checkpoint race
-    if (won) checkpointPlaced.foreach(_(targetPq))
+    if (won) LakeStore.at(targetPq).checkpointPlaced(targetPq)
     true
   }
+
+  /** Rows of a parquet directory, summed off its part footers. */
+  private def footerRowCount(spark: SparkSession, dir: Path): Long =
+    footerStats(spark, listDir(dir).map(_.toString).filter(_.endsWith(".parquet")))
+      .map(_._2).sum
 
   /** Checkpoints are derived state: a pre-existing one at the same id
     * has identical content, so losing the put-if-absent race is fine. */
@@ -7109,7 +6950,7 @@ object GraftTable {
       unreferencedRels(root, byRel.keys.toSeq).map(byRel)
     if (!dryRun) orphans.foreach { case (_, p) =>
       Files.deleteIfExists(p)
-      artifactDiscarded.foreach(_(p))
+      LakeStore.at(p).artifactDiscarded(p)
     }
     // crashed writers can also leave whole .stage-*/.ckpt-stage-* dirs
     // at the root — sweep them past the same horizon

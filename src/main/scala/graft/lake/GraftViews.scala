@@ -96,7 +96,7 @@ private[graft] object GraftViews {
     Files.createDirectories(p.getParent)
     val tmp = p.getParent.resolve(s".tmp-${UUID.randomUUID()}")
     Files.writeString(tmp, Serialization.write(d))
-    GraftTable.placeArtifact(tmp, p)
+    LakeStore.at(p).place(tmp, p)
   }
 
   def updateProperties(wh: String, ns: Seq[String], name: String,

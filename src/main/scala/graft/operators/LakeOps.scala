@@ -290,7 +290,7 @@ object LakeOps {
     * parquet — so the arbitrated lifecycle carries a full hash
     * oracle. */
   def q108(s: SparkSession, dir: String): DataFrame = {
-    import graft.lake.{GraftS3, GraftS3Server}
+    import graft.lake.{GraftS3, GraftS3Server, LakeStore}
     val creds = GraftS3.Credentials("GRAFTKEY", "graft-secret-key")
     val server = new GraftS3Server("graft", creds)
     try {
@@ -307,16 +307,15 @@ object LakeOps {
         GraftTable.deleteWhere(s, root.toString, col("c_acctbal") < 0)
         // crash between the remote slot win and the local write — only
         // on the log-slot target; checkpoints keep arbitrating normally
-        val prevArb = GraftTable.commitArbiter
-        GraftTable.commitArbiter = Some { (target, content) =>
-          if (target.startsWith(root) &&
-              target.getFileName.toString.matches("\\d{10}\\.json")) {
-            client.putIfAbsent(
-              root.relativize(target).toString.replace(java.io.File.separatorChar, '/'),
-              content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            throw new IllegalArgumentException("q108 simulated crash after remote win")
-          } else prevArb.forall(_(target, content))
-        }
+        val crash = LakeStore.bind(root)(below => new LakeStore.Layer(below) {
+          override def arbitrate(target: java.nio.file.Path, content: String): Unit =
+            if (target.getFileName.toString.matches("\\d{10}\\.json")) {
+              client.putIfAbsent(
+                root.relativize(target).toString.replace(java.io.File.separatorChar, '/'),
+                content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+              throw new IllegalArgumentException("q108 simulated crash after remote win")
+            } else below.arbitrate(target, content)
+        })
         try {
           GraftTable.append(s, root.toString,
             base.filter(col("c_custkey") % 2 === 1 &&
@@ -324,7 +323,7 @@ object LakeOps {
           require(false, "crashed append must not return")
         } catch {
           case e: IllegalArgumentException if e.getMessage.contains("q108") => ()
-        } finally GraftTable.commitArbiter = prevArb
+        } finally crash.close()
         val logDir = root.resolve("_graft_log")
         def localSlots = Files.list(logDir).iterator.asScala
           .map(_.getFileName.toString).filter(_.matches("\\d{10}\\.json")).toSet
@@ -519,7 +518,7 @@ object LakeOps {
     * machine mounts auto-sync (metadata-only) + on-demand hydration
     * and opens ONE `readStream` — no manual sync call anywhere, cold
     * start included (even the stream's schema resolution self-syncs
-    * through the poll hook). The stream drains the first batch, the
+    * through the store's log poll). The stream drains the first batch, the
     * writer commits a second batch MID-STREAM through an injected 503
     * burst, and the feed must surface it exactly once (requires pin
     * count == distinct keys — a double-sync or lost-poll would break

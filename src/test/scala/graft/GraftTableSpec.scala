@@ -355,6 +355,65 @@ class GraftTableSpec extends SparkSpec {
       "live data must survive orphan removal")
   }
 
+  /** Runs `body` and counts the SQL executions that read or wrote
+    * parquet under `root`. Listener delivery is asynchronous but
+    * ordered, so a marker query run afterwards flushes every earlier
+    * event. */
+  private def sqlExecutionsUnder(root: String)(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def under(p: org.apache.hadoop.fs.Path) = p.toUri.getPath.startsWith(root + "/")
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = s"flush-${java.util.UUID.randomUUID()}"
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        if (qe.logical.exists {
+          case w: InsertIntoHadoopFsRelationCommand => under(w.outputPath)
+          case l: LogicalRelation => l.relation match {
+            case h: HadoopFsRelation => h.location.rootPaths.exists(under)
+            case _ => false
+          }
+          case _ => false
+        }) runs.incrementAndGet()
+        if (funcName == "collect" && qe.logical.toString.contains(marker)) flushed.countDown()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(marker)).collect()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never flushed")
+    } finally spark.listenerManager.unregister(listener)
+    runs.get
+  }
+
+  test("a delta checkpoint counts its rows off the staged footers: the write is its one " +
+      "SQL execution") {
+    import spark.implicits._
+    val root = freshRoot("ckpt-footer-count")
+    val df0 = (1L to 60L).map(i => (i, i % 4, s"r$i")).toDF("id", "grp", "v")
+    GraftTable.create(spark, root, df0.schema,
+      Map("write.delete.mode" -> "merge-on-read",
+        "graft.planning.distributed-threshold" -> "1"))
+    GraftTable.append(spark, root, df0.repartition(3))
+    GraftTable.rewriteManifests(root)            // first checkpoint: legacy (no prev)
+    GraftTable.deleteWhere(spark, root, col("grp") === 0)
+    GraftTable.append(spark, root, Seq((100L, 9L, "x")).toDF("id", "grp", "v").coalesce(1))
+    val live = GraftTable.state(root).files.size
+    var t = -1L
+    val runs = sqlExecutionsUnder(root) { t = GraftTable.rewriteManifests(root) }
+    assert(Files.exists(Paths.get(root, "_graft_log", s"ckptfiles-$t.parquet")),
+      "above the threshold the checkpoint is the distributed delta build")
+    assert(runs == 1, s"the checkpoint write is its only SQL execution, saw $runs")
+    val meta = Files.readString(Paths.get(root, "_graft_log", s"ckptmeta-$t.json"))
+    val count = "\"graft\\.ckpt\\.file-count\"\\s*:\\s*\"(\\d+)\"".r
+      .findFirstMatchIn(meta).map(_.group(1).toInt)
+    assert(count.contains(live), s"file count $count vs $live live files")
+  }
+
   test("distributed delta checkpoints are parquet-authoritative and replay without JSON") {
     import spark.implicits._
     val root = freshRoot("ckpt-delta")

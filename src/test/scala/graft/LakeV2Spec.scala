@@ -1,12 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.lake.GraftTable
+import graft.lake.{GraftTable, LakeStore}
 import graft.lake.GraftTable.{Eq, Ge, Gt, Le, Lt}
 import graft.sources.Tables
 
@@ -415,21 +415,18 @@ class LakeV2Spec extends SparkSpec {
     // triggers a concurrent append, so the delete's planned slot is
     // guaranteed taken by the time it commits
     def contend(root: String)(body: => Unit): Unit = {
-      val prev = GraftTable.placeArtifact
       @volatile var fired = false
-      GraftTable.placeArtifact = (src, dst) => {
-        // the hook is GLOBAL and suites run in parallel in one JVM —
-        // act ONLY on this test's own table or a concurrent suite's
-        // placement would consume the injection
-        if (!fired && dst.toString.startsWith(root) &&
-            dst.toString.contains("deletes")) {
-          fired = true
-          GraftTable.append(spark, root,
-            Seq((999L, 9L, "late")).toDF("id", "grp", "v"))
+      val contender = LakeStore.bind(Paths.get(root))(below => new LakeStore.Layer(below) {
+        override def place(src: Path, dst: Path): Unit = {
+          if (!fired && dst.toString.contains("deletes")) {
+            fired = true
+            GraftTable.append(spark, root,
+              Seq((999L, 9L, "late")).toDF("id", "grp", "v"))
+          }
+          below.place(src, dst)
         }
-        prev(src, dst)
-      }
-      try body finally GraftTable.placeArtifact = prev
+      })
+      try body finally contender.close()
     }
     val df0 = (0L until 100L).map(i => (i, i % 5, s"v$i")).toDF("id", "grp", "v")
 
@@ -1864,20 +1861,15 @@ class LakeV2Spec extends SparkSpec {
     // delete) shim so no step can lean on rename atomicity either.
     import spark.implicits._
     val root = freshRoot("fault-inject")
-    val prev = GraftTable.placeArtifact
     val counter = new java.util.concurrent.atomic.AtomicInteger
     @volatile var crashAt = Int.MaxValue
-    GraftTable.placeArtifact = (src, dst) => {
-      // GLOBAL hook + parallel suites in one JVM: count and crash ONLY
-      // this test's own placements, or a concurrent suite's write
-      // would absorb the injected crash (or be killed by it)
-      if (dst.toString.startsWith(root) &&
-          counter.incrementAndGet() == crashAt)
-        throw new java.io.IOException("injected placement crash")
-      if (dst.toString.startsWith(root)) { Files.copy(src, dst); Files.delete(src) }
-      else prev(src, dst)
-      ()
-    }
+    val injector = LakeStore.bind(Paths.get(root))(below => new LakeStore.Layer(below) {
+      override def place(src: Path, dst: Path): Unit = {
+        if (counter.incrementAndGet() == crashAt)
+          throw new java.io.IOException("injected placement crash")
+        Files.copy(src, dst); Files.delete(src)
+      }
+    })
     def arm(k: Int): Unit = { counter.set(0); crashAt = k }
     def disarm(): Unit = crashAt = Int.MaxValue
     try {
@@ -1950,9 +1942,7 @@ class LakeV2Spec extends SparkSpec {
         assert(rows() == oracle, s"$name crash@$k: retry must converge")
         vtag += 1
       }
-    } finally {
-      GraftTable.placeArtifact = prev
-    }
+    } finally injector.close()
   }
 
   test("full lifecycle through a no-rename (put-style copy+delete) placement shim") {
@@ -1963,16 +1953,16 @@ class LakeV2Spec extends SparkSpec {
     // atomicity for correctness, this composed run would corrupt state
     // or double-apply — the reads below would diverge from the oracle.
     import spark.implicits._
-    val prev = GraftTable.placeArtifact
+    val root = freshRoot("no-rename")
     val placed = new java.util.concurrent.atomic.AtomicInteger
-    GraftTable.placeArtifact = (src, dst) => {
-      Files.copy(src, dst)
-      Files.delete(src)
-      placed.incrementAndGet()
-      ()
-    }
+    val shim = LakeStore.bind(Paths.get(root))(below => new LakeStore.Layer(below) {
+      override def place(src: Path, dst: Path): Unit = {
+        Files.copy(src, dst)
+        Files.delete(src)
+        placed.incrementAndGet()
+      }
+    })
     try {
-      val root = freshRoot("no-rename")
       val df0 = (0L until 200L).map(i => (i, s"v${i % 9}")).toDF("id", "v")
       GraftTable.create(spark, root, df0.schema,
         Map("write.delete.mode" -> "merge-on-read"))
@@ -1995,6 +1985,6 @@ class LakeV2Spec extends SparkSpec {
       assert(placed.get() > 5, s"the shim must have carried the writes (${placed.get()})")
       // time travel across the composed history still replays cleanly
       assert(GraftTable.read(spark, root, Some(1L)).count() == 200L)
-    } finally GraftTable.placeArtifact = prev
+    } finally shim.close()
   }
 }

@@ -281,16 +281,15 @@ class NativeScanSpec extends SparkSpec {
     GraftTable.deleteEqualityMoR(spark, root, Seq("v3").toDF("v"))      // equality
     val oracle = (0L until 200L).filter(i => i % 7 != 0 && i % 10 != 3)
 
-    // counts hydration dispatches for this table only; every other
-    // root passes through to whatever hook was installed before
-    val rootPath = java.nio.file.Paths.get(root).toAbsolutePath.normalize
+    // counts hydration dispatches for this table's root
     val dispatches = new java.util.concurrent.atomic.AtomicInteger
-    val prev = GraftTable.hydrateFiles
-    val counting: (java.nio.file.Path, Seq[String]) => Unit = { (r, rels) =>
-      if (r.startsWith(rootPath)) dispatches.incrementAndGet()
-      prev.foreach(_(r, rels))
-    }
-    GraftTable.hydrateFiles = Some(counting)
+    val counting = graft.lake.LakeStore.bind(java.nio.file.Paths.get(root))(below =>
+      new graft.lake.LakeStore.Layer(below) {
+        override def hydrate(r: java.nio.file.Path, rels: Seq[String]): Unit = {
+          dispatches.incrementAndGet()
+          below.hydrate(r, rels)
+        }
+      })
     try {
       val q = spark.sql("SELECT id, v FROM graft.nsc.once")
       val sc = nativeScanOf(q).get
@@ -306,8 +305,7 @@ class NativeScanSpec extends SparkSpec {
       val q2 = spark.sql("SELECT id FROM graft.nsc.once WHERE id >= 100")
       assert(q2.collect().map(_.getLong(0)).sorted.toSeq == oracle.filter(_ >= 100))
       assert(dispatches.get == 2, s"one hydration per query, saw ${dispatches.get}")
-    } finally
-      if (GraftTable.hydrateFiles.exists(_ eq counting)) GraftTable.hydrateFiles = prev
+    } finally counting.close()
   }
 
   test("storage-partitioned join: co-partitioned graft tables join with no shuffle") {

@@ -133,23 +133,14 @@ class NewQueryPlanSpec extends SparkSpec {
       "q65_lake_spec_evolve", "q66_lake_write_ordered", "q67_lake_wap",
       "q68_dedup_incremental", "q81_lake_partitions", "q82_lake_ndv",
       "q85_lake_row_lineage", "q87_lake_add_files", "q105_lake_catalog_branch",
-      // q108/q109 additionally mount (and q108 swaps) the GLOBAL
-      // commit arbiter for their fault injections — running them here
-      // mid-parallel-suite would clobber S3ObjectStoreSpec's mounted
-      // hook chain (the r13 unscoped-hook flake class), on top of the
-      // lifecycle cost
+      // q108–q114 each run a whole S3 lifecycle against an in-JVM
+      // object server at DataFrame-construction time (mounts, commits,
+      // crash recovery, syncs, hydration) — excluded for their COST,
+      // like the lifecycle queries above; each binds its mounts on its
+      // own scratch root
       "q108_lake_s3", "q109_lake_s3_fleet",
-      // q110/q111/q112 mount the GLOBAL hydration/auto-sync/ranged-read
-      // hooks for their lazy-follower lifecycles — same
-      // mid-parallel-suite hazard
       "q110_lake_s3_lazy", "q111_lake_s3_follow", "q112_lake_s3_inplace",
-      // q113 mounts the GLOBAL arbiter/mirror/budgeted-hydration trio
-      // for its bounded-writer lifecycle — same mid-parallel-suite
-      // hazard
       "q113_lake_s3_bounded",
-      // q114 mounts the GLOBAL arbiter/DIRECT-WRITE-mirror/ranged-read
-      // trio (and swaps the remoteStage hook) for its zero-local-disk
-      // lifecycle — same mid-parallel-suite hazard
       "q114_lake_s3_direct",
       // q22 executes its accuracy self-pins (two aggregation jobs) at
       // DataFrame-construction time — excluded for the same COST

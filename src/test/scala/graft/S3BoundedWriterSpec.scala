@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.lake.{GraftS3, GraftS3Server, GraftTable}
+import graft.lake.{GraftS3, GraftS3Server, GraftTable, LakeStore}
 import graft.lake.GraftS3.Credentials
 
 /** Writer-side bounded disk — the WRITE twin of the lazy follower
@@ -497,15 +497,15 @@ class S3BoundedWriterSpec extends SparkSpec {
     Files.createDirectories(wh)
     // the commit-boundary EVICTION must never be what achieves zero
     // here: with direct-write the data bytes never land at all, which
-    // the placeArtifact counter proves (install BEFORE the mounts so
-    // the dispatch chain captures it; guarded restore)
-    val prevPlace = GraftTable.placeArtifact
+    // a placement counter bound on the warehouse proves (the mounts'
+    // placements pass down to it)
     val placed = new java.util.concurrent.atomic.AtomicInteger()
-    val wrapper: (Path, Path) => Unit = (src, dst) => {
-      if (dst.toAbsolutePath.normalize.startsWith(wh)) placed.incrementAndGet()
-      prevPlace(src, dst)
-    }
-    GraftTable.placeArtifact = wrapper
+    val counter = LakeStore.bind(wh)(below => new LakeStore.Layer(below) {
+      override def place(src: Path, dst: Path): Unit = {
+        placed.incrementAndGet()
+        below.place(src, dst)
+      }
+    })
     val unA = GraftS3.mountCommitArbiter(wh, c)
     val unM = GraftS3.mountArtifactMirror(wh, c, directWrite = true)
     // budget 0 stays as the belt to direct-write's suspenders;
@@ -545,13 +545,7 @@ class S3BoundedWriterSpec extends SparkSpec {
         "the read must serve through the grafts3 scheme")
       assert(localData == 0L, s"after the read: $localData local bytes")
       assert(em.rejected.get == 0)
-    } finally {
-      // mounts first (they restore the wrapper as their prev), THEN the
-      // guarded wrapper restore — the reverse order would leave the
-      // wrapper permanently chained
-      unH.close(); unM.close(); unA.close(); em.close()
-      if (GraftTable.placeArtifact eq wrapper) GraftTable.placeArtifact = prevPlace
-    }
+    } finally { unH.close(); unM.close(); unA.close(); counter.close(); em.close() }
   }
 
   test("the pure-conf ZERO-LOCAL-LAKE writer: budget 0 + s3.read-in-place on the " +

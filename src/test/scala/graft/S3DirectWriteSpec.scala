@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.lake.{GraftS3, GraftS3Server, GraftTable}
+import graft.lake.{GraftS3, GraftS3Server, GraftTable, LakeStore}
 import graft.lake.GraftS3.Credentials
 
 /** Task-side direct-to-store streaming write (reference:
@@ -18,8 +18,8 @@ import graft.lake.GraftS3.Credentials
   * tasks stream their output as multipart parts, the committer walks a
   * remote `_temporary` tree, and GraftTable publishes survivors by
   * SERVER-SIDE copy. A data file never lands on any local disk, not
-  * even pre-evict: `placeArtifact` simply never fires for it, which a
-  * counting wrapper proves alongside the walked byte totals. */
+  * even pre-evict: the store's `place` simply never fires for it, which
+  * a counting layer proves alongside the walked byte totals. */
 class S3DirectWriteSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,30 +29,29 @@ class S3DirectWriteSpec extends SparkSpec {
     * localDataBytes and padRows live in SparkSpec (one shared copy). */
   private def rows(n: Int, seed: Long) = padRows(n, seed)
 
-  /** Count placeArtifact invocations: `local` under `root` (must stay
-    * 0 for a direct-write table — the zero-transient-landing claim)
-    * and `any` anywhere (the liveness control: a vacuously-zero
-    * counter proves nothing). Installed BEFORE the mounts so the
-    * dispatch chain captures it; restore is guarded so a hook
-    * installed over us is never clobbered. */
+  /** Count placements: `local` under `root` (must stay 0 for a
+    * direct-write table — the zero-transient-landing claim) and `any`
+    * under root's parent, the suite's scratch dir (the liveness
+    * control: a vacuously-zero counter proves nothing). Bound on the
+    * parent, under every mount on `root`: the mounts pass their
+    * placements down to it. */
   private def withPlacedCounter[T](root: Path)(
       body: (AtomicInteger, AtomicInteger) => T): T = {
-    val prev = GraftTable.placeArtifact
     val local = new AtomicInteger()
     val any = new AtomicInteger()
     val nroot = root.toAbsolutePath.normalize
-    val wrapper: (Path, Path) => Unit = (src, dst) => {
-      any.incrementAndGet()
-      if (dst.toAbsolutePath.normalize.startsWith(nroot)) local.incrementAndGet()
-      prev(src, dst)
-    }
-    GraftTable.placeArtifact = wrapper
-    try body(local, any)
-    finally if (GraftTable.placeArtifact eq wrapper) GraftTable.placeArtifact = prev
+    val counter = LakeStore.bind(nroot.getParent)(below => new LakeStore.Layer(below) {
+      override def place(src: Path, dst: Path): Unit = {
+        any.incrementAndGet()
+        if (dst.startsWith(nroot)) local.incrementAndGet()
+        below.place(src, dst)
+      }
+    })
+    try body(local, any) finally counter.close()
   }
 
   test("a full partitioned lifecycle — multi-file appends, CoW delete, compaction — " +
-      "commits with ZERO transient local data bytes: placeArtifact never fires, " +
+      "commits with ZERO transient local data bytes: no artifact is placed locally, " +
       "parts stream multipart, publishes are server-side copies") {
     val em = new GraftS3Server("graft-direct-w", creds)
     // small parts so the gate-sized chunks genuinely exercise the

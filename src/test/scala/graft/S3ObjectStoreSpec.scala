@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.lake.{GraftS3, GraftTable}
+import graft.lake.{GraftS3, GraftTable, LakeStore}
 import graft.lake.GraftS3.{Credentials, SigV4}
 
 /** The S3-protocol commit plane: SigV4 signing pinned against AWS's
@@ -123,22 +123,21 @@ class S3ObjectStoreSpec extends SparkSpec {
       // crash only on the COMMIT write — append may also checkpoint
       // (ckptmeta through the same writeAtomic door), which must keep
       // arbitrating normally for the scenario to target the log slot
-      val prevArb = GraftTable.commitArbiter
-      GraftTable.commitArbiter = Some { (target, content) =>
-        if (target.startsWith(root) &&
-            target.getFileName.toString.matches("\\d{10}\\.json")) {
-          em.client.putIfAbsent(
-            root.relativize(target).toString.replace(java.io.File.separatorChar, '/'),
-            content.getBytes(UTF_8))
-          throw new RuntimeException("simulated crash after remote win")
-        } else prevArb.forall(_(target, content))
-      }
-      val crashEx = intercept[RuntimeException] {
-        GraftTable.append(spark, root.toString, Seq((9L, "crashed")).toDF("id", "v"))
-      }
+      val crash = LakeStore.bind(root)(below => new LakeStore.Layer(below) {
+        override def arbitrate(target: Path, content: String): Unit =
+          if (target.getFileName.toString.matches("\\d{10}\\.json")) {
+            em.client.putIfAbsent(
+              root.relativize(target).toString.replace(java.io.File.separatorChar, '/'),
+              content.getBytes(UTF_8))
+            throw new RuntimeException("simulated crash after remote win")
+          } else below.arbitrate(target, content)
+      })
+      val crashEx =
+        try intercept[RuntimeException] {
+          GraftTable.append(spark, root.toString, Seq((9L, "crashed")).toDF("id", "v"))
+        } finally crash.close()
       assert(crashEx.getMessage == "simulated crash after remote win",
         s"unexpected exception: $crashEx")
-      GraftTable.commitArbiter = prevArb
       val localIds = Files.list(logDir).iterator.asScala.map(_.getFileName.toString)
         .filter(isSlot).toSet
       val remoteIds = em.client.list("_graft_log/").map(_.split('/').last)
@@ -304,27 +303,27 @@ class S3ObjectStoreSpec extends SparkSpec {
     val em = new graft.lake.GraftS3Server("graft-slow", creds)
     val root = Paths.get(scratchRoot("s3-spec", "slow"))
     val unA = GraftS3.mountCommitArbiter(root, em.client)
-    val mounted = GraftTable.commitArbiter
+    var racer: AutoCloseable = () => ()
     try {
       GraftTable.create(spark, root.toString,
         Seq((0L, "x")).toDF("id", "v").schema,
         Map("commit.retry.num-retries" -> "5"))
       val winnerWon = new CountDownLatch(1)
       val loserLost = new CountDownLatch(1)
-      GraftTable.commitArbiter = Some { (target, content) =>
-        val isSlot = target.startsWith(root) &&
-          target.getFileName.toString.matches("\\d{10}\\.json")
-        if (isSlot && Thread.currentThread().getName == "slowA") {
-          val r = mounted.forall(_(target, content))   // remote win
-          winnerWon.countDown()
-          loserLost.await(20, TimeUnit.SECONDS)        // park pre-local-write
-          Thread.sleep(150)
-          r
-        } else if (isSlot) {
-          try mounted.forall(_(target, content))
-          catch { case e: Throwable => loserLost.countDown(); throw e }
-        } else mounted.forall(_(target, content))
-      }
+      racer = LakeStore.bind(root)(below => new LakeStore.Layer(below) {
+        override def arbitrate(target: Path, content: String): Unit = {
+          val isSlot = target.getFileName.toString.matches("\\d{10}\\.json")
+          if (isSlot && Thread.currentThread().getName == "slowA") {
+            below.arbitrate(target, content)       // remote win
+            winnerWon.countDown()
+            loserLost.await(20, TimeUnit.SECONDS)  // park pre-local-write
+            Thread.sleep(150)
+          } else if (isSlot) {
+            try below.arbitrate(target, content)
+            catch { case e: Throwable => loserLost.countDown(); throw e }
+          } else below.arbitrate(target, content)
+        }
+      })
       val a = new Thread(() => GraftTable.append(spark, root.toString,
         Seq((2L, "slow")).toDF("id", "v")), "slowA")
       a.start()
@@ -337,10 +336,7 @@ class S3ObjectStoreSpec extends SparkSpec {
         .as[(Long, String)].collect().toSet == Set((2L, "slow"), (3L, "fast")),
         "both racers' appends must land")
       assert(em.rejected.get == 0)
-    } finally {
-      GraftTable.commitArbiter = mounted
-      unA.close(); em.close()
-    }
+    } finally { racer.close(); unA.close(); em.close() }
   }
 
   test("lost-response idempotency: a conditional PUT whose 200 is dropped converges to ONE " +
@@ -831,7 +827,8 @@ class S3ObjectStoreSpec extends SparkSpec {
       def place(root: java.nio.file.Path, name: String): Unit = {
         val src = root.resolve(s".stage-$name")
         Files.write(src, name.getBytes(UTF_8))
-        GraftTable.placeArtifact(src, root.resolve(s"data/$name"))
+        val dst = root.resolve(s"data/$name")
+        LakeStore.at(dst).place(src, dst)
       }
       em.putDelayMs = 150
       place(rootA, "0000000001-a.parquet")
@@ -953,7 +950,8 @@ class S3ObjectStoreSpec extends SparkSpec {
       val name = "0000000099-00000-deadbeef.parquet"
       val src = root.resolve(s".stage-$name")
       Files.write(src, Array.fill[Byte](64)(7))
-      GraftTable.placeArtifact(src, root.resolve(s"data/$name"))
+      val dst = root.resolve(s"data/$name")
+      LakeStore.at(dst).place(src, dst)
       assert(GraftS3.pendingUploadsUnder(root) >= 1,
         "the abandoned placement must be pending")
       // the sweep that deletes the staged file also consumes its entry
@@ -1037,21 +1035,25 @@ class S3ObjectStoreSpec extends SparkSpec {
     GraftTable.append(spark, rootB.toString, Seq((1L, "b")).toDF("id", "v"))
     assert(c.list("_graft_log/").exists(_.matches("_graft_log/\\d{10}\\.json")),
       "B must still arbitrate after A's non-LIFO close")
-    // a custom wrapper (the q108 crash-injection pattern) captures the
-    // installed hook and restores it — across a mount cycle it must
-    // see the SAME dispatcher on both sides, and a fresh mount during
-    // the wrapper's tenure must not capture the dispatcher as its prev
-    val wrapped = GraftTable.commitArbiter
+    // a wrapping layer (the q108 crash-injection pattern) bound over
+    // the mount intercepts and passes down to it; closing it leaves
+    // the mount arbitrating
     @volatile var sawThrough = 0
-    GraftTable.commitArbiter = Some { (t, content) =>
-      // gate the count on OUR root (CLAUDE.md hook discipline): a
-      // parallel suite's commit must not be able to satisfy the assert
-      if (t.startsWith(rootB)) sawThrough += 1
-      wrapped.forall(_(t, content))
-    }
+    val wrapper = LakeStore.bind(rootB)(below => new LakeStore.Layer(below) {
+      override def arbitrate(t: Path, content: String): Unit = {
+        sawThrough += 1
+        below.arbitrate(t, content)
+      }
+    })
+    val slotsBefore = c.list("_graft_log/").size
     GraftTable.append(spark, rootB.toString, Seq((2L, "b2")).toDF("id", "v"))
+    wrapper.close()
     assert(sawThrough > 0, "the wrapper must intercept")
-    GraftTable.commitArbiter = wrapped
+    assert(c.list("_graft_log/").size > slotsBefore,
+      "the wrapped commit still arbitrates through the mount below")
+    GraftTable.append(spark, rootB.toString, Seq((3L, "b3")).toDF("id", "v"))
+    assert(c.list("_graft_log/").size > slotsBefore + 1,
+      "closing the wrapper leaves the mount arbitrating")
     mB.close()
     // after the LAST close the arbiter is fully unmounted: local-only
     // tables commit without touching the store

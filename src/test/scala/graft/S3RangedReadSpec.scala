@@ -778,45 +778,69 @@ class S3RangedReadSpec extends SparkSpec {
     } finally { em.ignoreRanges = false; em.close() }
   }
 
-  test("ranged unmount restores the resolver and its conf hook as a PAIR — a chained " +
-      "prior resolver never loses its executor-side conf (r17 ADVICE)") {
-    val em = new GraftS3Server("graft-ranged-prev", creds)
+  test("a scan ships only its own root's ranged-read credentials: two read-in-place " +
+      "mounts with different keys, and a scan of A carries none of B's") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+    val pid = ProcessHandle.current().pid()
+    val credsA = Credentials("SCOPEKEYA", "scope-secret-a")
+    val credsB = Credentials("SCOPEKEYB", "scope-secret-b")
+    val emA = new GraftS3Server("graft-scope-a", credsA)
+    val emB = new GraftS3Server("graft-scope-b", credsB)
+    val whA = Paths.get(scratchRoot("s3-ranged", s"scope-a-$pid"))
+    val whB = Paths.get(scratchRoot("s3-ranged", s"scope-b-$pid"))
+    // writer planes plus a read-in-place mount on each warehouse, then
+    // every data file evicted: reads of either table go over its store
+    val mounts = Seq((whA, emA.client), (whB, emB.client)).flatMap { case (wh, c) =>
+      Files.createDirectories(wh)
+      Seq(GraftS3.mountCommitArbiter(wh, c), GraftS3.mountArtifactMirror(wh, c),
+        GraftS3.mountOnDemandHydration(wh, c, readInPlace = true))
+    }
     try {
-      val whY = Paths.get(scratchRoot("s3-ranged",
-        s"prev-${ProcessHandle.current().pid()}"))
-      Files.createDirectories(whY)
-      // benign-by-construction chained hooks: the resolver resolves
-      // nothing and the conf ships one inert marker key, so even a
-      // window overlapping a concurrent suite's ranged mount leaves
-      // harmless residue
-      val prevResolve: (java.nio.file.Path, String) => Option[String] = (_, _) => None
-      val prevConf: () => Seq[(String, String)] =
-        () => Seq("graft.test.prev-conf-marker" -> "1")
-      val savedResolve = GraftTable.resolveRemoteRead
-      val savedConf = GraftTable.remoteReadConf
-      GraftTable.resolveRemoteRead = Some(prevResolve)
-      GraftTable.remoteReadConf = Some(prevConf)
-      try {
-        val un = GraftS3.mountOnDemandHydration(whY, em.client, readInPlace = true)
-        un.close()
-        val resolverRestored = GraftTable.resolveRemoteRead.exists(_ eq prevResolve)
-        val confRestored = GraftTable.remoteReadConf.exists(_ eq prevConf)
-        // race-tolerant: a concurrent suite's live ranged mount keeps
-        // the dispatch installed (then NEITHER restores — correct); the
-        // r17 bug was the INCONSISTENT half-restore
-        assert(!resolverRestored || confRestored,
-          "restoring the resolver while clobbering its conf hook to None " +
-            "strands a chained resolver's executor conf")
-      } finally {
-        // restore ONLY if the hooks still hold our fakes: blindly
-        // writing saved values would clobber a dispatch a concurrent
-        // suite's ranged mount legitimately re-installed (the fakes
-        // then linger as its captured prev — benign by construction)
-        if (GraftTable.resolveRemoteRead.exists(_ eq prevResolve))
-          GraftTable.resolveRemoteRead = savedResolve
-        if (GraftTable.remoteReadConf.exists(_ eq prevConf))
-          GraftTable.remoteReadConf = savedConf
+      val df = (1L to 200L).map(i => (i, s"v$i")).toDF("id", "v")
+      Seq((whA, emA.client), (whB, emB.client)).foreach { case (wh, c) =>
+        val t = wh.resolve("ns").resolve("t")
+        GraftTable.create(spark, t.toString, df.schema)
+        GraftTable.append(spark, t.toString, df.coalesce(1))
+        assert(GraftS3.evictLocalData(t, c, "ns/t").nonEmpty)
       }
-    } finally em.close()
+      def secrets(entries: Iterable[(String, String)]): Set[String] =
+        entries.filter(_._1.startsWith("fs.grafts3.")).map(_._2).toSet
+      def assertScoped(entries: Iterable[(String, String)], plane: String): Unit = {
+        val vals = secrets(entries)
+        assert(vals.contains(credsA.accessKey) && vals.contains(credsA.secretKey),
+          s"the $plane scan of A carries A's client conf")
+        assert(!vals.contains(credsB.accessKey) && !vals.contains(credsB.secretKey),
+          s"the $plane scan of A must not carry B's credentials")
+      }
+
+      // native plane: the hadoop conf its reader factory broadcasts
+      spark.conf.set("spark.sql.catalog.graft_scope", "graft.lake.GraftSparkCatalog")
+      spark.conf.set("spark.sql.catalog.graft_scope.warehouse", whA.toString)
+      val q = spark.sql("SELECT id, v FROM graft_scope.ns.t")
+      assert(q.count() == 200L)
+      val scan = q.queryExecution.optimizedPlan.collectFirst {
+        case r: DataSourceV2ScanRelation => r.scan
+      }.getOrElse(fail("the catalog read must plan a native scan"))
+      def broadcastConf(f: Any): Option[org.apache.hadoop.conf.Configuration] = f match {
+        case p: ParquetPartitionReaderFactory => Some(p.broadcastedConf.value.value)
+        case p: Product => p.productIterator.flatMap(broadcastConf).nextOption()
+        case _ => None
+      }
+      val conf = broadcastConf(scan.toBatch.createReaderFactory())
+        .getOrElse(fail("the reader factory must carry a broadcast hadoop conf"))
+      assertScoped(conf.iterator().asScala.map(e => e.getKey -> e.getValue).toSeq, "native")
+
+      // V1 plane: the reader options of the parquet relation
+      val v1 = GraftTable.read(spark, whA.resolve("ns").resolve("t").toString)
+      assert(v1.count() == 200L)
+      val opts = v1.queryExecution.analyzed.collect {
+        case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+          l.relation.asInstanceOf[HadoopFsRelation].options
+      }.flatten
+      assertScoped(opts, "V1")
+      assert(emA.rejected.get == 0 && emB.rejected.get == 0)
+    } finally { mounts.reverse.foreach(_.close()); emA.close(); emB.close() }
   }
 }
