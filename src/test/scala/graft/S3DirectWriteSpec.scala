@@ -51,7 +51,7 @@ class S3DirectWriteSpec extends SparkSpec {
   }
 
   test("a full partitioned lifecycle — multi-file appends, CoW delete, compaction — " +
-      "commits with ZERO transient local data bytes: no artifact is placed locally, " +
+      "commits with ZERO transient local data bytes: placeArtifact never fires, " +
       "parts stream multipart, publishes are server-side copies") {
     val em = new GraftS3Server("graft-direct-w", creds)
     // small parts so the gate-sized chunks genuinely exercise the
