@@ -136,7 +136,8 @@ object GraftStats {
     val idx = GraftTable.listDir(GraftTable.logDir(root))
       .count(_.getFileName.toString.startsWith("colstats-"))
     val name = s"colstats-$sid-$idx.parquet"
-    out.write.mode("overwrite").parquet(GraftTable.logDir(root).resolve(name).toString)
+    out.write.mode("overwrite").options(GraftLocalFs.writerOptions)
+      .parquet(GraftTable.logDir(root).resolve(name).toString)
     val newId = GraftTable.setProperties(root, Map(
       statsFileProp -> name,
       statsSnapshotProp -> sid.toString,

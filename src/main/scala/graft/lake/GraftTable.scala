@@ -912,6 +912,24 @@ object GraftTable {
     }
   }
 
+  /** A parquet file's own schema, off its footer: the Spark schema its
+    * writer recorded, else the converted parquet schema — what Spark's
+    * schema inference would derive, without an inference job. */
+  private def parquetSchema(spark: SparkSession, p: String): StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
+      ParquetToSparkSchemaConverter}
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p), spark.sessionState.newHadoopConf()))
+    try {
+      val meta = reader.getFileMetaData
+      Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+          .convert(meta.getSchema))
+    } finally reader.close()
+  }
+
   private def readFooter(p: String,
       conf: org.apache.hadoop.conf.Configuration): (String, Long, Map[String, ColStats]) = {
         import org.apache.parquet.hadoop.ParquetFileReader
@@ -1067,14 +1085,20 @@ object GraftTable {
     /** Where the Spark write job targets. */
     def target: String
     /** DataFrameWriter options the write job needs (remote: fs impl +
-      * client conf + committer algorithm; local: none). */
+      * client conf + committer algorithm; local: [[GraftLocalFs]]'s
+      * uncached raw FS, no `_SUCCESS` marker). */
     def writerOptions: Map[String, String]
     /** Staged parquet parts after the job: (stage-relative path with
       * '/' separators, size). */
     def parts(): Seq[(String, Long)]
     /** Absolute path/URI of one staged part (footer reads). */
     def uriOf(rel: String): String
-    def footerConf(spark: SparkSession): org.apache.hadoop.conf.Configuration
+    /** Hadoop conf footer reads of staged parts resolve through. */
+    def footerConf(spark: SparkSession): org.apache.hadoop.conf.Configuration = {
+      val c = spark.sessionState.newHadoopConf()
+      writerOptions.foreach { case (k, v) => c.set(k, v) }
+      c
+    }
     /** Publish one part at its final table-relative path; returns the
       * final size. */
     def publish(rel: String, tableRel: String): Long
@@ -1086,7 +1110,7 @@ object GraftTable {
 
   private final class LocalStaging(root: String, tmp: Path) extends Staging {
     def target: String = tmp.toString
-    def writerOptions: Map[String, String] = Map.empty
+    def writerOptions: Map[String, String] = GraftLocalFs.writerOptions
     def parts(): Seq[(String, Long)] = {
       // recursive walk: partitioned writes nest under _gp_0=v0/…
       def walk(dir: Path): Seq[Path] = listDir(dir).flatMap { p =>
@@ -1097,8 +1121,6 @@ object GraftTable {
         .replace(java.io.File.separatorChar, '/'), Files.size(p)))
     }
     def uriOf(rel: String): String = tmp.resolve(rel).toString
-    def footerConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
-      spark.sessionState.newHadoopConf()
     def publish(rel: String, tableRel: String): Long = {
       val dst = Paths.get(root).resolve(tableRel)
       Files.createDirectories(dst.getParent)
@@ -1110,7 +1132,7 @@ object GraftTable {
       size
     }
     def dropStaged(rel: String): Unit = Files.deleteIfExists(tmp.resolve(rel))
-    // clean the stage dir (crc/_SUCCESS leftovers + partition dirs)
+    // clean the stage dir (partition dirs, an aborted job's leftovers)
     def close(): Unit = deleteTree(tmp)
   }
 
@@ -1125,11 +1147,6 @@ object GraftTable {
       ps
     }
     def uriOf(rel: String): String = rs.stagedUri(uri, rel)
-    def footerConf(spark: SparkSession): org.apache.hadoop.conf.Configuration = {
-      val c = spark.sessionState.newHadoopConf()
-      rs.conf.foreach { case (k, v) => c.set(k, v) }
-      c
-    }
     // server-side copy preserves bytes, so the staged size IS the
     // final size — no post-publish stat round-trip
     def publish(rel: String, tableRel: String): Long = {
@@ -2967,7 +2984,8 @@ object GraftTable {
             val aggs = cols.flatMap(c => Seq(min(col(c)).cast("string").as(s"mn_$c"),
               max(col(c)).cast("string").as(s"mx_$c")))
             hydrate(root, Seq(d.path))   // direct read — lazy-follower discipline
-            val r = spark.read.parquet(s"$root/${d.path}")
+            val p = s"$root/${d.path}"
+            val r = spark.read.schema(parquetSchema(spark, p)).parquet(p)
               .agg(aggs.head, aggs.tail: _*).collect().head
             cols.flatMap { c =>
               Option(r.getAs[String](s"mn_$c")).map(Ge(c, _)).toSeq ++
@@ -3827,7 +3845,12 @@ object GraftTable {
                 "COLUMN, or run rewrite_equality_deletes before dropping " +
                 "delete-key columns"))
         }
-        val keys = spark.read.parquet(files.map(f => s"$root/${f._1}"): _*)
+        // one commit wrote the group's key files: one driver footer read
+        // gives their at-write key types (never the read schema's — a
+        // key written as INT stays INT after a widening), and the read
+        // then runs no schema-inference job
+        val paths = files.map(f => s"$root/${f._1}")
+        val keys = spark.read.schema(parquetSchema(spark, paths.head)).parquet(paths: _*)
           .select(cols.map(c => col(c).as(s"_gfk_$c")): _*).distinct()
         val cond = cols.zip(liveCols).map { case (c, lc) =>
           df(lc) <=> keys(s"_gfk_$c") }.reduce(_ && _) &&
@@ -6611,7 +6634,7 @@ object GraftTable {
     val target = logDir(root).resolve(s"ckptfiles-$id.parquet")
     if (Files.exists(target)) return
     val tmp = Paths.get(root, s".ckpt-stage-${UUID.randomUUID()}")
-    df.write.parquet(tmp.toString)
+    df.write.options(GraftLocalFs.writerOptions).parquet(tmp.toString)
     var won = false
     try { Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE); won = true }
     catch { case _: java.nio.file.FileAlreadyExistsException |
@@ -6694,7 +6717,7 @@ object GraftTable {
       return true
     }
     val tmp = Paths.get(root, s".ckpt-stage-${UUID.randomUUID()}")
-    newDf.write.parquet(tmp.toString)
+    newDf.write.options(GraftLocalFs.writerOptions).parquet(tmp.toString)
     val newCount = footerRowCount(spark, tmp)
     writeCheckpoint(logDir(root).resolve(s"ckptmeta-$target.json"),
       toJson(Commit(target, None, ts, "checkpoint", Seq.empty, Seq.empty,
