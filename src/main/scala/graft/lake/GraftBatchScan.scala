@@ -31,6 +31,9 @@ import org.apache.spark.util.SerializableConfiguration
   * GraftTable.planNativeScan; the rare remaining shapes (non-hashable
   * or renamed equality-delete keys, retired-name reuse) fall back to
   * the V1 relation plane, which owns those read-time semantics.
+  * In bin mode ([[GraftBinScanProvider]], compaction's input) each bin
+  * is one input partition of whole files in bin-pack order, and the
+  * reader can also serve each row's file ordinal and row index.
   *
   * Two scale features live here that the V1 bridge structurally
   * cannot express (reference: the Iceberg runtime the guide's
@@ -98,6 +101,7 @@ private[graft] class GraftBatchScan(
     * carrying a tuple value per key, key values round-trippable from
     * their rendered text. */
   private val spjActive: Boolean =
+    plan.bins.isEmpty &&
     spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean &&
       currentSpec.nonEmpty && keyTypes.length == currentSpec.length &&
       initialEntries.nonEmpty &&
@@ -125,7 +129,8 @@ private[graft] class GraftBatchScan(
     val preds = if (pushedFilters.isEmpty) "" else
       s", pushed: [${pushedFilters.mkString(", ")}]"
     val mor = if (plan.deletes.isEmpty) "" else s", deletes=${plan.deletes.size}"
-    s"GraftBatchScan $tableName files=${currentEntries.size}/${initialEntries.size}$mor$preds"
+    val bins = if (plan.bins.isEmpty) "" else s", bins=${plan.bins.size}"
+    s"GraftBatchScan $tableName files=${currentEntries.size}/${initialEntries.size}$bins$mor$preds"
   }
 
   /** Live MoR delete files this scan serves natively (spec observability). */
@@ -190,7 +195,13 @@ private[graft] class GraftBatchScan(
     val local = entries.map(_.path).filterNot(remotePaths.contains) ++
       plan.deletes.map(_.path)
     if (local.nonEmpty) store.hydrate(nroot, local)
-    if (spjActive) {
+    if (plan.bins.nonEmpty)
+      // bin mode: one partition per bin, whole files in bin order —
+      // never split, never merged (runtime filters never reach it)
+      plan.bins.zipWithIndex.map { case (b, i) =>
+        FilePartition(i, b.map(wholeFile).toArray)
+      }.toArray
+    else if (spjActive) {
       val byKey = entries.groupBy(keyOf)
       groupKeys.zipWithIndex.map { case (k, i) =>
         GraftKeyedPartition(i,
@@ -310,10 +321,16 @@ private[graft] class GraftBatchScan(
   private val rowIdRequested: Boolean =
     readDataSchema.fieldNames.contains("_row_id")
 
+  /** The bin scan's row positions (`_gf_ord`, `_gf_pos`) requested
+    * through the scan's output. */
+  private val positionsRequested: Boolean =
+    readDataSchema.fieldNames.exists(GraftBinScanProvider.positionCols.contains)
+
   /** The parquet-facing projection: everything but the computed
-    * `_row_id` metadata column. */
+    * `_row_id` and row-position columns. */
   private val dataCols: StructType =
-    StructType(readDataSchema.fields.filterNot(_.name == "_row_id"))
+    StructType(readDataSchema.fields.filterNot(f =>
+      f.name == "_row_id" || GraftBinScanProvider.positionCols.contains(f.name)))
 
   override def supportedCustomMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
@@ -333,7 +350,8 @@ private[graft] class GraftBatchScan(
     * filtering narrows the file list, not the readers). */
   private lazy val readerFactory: GraftMeteredFactory =
     GraftMeteredFactory(
-      if (plan.deletes.isEmpty && !rowIdRequested && outRenames.isEmpty)
+      if (plan.deletes.isEmpty && !rowIdRequested && !positionsRequested &&
+          outRenames.isEmpty)
         GraftReaderFactory(mkParquetFactory(plan.schema, readDataSchema, pushedFilters))
       else morReaderFactory())
 
@@ -346,7 +364,8 @@ private[graft] class GraftBatchScan(
     case _ => false
   }
 
-  /** The wrapping read path — MoR snapshots and/or `_row_id` lineage:
+  /** The wrapping read path — MoR snapshots, `_row_id` lineage and/or
+    * the bin scan's row positions:
     * files re-read through an EXTENDED schema (projection-pruned
     * eq-delete key columns added back, the materialized `_gf_row_id`
     * physical column when lineage is requested, plus Spark's generated
@@ -412,10 +431,16 @@ private[graft] class GraftBatchScan(
         altNames = altNames,
         altOrds = if (anyAlt) altNames.map(_.map(ordOf)) else null)
     }
-    // output ordinal -> extended ordinal; -1 = the computed _row_id
+    // output ordinal -> extended ordinal; -1 = the computed _row_id,
+    // -2 = the file's ordinal in its input partition; the row index is
+    // the extended schema's last column
     val dataOrd = dataCols.fieldNames.zipWithIndex.toMap
-    val outCols = readDataSchema.fieldNames.map(n =>
-      if (n == "_row_id") -1 else dataOrd(n))
+    val outCols = readDataSchema.fieldNames.map {
+      case "_row_id" => -1
+      case GraftBinScanProvider.fileOrdCol => -2
+      case GraftBinScanProvider.rowPosCol => extSchema.length - 1
+      case n => dataOrd(n)
+    }
     // per renamed output column: candidate names (current first, then
     // historical newest-first) and their extended ordinals
     val renames = outRenames.map { case (cur, hists) =>

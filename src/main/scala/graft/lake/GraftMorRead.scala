@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarBatch, ColumnarMap}
 import org.apache.spark.unsafe.types.{CalendarInterval, UTF8String}
@@ -124,7 +125,8 @@ private[lake] object GraftMorMetrics {
 private[lake] case class GraftMorReaderFactory(
     plain: ParquetPartitionReaderFactory,
     extended: ParquetPartitionReaderFactory,
-    outCols: Array[Int],                 // output ordinal -> extended ordinal; -1 = _row_id
+    outCols: Array[Int],                 // output ordinal -> extended ordinal; -1 = _row_id,
+                                         // -2 = file ordinal in the partition
     riOrd: Int,
     gfOrd: Int,                          // materialized _gf_row_id ordinal, or -1
     lineage: Option[Map[String, Option[Long]]],  // fileName -> firstRowId
@@ -145,6 +147,10 @@ private[lake] case class GraftMorReaderFactory(
   }
 
   private def one(f: PartitionedFile): FilePartition = FilePartition(0, Array(f))
+
+  /** The output carries row positions (file ordinal, row index), so
+    * every file reads through the extended schema, clean ones too. */
+  private val positions: Boolean = outCols.exists(o => o == -2 || o == riOrd)
 
   private def workFor(f: PartitionedFile): GraftMorWork = {
     val name = f.toPath.getName
@@ -218,14 +224,14 @@ private[lake] case class GraftMorReaderFactory(
   private[lake] def columnarFor(f: PartitionedFile)
       : (PartitionReader[ColumnarBatch], GraftMorWork) = {
     val w = workFor(f)
-    if (w.needsExtended) (extended.createColumnarReader(one(f)), w)
+    if (positions || w.needsExtended) (extended.createColumnarReader(one(f)), w)
     else (plain.createColumnarReader(one(f)), null)
   }
 
   private[lake] def rowFor(f: PartitionedFile)
       : (PartitionReader[InternalRow], GraftMorWork) = {
     val w = workFor(f)
-    if (w.needsExtended) (extended.createReader(one(f)), w)
+    if (positions || w.needsExtended) (extended.createReader(one(f)), w)
     else (plain.createReader(one(f)), null)
   }
 
@@ -536,6 +542,8 @@ private[lake] class GraftMorColumnarReader(files: Array[PartitionedFile],
       cols(j) =
         if (e >= 0) {
           if (map == null) b.column(e) else new GraftIndirectVector(b.column(e), map)
+        } else if (e == -2) {
+          val v = new ConstantColumnVector(k, IntegerType); v.setInt(i); v
         } else work.rowId match {
           case GraftNullId => new GraftNullLongVector(k)
           case GraftMaterializedId =>
@@ -577,6 +585,7 @@ private[lake] class GraftMorRowReader(files: Array[PartitionedFile],
       // renamed files read through a per-file output→extended remap
       projected = new GraftProjectedRow(
         if (w != null && w.cols != null) w.cols else fac.outCols)
+      projected.fileOrd = i
       if (w != null && w.hasDeletes) dirtyFiles += 1
       true
     }
@@ -712,24 +721,27 @@ private[lake] final class GraftNullLongVector(rows: Int) extends ColumnVector(Lo
 
 /** Read-only projection of the extended-schema row to the scan's
   * output shape: appended eq-key / physical-lineage / row-index
-  * columns drop off, and `_row_id` serves from a per-row computed
-  * value. */
+  * columns drop off, `_row_id` serves from a per-row computed value
+  * and the file ordinal from `fileOrd`. */
 private[lake] final class GraftProjectedRow(outCols: Array[Int]) extends InternalRow {
   private var row: InternalRow = _
   private var rowId: java.lang.Long = _
+  var fileOrd: Int = 0
   def set(r: InternalRow, id: java.lang.Long): Unit = { row = r; rowId = id }
   override def numFields: Int = outCols.length
   override def setNullAt(i: Int): Unit = throw new UnsupportedOperationException
   override def update(i: Int, v: Any): Unit = throw new UnsupportedOperationException
   override def copy(): InternalRow = {
-    val w = new GraftProjectedRow(outCols); w.set(row.copy(), rowId); w
+    val w = new GraftProjectedRow(outCols); w.set(row.copy(), rowId); w.fileOrd = fileOrd; w
   }
   override def isNullAt(i: Int): Boolean =
-    if (outCols(i) < 0) rowId == null else row.isNullAt(outCols(i))
+    if (outCols(i) == -1) rowId == null
+    else outCols(i) != -2 && row.isNullAt(outCols(i))
   override def getBoolean(i: Int): Boolean = row.getBoolean(outCols(i))
   override def getByte(i: Int): Byte = row.getByte(outCols(i))
   override def getShort(i: Int): Short = row.getShort(outCols(i))
-  override def getInt(i: Int): Int = row.getInt(outCols(i))
+  override def getInt(i: Int): Int =
+    if (outCols(i) == -2) fileOrd else row.getInt(outCols(i))
   override def getLong(i: Int): Long =
     if (outCols(i) < 0) rowId.longValue() else row.getLong(outCols(i))
   override def getFloat(i: Int): Float = row.getFloat(outCols(i))
@@ -750,5 +762,7 @@ private[lake] final class GraftProjectedRow(outCols: Array[Int]) extends Interna
   override def getArray(i: Int): ArrayData = row.getArray(outCols(i))
   override def getMap(i: Int): MapData = row.getMap(outCols(i))
   override def get(i: Int, dt: DataType): AnyRef =
-    if (outCols(i) < 0) rowId else row.get(outCols(i), dt)
+    if (outCols(i) == -1) rowId
+    else if (outCols(i) == -2) Int.box(fileOrd)
+    else row.get(outCols(i), dt)
 }

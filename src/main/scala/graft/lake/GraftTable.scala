@@ -1165,13 +1165,16 @@ object GraftTable {
     }
   }
 
-  /** `binned`: `df` is [[readBinsForRewrite]]'s, each task holding whole
-    * bins. The bin is the outermost partition directory, so each bin is
-    * one file per tuple, in source (file, position) order unless the
-    * table declares a sort order. */
+  /** Bin-pack compaction passes two extras:
+    *  - `sourceOrder`: columns giving each row's source (file,
+    *    position) order. They order rows within each task when the
+    *    table declares no sort order, and are dropped before the write.
+    *  - `binCol`: the V1 bin column ([[readBinsForRewrite]]), when a
+    *    task may hold several whole bins. The bin is the outermost
+    *    partition directory, so each bin is one file per tuple. */
   private def writeDataFiles(spark: SparkSession, root: String, df0: DataFrame,
       snapshotId: Long, props: Map[String, String],
-      binned: Boolean = false): Seq[FileEntry] = {
+      sourceOrder: Seq[String] = Nil, binCol: Option[String] = None): Seq[FileEntry] = {
     // every table-schema data write (append, CoW rewrite, merge,
     // compaction) funnels through here — CHECK constraints ride the
     // write's own row pass
@@ -1189,8 +1192,7 @@ object GraftTable {
       // columns is then already satisfied and Spark inserts no second
       // sort that would undo this one.
       val sortCols = liveSortCols(df, props)
-      val order =
-        if (binned && sortCols.isEmpty) Seq(col("_gf_ord"), col("_gf_pos")) else sortCols
+      val order = if (sortCols.isEmpty) sourceOrder.map(col) else sortCols
       // partitioned tables: derive one rendered string column per
       // transform, let Spark's partitioned committer split files by
       // tuple (the _gp_ columns live only in the directory names,
@@ -1198,11 +1200,11 @@ object GraftTable {
       val withParts = spec.zipWithIndex.foldLeft(df) { case (d, (t, i)) =>
         d.withColumn(s"_gp_$i", transformCol(t, types(t.col)))
       }
-      val partCols = (if (binned) Seq("_gf_bin") else Nil) ++ spec.indices.map(i => s"_gp_$i")
+      val partCols = binCol.toSeq ++ spec.indices.map(i => s"_gp_$i")
       val sorted =
         if (order.isEmpty) withParts
         else withParts.sortWithinPartitions(partCols.map(col(_).asc) ++ order: _*)
-      val writer = (if (binned) sorted.drop("_gf_ord", "_gf_pos") else sorted)
+      val writer = (if (sourceOrder.isEmpty) sorted else sorted.drop(sourceOrder: _*))
         .write.option("compression", codec).options(bloomOptions(props))
         .options(staging.writerOptions)
       withMicrosTimestamps(spark) {
@@ -3396,13 +3398,36 @@ object GraftTable {
     if (lineageRewriteEnabled(spark)) readFilesWithLineage(spark, root, schema, files, deletes)
     else readFiles(spark, root, schema, files, deletes)
 
-  /** Bin-pack compaction's input: every bin's files in ONE MoR read
-    * (deletes apply once for all bins), each row tagged with its bin
-    * (`_gf_bin`, zero-padded so bin directories list in bin order) and
-    * its source order (`_gf_ord`, the file's place in bin-pack order,
-    * then `_gf_pos`). The tags ride the lineage join's broadcast map,
-    * so binning costs no extra join. With the lineage kill switch off,
-    * `_gf_row_id` is dropped and the outputs stay unstamped. */
+  /** Bin-pack compaction's input on the native reader: each bin is one
+    * input partition of the bin scan ([[GraftBinScanProvider]]), the
+    * bin's whole files in bin-pack order, so each task reads exactly
+    * one bin in source (file, position) order. Deletes and lineage
+    * apply inside the reader; `_row_id` comes back as `_gf_row_id`
+    * unless the lineage kill switch is off (the outputs then stay
+    * unstamped). `positions` adds each row's file ordinal in its bin
+    * and its row index (`_gf_ord`, `_gf_pos`). */
+  private def readBins(spark: SparkSession, root: String, snap: Snapshot,
+      bins: Seq[Seq[FileEntry]], positions: Boolean): DataFrame = {
+    val raw = spark.read.format(classOf[GraftBinScanProvider].getName)
+      .options(GraftBinScanProvider.options(root, snap.snapshotId, bins.map(_.map(_.path))))
+      .load()
+    val extra =
+      (if (lineageRewriteEnabled(spark)) Seq(col("_row_id").as(rowIdPhys.name)) else Nil) ++
+        (if (positions) GraftBinScanProvider.positionCols.map(col) else Nil)
+    raw.select(snap.schema.fieldNames.toSeq.map(col) ++ extra: _*)
+  }
+
+  /** Bin-pack compaction's input for the snapshots the native reader
+    * declines (non-hashable or oversized equality-delete keys,
+    * ambiguous renames, `spark.graft.native-scan.mor.enabled=false`):
+    * every bin's files in ONE V1 MoR read (deletes apply as anti-joins,
+    * once for all bins), each row tagged with its bin (`_gf_bin`,
+    * zero-padded so bin directories list in bin order) and its source
+    * order (`_gf_ord`, the file's place in bin-pack order, then
+    * `_gf_pos`). The tags ride the lineage join's broadcast map, so
+    * binning costs no extra join; a shuffle on `_gf_bin` then puts each
+    * bin in one task. With the lineage kill switch off, `_gf_row_id` is
+    * dropped and the outputs stay unstamped. */
   private def readBinsForRewrite(spark: SparkSession, root: String,
       schema: StructType, bins: Seq[Seq[FileEntry]], deletes: Seq[FileEntry]): DataFrame = {
     import spark.implicits._
@@ -6369,10 +6394,14 @@ object GraftTable {
   /** Bin-pack compaction — rewrite_data_files (reference:
     * SPARK_ICEBERG_GUIDE.md §8.3). Greedy first-fit over files smaller
     * than the target; each bin rewrites into one file (one per
-    * partition tuple on a partitioned table). Bins are a planning
-    * concept only (Delta OPTIMIZE's bin-packing): every bin rewrites
-    * in one read → shuffle → write, and only file *metadata* transits
-    * the driver. */
+    * partition tuple on a partitioned table). Bins are planned from
+    * file metadata alone (Delta OPTIMIZE's bin-packing), and each bin
+    * is one input partition of the native scan ([[readBins]]): one
+    * narrow read → write stage with no listing job, no delete joins
+    * and no shuffle, in one SQL execution. Rows keep their source
+    * (file, position) order unless the table declares a sort order.
+    * Snapshots the native reader declines take the V1 bin read and
+    * its shuffle ([[readBinsForRewrite]]). */
   def rewriteDataFiles(spark: SparkSession, root: String,
       targetFileSizeBytes: Long = -1L,
       minInputFiles: Int = 2,
@@ -6439,12 +6468,24 @@ object GraftTable {
         retiredNamesMeta(schema, snap.properties)
       else (None, Map.empty[String, String])
     val id = snap.snapshotId + 1   // planned against snap: conflicts fail loudly
-    // one shuffle puts each bin whole in one task; live deletes apply
-    // in the read, so compacted files never resurrect deleted rows
-    val binnedRows = readBinsForRewrite(spark, root, schema, bins, deletes)
-      .repartition(bins.size, col("_gf_bin"))
-    val adds = stampRewriteAdds(spark,
-      writeDataFiles(spark, root, binnedRows, id, snap.properties, binned = true))
+    // live deletes apply in the read, so compacted files never
+    // resurrect deleted rows
+    val written =
+      if (snapshotNativePlan(spark, snap, Nil).isDefined) {
+        // each task reads one bin in source order: only a partitioned
+        // table's tuple sort needs the (file, position) tie-break
+        val positions = tableSpec(snap.properties).nonEmpty
+        writeDataFiles(spark, root, readBins(spark, root, snap, bins, positions),
+          id, snap.properties,
+          sourceOrder = if (positions) GraftBinScanProvider.positionCols else Nil)
+      } else {
+        // one shuffle puts each bin whole in one task
+        val binnedRows = readBinsForRewrite(spark, root, schema, bins, deletes)
+          .repartition(bins.size, col("_gf_bin"))
+        writeDataFiles(spark, root, binnedRows, id, snap.properties,
+          sourceOrder = Seq("_gf_ord", "_gf_pos"), binCol = Some("_gf_bin"))
+      }
+    val adds = stampRewriteAdds(spark, written)
     commitOrCleanup(root, id, Commit(id, Some(id - 1), System.currentTimeMillis(),
       "rewrite_data_files", adds, small.map(_.path), retProps, retSchemaJ))
   }
@@ -7032,12 +7073,16 @@ object GraftTable {
     * per-file partition dispatch. `distributedPlanned` records which
     * plane produced the entries (checkpoint-plane survivors carry NO
     * stats maps — runtime filters there prune by partition tuple only,
-    * which mayMatch's empty-stats conservatism makes automatic). */
+    * which mayMatch's empty-stats conservatism makes automatic).
+    * Non-empty `bins` puts the scan in bin mode (compaction's input):
+    * `entries` are the bins' files, and each bin is one input
+    * partition ([[binScanPlan]]). */
   private[lake] case class NativePlan(schema: StructType,
       entries: Seq[FileEntry], specs: IndexedSeq[Seq[PTransform]],
       currentSpecId: Int, distributedPlanned: Boolean,
       deletes: Seq[FileEntry] = Seq.empty,
-      renames: Seq[(String, Seq[String])] = Seq.empty)
+      renames: Seq[(String, Seq[String])] = Seq.empty,
+      bins: Seq[Seq[FileEntry]] = Seq.empty)
 
   /** (logical name, historical names newest-first) for every renamed
     * column — the native reader resolves which name each FILE
@@ -7160,20 +7205,44 @@ object GraftTable {
         Some(NativePlan(schema, ckEntries ++ tailLive, specs,
           specs.size - 1, distributedPlanned = true, deletes,
           renameAlts(schema)))
-      case None =>
-        val snap = state(root, asOf)
-        val schema = snap.schema
-        if (renamesAmbiguous(schema)) return None
-        val deletes = snap.files.filter(_.isDelete)
-        if (!morNativeEligible(spark, schema, deletes)) return None
-        val types = schema.fields.map(f => f.name -> f.dataType).toMap
-        val specs = specHistory(snap.properties)
-        val entries = prunedData(types, specs, preds,
-          snap.files.filter(_.isData), statAliases(schema))
-        Some(NativePlan(schema, entries, specs,
-          specs.size - 1, distributedPlanned = false, deletes,
-          renameAlts(schema)))
+      case None => snapshotNativePlan(spark, state(root, asOf), preds)
     }
+  }
+
+  /** The driver-side native plan of a snapshot already in hand: the
+    * data files surviving `preds` and every live delete file, or None
+    * when the snapshot needs the V1 plane (the same eligibility checks
+    * as [[planNativeScan]]). No log replay and no checkpoint job. */
+  private[lake] def snapshotNativePlan(spark: SparkSession, snap: Snapshot,
+      preds: Seq[Pred]): Option[NativePlan] = {
+    val schema = snap.schema
+    val deletes = snap.files.filter(_.isDelete)
+    if (renamesAmbiguous(schema) || !morNativeEligible(spark, schema, deletes)) None
+    else {
+      val types = schema.fields.map(f => f.name -> f.dataType).toMap
+      val specs = specHistory(snap.properties)
+      val entries = prunedData(types, specs, preds,
+        snap.files.filter(_.isData), statAliases(schema))
+      Some(NativePlan(schema, entries, specs,
+        specs.size - 1, distributedPlanned = false, deletes,
+        renameAlts(schema)))
+    }
+  }
+
+  /** The bin scan's plan ([[GraftBinScanProvider]]): snapshot
+    * `snapshotId`'s native plan narrowed to the bins' data files, each
+    * bin's files in the given (bin-pack) order. The snapshot comes from
+    * the replay cache, so the compaction that planned the bins pays no
+    * second replay and no checkpoint job. */
+  private[lake] def binScanPlan(spark: SparkSession, root: String, snapshotId: Long,
+      bins: Seq[Seq[String]]): NativePlan = {
+    val plan = snapshotNativePlan(spark, state(root, Some(snapshotId)), Nil)
+      .getOrElse(throw new IllegalArgumentException(
+        s"snapshot $snapshotId of $root needs the V1 read plane; its bins cannot scan natively"))
+    val byPath = plan.entries.map(f => f.path -> f).toMap
+    val binEntries = bins.map(_.map(p => byPath.getOrElse(p,
+      throw new IllegalArgumentException(s"$p is not a live data file of snapshot $snapshotId"))))
+    plan.copy(entries = binEntries.flatten, bins = binEntries)
   }
 
   /** Re-prune `entries` under a runtime (DPP) equality filter: a file

@@ -2,14 +2,12 @@ package graft
 
 import java.net.URI
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -120,32 +118,11 @@ class LocalStageSpec extends SparkSpec {
     // committed after the delete: the sequence rule keeps it
     GraftTable.append(spark, r, Seq((7L, "b7")).toDF("k", "v"))
 
-    val group = s"local-stage-eqwiden-$pid"
-    val jobs = new AtomicInteger
-    val bare = new ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties.getProperty("spark.jobGroup.id") == group) {
-          jobs.incrementAndGet()
-          if (js.properties.getProperty("spark.sql.execution.id") == null) bare.add(js.jobId)
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val rows =
-      try {
-        spark.sparkContext.setJobGroup(group, "equality-delete MoR read")
-        try GraftTable.read(spark, r).as[(Long, String)].collect().sorted.toSeq
-        finally spark.sparkContext.clearJobGroup()
-      } finally {
-        // listener delivery is async: wait until the count is stable
-        var last = -1; var spins = 0
-        while (jobs.get != last && spins < 50) { last = jobs.get; Thread.sleep(100); spins += 1 }
-        spark.sparkContext.removeSparkListener(listener)
-      }
+    val (rows, t) = traced(GraftTable.read(spark, r).as[(Long, String)].collect().sorted.toSeq)
     val want = (0L until 10L).filterNot(Set(2L, 7L)).map(i => (i, s"a$i")) :+ ((7L, "b7"))
     assert(rows == want.sorted)
-    assert(jobs.get > 0, "the read ran no job in its group")
-    assert(bare.isEmpty,
-      s"jobs outside any SQL execution (schema inference): ${bare.asScala.mkString(", ")}")
+    assert(t.jobs > 0, "the read ran no job in its group")
+    assert(t.bareJobs.isEmpty,
+      s"jobs outside any SQL execution (schema inference): ${t.bareJobs.mkString(", ")}")
   }
 }

@@ -156,7 +156,7 @@ class RowLineageSpec extends SparkSpec {
       rows.map(r => (r.getLong(0), r.getLong(1))).toSeq)
   }
 
-  // ── one-job bin-pack compaction ─────────────────────────────────────
+  // ── bin-pack compaction: one narrow read → write stage ──────────────
 
   /** Data files in path order (the unclustered planner's bin order),
     * packed next-fit at `target` the way rewriteDataFiles plans bins. */
@@ -173,33 +173,23 @@ class RowLineageSpec extends SparkSpec {
   private def physRows(root: String, path: String, cols: String*): Seq[Row] =
     spark.read.parquet(s"$root/$path").select(cols.map(col): _*).collect().toSeq
 
-  /** Runs `body` and counts the SQL executions that wrote parquet under
-    * `root`. Listener delivery is asynchronous but ordered, so a marker
-    * query run afterwards flushes every earlier event. */
-  private def dataWritesUnder(root: String)(body: => Unit): Int = {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val writes = new java.util.concurrent.atomic.AtomicInteger
-    val marker = s"flush-${java.util.UUID.randomUUID()}"
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-        if (qe.logical.exists {
-          case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toUri.getPath.startsWith(root + "/")
-          case _ => false
-        }) writes.incrementAndGet()
-        if (funcName == "collect" && qe.logical.toString.contains(marker)) flushed.countDown()
-      }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      spark.range(1).select(lit(marker)).collect()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never flushed")
-    } finally spark.listenerManager.unregister(listener)
-    writes.get
+  /** The SQL executions of a traced block that wrote parquet under
+    * `root`. */
+  private def dataWritesUnder(t: SparkSpec.SparkTrace, root: String): Int =
+    t.executions.count(_.writesUnder(root))
+
+  /** Compacts under [[traced]] and checks the compaction runs no job
+    * outside ONE SQL execution whose final plan (after AQE) shuffles
+    * nothing. */
+  private def compactNarrow(session: org.apache.spark.sql.SparkSession, root: String,
+      target: Long): SparkSpec.SparkTrace = {
+    val (_, t) = traced(GraftTable.rewriteDataFiles(session, root, targetFileSizeBytes = target))
+    assert(t.bareJobs.isEmpty, s"jobs outside any SQL execution: ${t.bareJobs}")
+    assert(t.executions.size === 1,
+      s"compaction ran ${t.executions.size} SQL executions: ${t.executions.map(_.description)}")
+    assert(t.executions.head.shuffles.isEmpty,
+      s"compaction shuffles: ${t.executions.head.shuffles}")
+    t
   }
 
   /** Eight single-file appends of shuffled keys, then every MoR delete
@@ -240,9 +230,7 @@ class RowLineageSpec extends SparkSpec {
     // file in bin order, each in physical (position) order
     val expected = bins.map(_.flatMap(f =>
       physRows(root, f.path, "k").map(_.getLong(0)).filter(live))).toSet
-    val writes = dataWritesUnder(root) {
-      GraftTable.rewriteDataFiles(spark, root, targetFileSizeBytes = target)
-    }
+    val writes = dataWritesUnder(compactNarrow(spark, root, target), root)
     assert(writes === 1, "every bin must rewrite in one write execution")
     val outs = GraftTable.state(root).files.filter(_.isData)
     assert(outs.forall(f => !srcPaths(f.path) && f.firstRowId.contains(-1L)))
@@ -259,7 +247,7 @@ class RowLineageSpec extends SparkSpec {
     val target = GraftTable.state(root).files.filter(_.isData).map(_.sizeBytes).max * 2 + 1
     val bins = planBins(root, target)
     assert(bins.size >= 3, s"want >= 3 bins, planned ${bins.size}")
-    GraftTable.rewriteDataFiles(spark, root, targetFileSizeBytes = target)
+    compactNarrow(spark, root, target)
     val outs = GraftTable.state(root).files.filter(_.isData)
     assert(outs.size === bins.size)
     outs.foreach { f =>
@@ -272,7 +260,7 @@ class RowLineageSpec extends SparkSpec {
     plain.conf.set("spark.graft.row-lineage.rewrite", "false")
     GraftTable.append(spark, root, df(1000 until 1010).coalesce(1))
     val target2 = GraftTable.state(root).files.filter(_.isData).map(_.sizeBytes).sum + 1
-    GraftTable.rewriteDataFiles(plain, root, targetFileSizeBytes = target2)
+    compactNarrow(plain, root, target2)
     val one = GraftTable.state(root).files.filter(_.isData)
     assert(one.size === 1 && !one.head.firstRowId.contains(-1L))
     assert(GraftTable.read(spark, root).count() === before.size + 10)
@@ -282,9 +270,12 @@ class RowLineageSpec extends SparkSpec {
     val root = freshRoot("onejob-part")
     val pschema = StructType(schema.fields :+ StructField("p", IntegerType, nullable = false))
     GraftTable.create(spark, root, pschema, Map(GraftTable.specProp -> "identity(p)"))
+    // shuffled keys: no column order can stand in for source order
+    val rnd = new scala.util.Random(29)
     (0 until 6).foreach { i =>
       GraftTable.append(spark, root, spark.createDataFrame(
-        (i * 20 until i * 20 + 20).map(k => Row(k.toLong, s"v$k", k % 2)).asJava, pschema)
+        rnd.shuffle((i * 20 until i * 20 + 20).toList)
+          .map(k => Row(k.toLong, s"v$k", k % 2)).asJava, pschema)
         .coalesce(1))
     }
     GraftTable.deleteWhereMoR(spark, root, col("k") % 9 === 0)
@@ -300,14 +291,132 @@ class RowLineageSpec extends SparkSpec {
       }
     }.toSet
     assert(expected.map(_._1).size === 2 && expected.size > bins.size)
-    GraftTable.rewriteDataFiles(spark, root, targetFileSizeBytes = target)
+    // each key's source (file ordinal in bin order, row position)
+    val source = bins.flatten.zipWithIndex.flatMap { case (f, ord) =>
+      physRows(root, f.path, "k").map(_.getLong(0)).zipWithIndex
+        .map { case (k, pos) => k -> (ord, pos) }
+    }.toMap
+    compactNarrow(spark, root, target)
     val outs = GraftTable.state(root).files.filter(_.isData)
     outs.foreach { f =>
       val ps = physRows(root, f.path, "p").map(_.getInt(0)).toSet
       assert(ps.map(_.toString) === Set(tuple(f)("p")), s"${f.path} carries the wrong tuple")
+      val order = physRows(root, f.path, "k").map(r => source(r.getLong(0)))
+      assert(order.zip(order.drop(1)).forall { case (a, b) => Ordering[(Int, Int)].lt(a, b) },
+        s"${f.path} leaves (file, position) order: $order")
     }
     assert(outs.map(f => tuple(f) -> physRows(root, f.path, "k").map(_.getLong(0))).toSet ===
       expected)
+  }
+
+  test("compacting 40 small files runs no job outside its one SQL execution (no listing job)") {
+    import spark.implicits._
+    val root = freshRoot("narrow-many")
+    GraftTable.create(spark, root, schema)
+    val rnd = new scala.util.Random(31)
+    (0 until 40).foreach { i =>
+      GraftTable.append(spark, root, spark.createDataFrame(
+        rnd.shuffle((i * 5 until i * 5 + 5).toList)
+          .map(k => Row(k.toLong, s"v$k")).asJava, schema).coalesce(1))
+    }
+    GraftTable.deleteWhereMoR(spark, root, col("k") % 6 === 0)
+    GraftTable.deleteEqualityMoR(spark, root, Seq(7L, 77L).toDF("k"))
+    val before = rowsWithIds(root)
+    val target = GraftTable.state(root).files.filter(_.isData).map(_.sizeBytes).sum / 3
+    val bins = planBins(root, target)
+    assert(bins.size >= 3 && bins.flatten.size === 40, s"planned ${bins.map(_.size)}")
+    compactNarrow(spark, root, target)
+    assert(GraftTable.state(root).files.count(_.isData) === bins.size)
+    assert(rowsWithIds(root) === before)
+  }
+
+  /** Every row with its `_row_id`, whatever the schema. */
+  private def rowSet(root: String): Set[Seq[Any]] =
+    GraftTable.readWithRowIds(spark, root).collect().map(_.toSeq).toSet
+
+  /** Compacts through the V1 bin read and checks the result is the
+    * native path's: one file per bin, each bin's surviving rows in
+    * source (file, position) order, rows and `_row_id`s unchanged. */
+  private def compactDeclined(session: org.apache.spark.sql.SparkSession,
+      root: String): Unit = {
+    val before = rowSet(root)
+    val live = before.map(_.head.asInstanceOf[Long])
+    val target = GraftTable.state(root).files.filter(_.isData).map(_.sizeBytes).max * 2 + 1
+    val bins = planBins(root, target)
+    assert(bins.size >= 3, s"want >= 3 bins, planned ${bins.size}")
+    val expected = bins.map(_.flatMap(f =>
+      physRows(root, f.path, "k").map(_.getLong(0)).filter(live))).toSet
+    val (_, t) = traced(GraftTable.rewriteDataFiles(session, root, targetFileSizeBytes = target))
+    assert(t.executions.exists(_.shuffles.nonEmpty), "the declined shape took the native path")
+    val outs = GraftTable.state(root).files.filter(_.isData)
+    assert(outs.size === bins.size, "one output file per bin")
+    assert(outs.map(f => physRows(root, f.path, "k").map(_.getLong(0))).toSet === expected)
+    assert(rowSet(root) === before, "rows and _row_ids survive compaction")
+  }
+
+  test("V1 bin read remains for mor.enabled=false: the switch routes MoR reads off the native reader") {
+    val root = freshRoot("declined-switch")
+    morTable(root)
+    val v1 = spark.newSession()
+    v1.conf.set("spark.graft.native-scan.mor.enabled", "false")
+    compactDeclined(v1, root)
+  }
+
+  test("V1 bin read remains for a DECIMAL equality-delete key: the native reader cannot hash-set it") {
+    import spark.implicits._
+    val root = freshRoot("declined-decimal")
+    val dschema = StructType(schema.fields :+ StructField("d", DecimalType(10, 2)))
+    GraftTable.create(spark, root, dschema)
+    val rnd = new scala.util.Random(37)
+    (0 until 6).foreach { i =>
+      GraftTable.append(spark, root, spark.createDataFrame(
+        rnd.shuffle((i * 20 until i * 20 + 20).toList).map(k =>
+          Row(k.toLong, s"v$k", java.math.BigDecimal.valueOf(k % 13, 1))).asJava, dschema)
+        .coalesce(1))
+    }
+    GraftTable.deleteEqualityMoR(spark, root,
+      Seq(java.math.BigDecimal.valueOf(3, 1)).toDF("d").select(col("d").cast(DecimalType(10, 2))))
+    assert(GraftTable.state(root).files.exists(_.content.contains(2)))
+    compactDeclined(spark, root)
+  }
+
+  test("above the planning threshold compaction is still one SQL execution with the same files") {
+    def build(root: String, props: Map[String, String]): Unit = {
+      GraftTable.create(spark, root, schema, props)
+      val rnd = new scala.util.Random(41)
+      def appendFile(i: Int): Unit =
+        GraftTable.append(spark, root, spark.createDataFrame(
+          rnd.shuffle((i * 20 until i * 20 + 20).toList)
+            .map(k => Row(k.toLong, s"v$k")).asJava, schema).coalesce(1))
+      (0 until 4).foreach(appendFile)
+      GraftTable.rewriteManifests(root)
+      (4 until 8).foreach(appendFile)
+      GraftTable.deleteWhereMoR(spark, root, col("k") % 5 === 0)
+      // above the threshold the second checkpoint is a distributed
+      // delta: parquet only, the file list the native planner prunes
+      // with a Spark job
+      GraftTable.rewriteManifests(root)
+    }
+    val below = freshRoot("threshold-below")
+    val above = freshRoot("threshold-above")
+    build(below, Map.empty)
+    build(above, Map("graft.planning.distributed-threshold" -> "2"))
+    val head = GraftTable.state(above).snapshotId
+    val log = java.nio.file.Paths.get(above, "_graft_log")
+    assert(java.nio.file.Files.exists(log.resolve(s"ckptmeta-$head.json")) &&
+      !java.nio.file.Files.exists(log.resolve(s"checkpoint-$head.json")),
+      "above the threshold the head checkpoint is parquet-only")
+    val target = GraftTable.state(below).files.filter(_.isData).map(_.sizeBytes).max * 2 + 1
+    GraftTable.rewriteDataFiles(spark, below, targetFileSizeBytes = target)
+    // the reads replay the table state the compaction then reuses
+    val beforeAbove = rowsWithIds(above)
+    compactNarrow(spark, above, target)
+    def outputs(root: String): Seq[Seq[Row]] =
+      GraftTable.state(root).files.filter(_.isData).sortBy(_.path)
+        .map(f => physRows(root, f.path, "k", "v", "_gf_row_id"))
+    assert(outputs(above).size > 1)
+    assert(outputs(above) === outputs(below))
+    assert(rowsWithIds(above) === beforeAbove)
   }
 
   test("lineage survives the checkpoint parquet roundtrip") {

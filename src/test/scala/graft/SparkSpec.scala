@@ -27,6 +27,30 @@ object SparkSpec {
   }
   val sf: String = "/root/testdata/sf0.001"
   val sqlWarehouse: String = "/root/repo/target/graft-sql-warehouse"
+
+  /** One SQL execution a traced block ran, with its final executed
+    * plan (after AQE re-planning). */
+  final case class SqlExec(id: Long, description: String,
+      plan: org.apache.spark.sql.execution.SparkPlanInfo) {
+    /** Every node of the plan, depth first. */
+    def nodes: Seq[org.apache.spark.sql.execution.SparkPlanInfo] = {
+      def walk(n: org.apache.spark.sql.execution.SparkPlanInfo)
+          : Seq[org.apache.spark.sql.execution.SparkPlanInfo] = n +: n.children.flatMap(walk)
+      walk(plan)
+    }
+    /** Shuffle exchanges (ShuffleExchangeExec, or its AQE query stage). */
+    def shuffles: Seq[String] = nodes.map(_.nodeName)
+      .filter(n => n == "Exchange" || n == "ShuffleQueryStage")
+    /** Whether the execution wrote files under directory `dir`. */
+    def writesUnder(dir: String): Boolean = nodes.exists(n =>
+      n.nodeName.startsWith("Execute InsertIntoHadoopFsRelationCommand") &&
+        n.simpleString.contains(dir + "/"))
+  }
+
+  /** What a traced block ran on Spark: its SQL executions in start
+    * order, and the ids of its jobs that ran outside any execution
+    * (schema inference, file listing, bare RDD actions). */
+  final case class SparkTrace(executions: Seq[SqlExec], bareJobs: Seq[Int], jobs: Int)
 }
 
 /** Shared independent reconstructions of the md5-derived hash
@@ -89,6 +113,59 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       val pad = new Array[Byte](150); rnd.nextBytes(pad)
       (i.toLong, i % 3, java.util.Base64.getEncoder.encodeToString(pad))
     }
+  }
+
+  /** Runs `body` under a unique job group and returns what it ran on
+    * Spark. Suites share one JVM and one SparkContext, so everything is
+    * scoped by the job group, never by global counts. Listener delivery
+    * is asynchronous but ordered: a marker job run afterwards flushes
+    * every earlier event. */
+  protected def traced[T](body: => T): (T, SparkSpec.SparkTrace) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    val sc = spark.sparkContext
+    val group = s"traced-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-flush"
+    val execs = scala.collection.mutable.LinkedHashMap.empty[Long, SparkSpec.SqlExec]
+    val bare = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var jobs = 0
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
+        js.properties.getProperty("spark.jobGroup.id") match {
+          case `group` =>
+            jobs += 1
+            if (js.properties.getProperty("spark.sql.execution.id") == null) bare += js.jobId
+          case `marker` => flushed.countDown()
+          case _ => ()
+        }
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized {
+        e match {
+          case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+            execs(s.executionId) = SparkSpec.SqlExec(s.executionId, s.description, s.sparkPlanInfo)
+          case u: SparkListenerSQLAdaptiveExecutionUpdate if execs.contains(u.executionId) =>
+            execs(u.executionId) = execs(u.executionId).copy(plan = u.sparkPlanInfo)
+          case _ => ()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    // the caller's own job group, if any, comes back afterwards
+    val prior = Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel").map(k => k -> sc.getLocalProperty(k))
+    def restore(): Unit = prior.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    try {
+      sc.setJobGroup(group, "traced block")
+      val out = try body finally restore()
+      sc.setJobGroup(marker, "traced block flush")
+      try sc.parallelize(Seq(1), 1).count() finally restore()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never flushed")
+      listener.synchronized {
+        (out, SparkSpec.SparkTrace(execs.values.toList, bare.toList, jobs))
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   /** The formatted physical plan, for scan/pushdown/broadcast asserts. */
