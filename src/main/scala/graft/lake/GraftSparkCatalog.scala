@@ -959,7 +959,7 @@ private[lake] class GraftSparkTable(fqName: String, root: String, asOf: Option[L
 
   /** Manifest-exact live-data size, for GraftBroadcastHints. */
   private[lake] def estimatedSizeBytes: Long =
-    GraftTable.statsForScan(spark, root, GraftTable.state(root, asOf), Seq.empty)._1
+    GraftTable.statsForScan(GraftTable.state(root, asOf), Seq.empty)._1
 
   override def partitioning(): Array[Transform] =
     GraftTable.state(root, asOf).properties.get(GraftTable.specProp)
@@ -1251,8 +1251,7 @@ private[lake] class GraftSparkTable(fqName: String, root: String, asOf: Option[L
           * dim table would never broadcast in a join — the single
           * most important planner signal a lake format owns. */
         override def estimateStatistics(): Statistics = {
-          val snap = GraftTable.state(root, asOf)
-          val live = GraftTable.statsForScan(spark, root, snap,
+          val live = GraftTable.statsForScan(GraftTable.state(root, asOf),
             pushed.flatMap(GraftRelation.toPred(_,
               schema().fields.map(f => f.name -> f.dataType).toMap)).toIndexedSeq)
           new Statistics {

@@ -886,30 +886,27 @@ object GraftTable {
 
   /** Per-file records + column min/max/nulls, read from the parquet
     * FOOTERS the write already produced — O(files) metadata, never a
-    * second pass over the rows (the Delta/Iceberg stats design). Runs
-    * as a Spark job over the path list so at 100 TB the footer reads
-    * distribute; only the tiny stats transit the driver. Stats string
-    * forms: integers/floats as decimal text, dates ISO, timestamps as
-    * epoch-micros text, strings raw (parquet's truncated min/max are
-    * still valid bounds).
+    * second pass over the rows (the Delta/Iceberg stats design). The
+    * reads run on a few driver threads, never as a Spark job: a footer
+    * is a few KB, and a job would add its scheduling cost and split the
+    * write's one SQL execution. Stats string forms: integers/floats as
+    * decimal text, dates ISO, timestamps as epoch-micros text, strings
+    * raw (parquet's truncated min/max are still valid bounds).
     */
   private def footerStats(spark: SparkSession, paths: Seq[String],
       extraConf: Seq[(String, String)] = Nil): Seq[(String, Long, Map[String, ColStats])] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
     val conf = spark.sessionState.newHadoopConf()
     // direct-write staging: the grafts3 scheme + client conf so footer
-    // reads resolve the store (driver AND the distributed branch)
+    // reads resolve the store
     extraConf.foreach { case (k, v) => conf.set(k, v) }
-    // footer reads are O(files) metadata: below the threshold a driver
-    // loop beats a Spark job's scheduling cost; above it, distribute
-    if (paths.size <= 16) paths.map(readFooter(_, conf))
-    else {
-      val confBc = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(conf))
-      spark.sparkContext
-        .parallelize(paths, math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism)))
-        .map(p => readFooter(p, confBc.value.value))
-        .collect().toSeq
-    }
+    if (paths.size <= 1) return paths.map(readFooter(_, conf))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(paths.size, 8))
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      Await.result(Future.traverse(paths)(p => Future(readFooter(p, conf))), Duration.Inf)
+    } finally pool.shutdown()
   }
 
   /** A parquet file's own schema, off its footer: the Spark schema its
@@ -1029,10 +1026,6 @@ object GraftTable {
         Some(if ((cmpv <= 0) == takeMin) x else y)
     }
 
-  /** Write df's rows as new data files and return their entries with
-    * per-file min/max stats harvested from the parquet footers.
-    * Honors `write.parquet.compression-codec` (reference: Iceberg's
-    * table property of the same name); default snappy. */
   /** Micros timestamps so footers carry usable timestamp stats (INT96,
     * the legacy option, writes no valid min/max). Reference-counted
     * per session: concurrent writers share one pin and the conf is
@@ -1165,7 +1158,11 @@ object GraftTable {
     }
   }
 
-  /** Bin-pack compaction passes two extras:
+  /** Write df's rows as new data files and return their entries with
+    * per-file min/max stats harvested from the parquet footers.
+    * Honors `write.parquet.compression-codec` (reference: Iceberg's
+    * table property of the same name); default snappy. Bin-pack
+    * compaction passes two extras:
     *  - `sourceOrder`: columns giving each row's source (file,
     *    position) order. They order rows within each task when the
     *    table declares no sort order, and are dropped before the write.
@@ -2343,26 +2340,23 @@ object GraftTable {
 
   private def overwriteWhereImpl(spark: SparkSession, root: String,
       condition: Column, replacement: Option[DataFrame], prunePreds: Seq[Pred],
-      planner: Option[CkptPlanner], stagedProps: Map[String, String] = Map.empty,
+      p: FilePlanner, stagedProps: Map[String, String] = Map.empty,
       opName: String = "overwrite"): Long = {
-    val (schema, props) = dmlHeader(planner, root)
+    val (schema, props, baseId) = (p.schema, p.properties, p.targetId)
     // a partition-aligned DELETE (no replacement, not staged) drops
     // whole files by reference — no scan, no rewrite
     if (replacement.isEmpty && stagedProps.isEmpty)
-      metadataDropVictims(spark, root, planner, schema, props, condition)
-        .foreach { case (baseId, victims) =>
-          val id = baseId + 1
-          return commitOrCleanup(root, id, Commit(id, Some(baseId),
-            System.currentTimeMillis(), opName, Seq.empty, victims, Map.empty, None))
-        }
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+      metadataDropVictims(spark, p, condition).foreach { victims =>
+        val id = baseId + 1
+        return commitOrCleanup(root, id, Commit(id, Some(baseId),
+          System.currentTimeMillis(), opName, Seq.empty, victims, Map.empty, None))
+      }
     // explicit preds win; otherwise extract them from the condition —
     // a keyed delete then rewrites only files whose stats can match
     val effective =
       if (prunePreds.nonEmpty) prunePreds
-      else extractPreds(conditionExpr(spark, schema, condition), types)
-    val (baseId, victimPaths, deletes, _) =
-      dmlVictims(spark, root, planner, schema, types, effective)
+      else extractPreds(conditionExpr(spark, schema, condition), p.types)
+    val (victims, deletes) = p.files(effective)
     // planned against baseId: main-lineage conflicts fail loudly at
     // the put-if-absent; a STAGED rewrite instead stacks at the raw
     // log head (other stages may pend) — its conflicts are validated
@@ -2372,14 +2366,14 @@ object GraftTable {
       else math.max(baseId, listCommitIds(root).max) + 1
     // the rewrite must apply any live position-delete files — a CoW
     // overwrite of MoR-deleted rows would otherwise resurrect them
-    val kept = readPaths(spark, root, schema, victimPaths, deletes)
+    val kept = readFiles(spark, root, schema, victims, deletes)
       .filter(!coalesce(condition, lit(false)))
     val toWrite = replacement.map(kept.unionByName(_)).getOrElse(kept)
     val adds = writeDataFiles(spark, root, toWrite, id, props)
     // a full-table rewrite leaves no rows the delete files could refer
     // to: retire them — and the historical column names — in the
     // same commit
-    val dropDeletes = if (effective.isEmpty) deletes.map(_._1) else Seq.empty
+    val dropDeletes = if (effective.isEmpty) deletes.map(_.path) else Seq.empty
     val (retSchemaJ, retProps) =
       if (effective.isEmpty && stagedProps.isEmpty) retiredNamesMeta(schema, props)
       else (None, Map.empty[String, String])
@@ -2388,7 +2382,7 @@ object GraftTable {
     commitOrCleanup(root, id, Commit(id,
       Some(if (stagedProps.isEmpty) id - 1 else baseId),
       System.currentTimeMillis(),
-      opName, adds, victimPaths ++ dropDeletes, retProps ++ stagedProps, retSchemaJ))
+      opName, adds, victims.map(_.path) ++ dropDeletes, retProps ++ stagedProps, retSchemaJ))
   }
 
   /** Dynamic partition overwrite (Iceberg's INSERT OVERWRITE behavior
@@ -2493,11 +2487,10 @@ object GraftTable {
     // million-file table the mode lookup alone must not replay the
     // log — and the ONE planner built here threads through to the
     // chosen branch (each construction re-parses the whole tail)
-    val planner = ckptPlanner(spark, root, None)
-    if (dmlHeader(planner, root)._2
-        .get("write.delete.mode").contains("merge-on-read"))
-      deleteWhereMoRImpl(spark, root, condition, prunePreds, planner)
-    else overwriteWhereImpl(spark, root, condition, None, prunePreds, planner)
+    val p = ckptPlanner(spark, root, None)
+    if (p.properties.get("write.delete.mode").contains("merge-on-read"))
+      deleteWhereMoRImpl(spark, root, condition, prunePreds, p)
+    else overwriteWhereImpl(spark, root, condition, None, prunePreds, p)
   }
 
   /** Merge-on-read DELETE: position-delete files (content=1) listing
@@ -2523,36 +2516,30 @@ object GraftTable {
 
   private def deleteWhereMoRImpl(spark: SparkSession, root: String,
       condition: Column, prunePreds: Seq[Pred],
-      planner: Option[CkptPlanner],
-      precomputedDrop: Option[Option[(Long, Seq[String])]] = None): Long = {
-    val (schema, props) = dmlHeader(planner, root)
+      p: FilePlanner, precomputedDrop: Option[Option[Seq[String]]] = None): Long = {
+    val (schema, props) = (p.schema, p.properties)
+    val id = p.targetId + 1
     // partition-aligned predicates delete by METADATA even under MoR:
     // dropping whole files by reference beats writing their every row
     // ordinal into position-delete files. deleteWhereRouted already
     // computed the victim set to pick this route — don't re-run the
     // partition-plane jobs when it hands the result down.
-    precomputedDrop
-      .getOrElse(metadataDropVictims(spark, root, planner, schema, props, condition))
-      .foreach { case (baseId, victims) =>
-        val id = baseId + 1
-        return commitOrCleanup(root, id, Commit(id, Some(baseId),
-          System.currentTimeMillis(), "delete", Seq.empty, victims, Map.empty, None))
-      }
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    precomputedDrop.getOrElse(metadataDropVictims(spark, p, condition)).foreach { victims =>
+      return commitOrCleanup(root, id, Commit(id, Some(id - 1),
+        System.currentTimeMillis(), "delete", Seq.empty, victims, Map.empty, None))
+    }
     val effective =
       if (prunePreds.nonEmpty) prunePreds
-      else extractPreds(conditionExpr(spark, schema, condition), types)
-    val (baseId, victimPaths, deletes, _) =
-      dmlVictims(spark, root, planner, schema, types, effective)
-    val id = baseId + 1
-    if (victimPaths.isEmpty) {
+      else extractPreds(conditionExpr(spark, schema, condition), p.types)
+    val (victims, deletes) = p.files(effective)
+    if (victims.isEmpty) {
       return commitOrCleanup(root, id, Commit(id, Some(id - 1),
         System.currentTimeMillis(), "delete", Seq.empty, Seq.empty, Map.empty, None))
     }
     // positions of matching rows NOT already deleted (an already-
     // deleted row re-listed would be harmless — distinct on apply —
     // but would inflate the delete-file row count diagnostics)
-    val matches = liveRowsWithIds(spark, root, schema, victimPaths, deletes)
+    val matches = liveRowsWithIds(spark, root, schema, victims, deletes)
       .filter(coalesce(condition, lit(false)))
       .select(col("_gf_path").as("file_path"), col("_gf_pos").as("pos"))
     // Shard count scales with the touched-file count — a free proxy
@@ -2562,7 +2549,7 @@ object GraftTable {
     // narrow-delete case stays a single file.
     val perShard = props.get("graft.delete.files-per-shard")
       .map(_.toInt).getOrElse(64)
-    val shards = math.min(4096, math.max(1, victimPaths.size / math.max(1, perShard)))
+    val shards = math.min(4096, math.max(1, victims.size / math.max(1, perShard)))
     val staged = if (shards > 1) matches.repartition(shards, col("file_path"))
                  else matches.coalesce(1)
     val adds = stageDeleteParts(spark, root) { (target, opts) =>
@@ -2642,7 +2629,7 @@ object GraftTable {
       f.content.contains(1) || f.content.contains(3))
     if (posDeletes.isEmpty) return snap.snapshotId
     val dataFiles = snap.files.filter(_.isData)
-    // the delete files are read DIRECTLY below (not through readPaths),
+    // the delete files are read DIRECTLY below (not through readFiles),
     // so a lazy follower must hydrate them here or the read 404s
     hydrate(root, posDeletes.map(_.path))
     // which data files actually carry deleted positions? (match on the
@@ -2747,22 +2734,19 @@ object GraftTable {
   def deleteWhereRouted(spark: SparkSession, root: String,
       filters: Seq[org.apache.spark.sql.sources.Filter],
       condition: Column): Long = withDmlRetry(root, "delete") {
-    val planner = ckptPlanner(spark, root, None)
-    val (schema, props) = dmlHeader(planner, root)
-    val mor = props.get("write.delete.mode").contains("merge-on-read")
+    val p = ckptPlanner(spark, root, None)
+    val mor = p.properties.get("write.delete.mode").contains("merge-on-read")
     // a keyed delete on identity-PARTITION columns is better than an
     // equality-delete file: whole files drop by metadata — computed
     // ONCE here and threaded into the MoR impl so the routing decision
     // and the commit share the same partition-plane pass
-    val drop =
-      if (mor) metadataDropVictims(spark, root, planner, schema, props, condition)
-      else None
-    if (mor && drop.isEmpty) equalityKeyFrame(spark, schema, filters) match {
+    val drop = if (mor) metadataDropVictims(spark, p, condition) else None
+    if (mor && drop.isEmpty) equalityKeyFrame(spark, p.schema, filters) match {
       case Some(keys) => return deleteEqualityMoR(spark, root, keys)
       case None => ()
     }
-    if (mor) deleteWhereMoRImpl(spark, root, condition, Nil, planner, Some(drop))
-    else overwriteWhereImpl(spark, root, condition, None, Nil, planner)
+    if (mor) deleteWhereMoRImpl(spark, root, condition, Nil, p, Some(drop))
+    else overwriteWhereImpl(spark, root, condition, None, Nil, p)
   }
 
   /** The key DataFrame for a routable membership predicate, or None.
@@ -3021,19 +3005,17 @@ object GraftTable {
   def update(spark: SparkSession, root: String, condition: Column,
       set: Map[String, Column],
       prunePreds: Seq[Pred] = Nil): Long = withDmlRetry(root, "update") {
-    val planner = ckptPlanner(spark, root, None)
-    val (schema, props) = dmlHeader(planner, root)
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    val p = ckptPlanner(spark, root, None)
+    val (schema, props) = (p.schema, p.properties)
     require(set.keySet.subsetOf(schema.fieldNames.toSet),
       s"unknown update columns: ${set.keySet -- schema.fieldNames}")
     val effective =
       if (prunePreds.nonEmpty) prunePreds
-      else extractPreds(conditionExpr(spark, schema, condition), types)
-    val (baseId, victimPaths, deletes, _) =
-      dmlVictims(spark, root, planner, schema, types, effective)
-    val id = baseId + 1
+      else extractPreds(conditionExpr(spark, schema, condition), p.types)
+    val (victims, deletes) = p.files(effective)
+    val id = p.targetId + 1
     val cond = coalesce(condition, lit(false))
-    val projected = readPaths(spark, root, schema, victimPaths, deletes)
+    val projected = readFiles(spark, root, schema, victims, deletes)
       .select(schema.fields.map { f =>
         set.get(f.name)
           .map(e => when(cond, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name))
@@ -3041,7 +3023,7 @@ object GraftTable {
       }.toIndexedSeq: _*)
     val adds = writeDataFiles(spark, root, projected, id, props)
     commitOrCleanup(root, id, Commit(id, Some(id - 1), System.currentTimeMillis(),
-      "update", adds, victimPaths, Map.empty, None))
+      "update", adds, victims.map(_.path), Map.empty, None))
   }
 
   // ── MERGE ───────────────────────────────────────────────────────────
@@ -3137,27 +3119,25 @@ object GraftTable {
     * result nondeterministic, so we fail loudly). */
   def merge(spark: SparkSession, root: String, source: DataFrame,
       keyCols: Seq[String]): Long = withDmlRetry(root, "merge") {
-    val planner = ckptPlanner(spark, root, None)
-    val (schema, props) = dmlHeader(planner, root)
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    require(keyCols.nonEmpty && keyCols.forall(types.contains), s"bad merge keys: $keyCols")
-    val preds = sourceKeyAnalysis(source, keyCols.map(k => (k, k)), types)
-    val (baseId, victimPaths, deletes, _) =
-      dmlVictims(spark, root, planner, schema, types, preds)
-    val id = baseId + 1
+    val p = ckptPlanner(spark, root, None)
+    val (schema, props) = (p.schema, p.properties)
+    require(keyCols.nonEmpty && keyCols.forall(p.types.contains), s"bad merge keys: $keyCols")
+    val preds = sourceKeyAnalysis(source, keyCols.map(k => (k, k)), p.types)
+    val (victims, deletes) = p.files(preds)
+    val id = p.targetId + 1
     val src = source.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    val kept = readPaths(spark, root, schema, victimPaths, deletes)
+    val kept = readFiles(spark, root, schema, victims, deletes)
       .join(src.select(keyCols.map(col): _*), keyCols, "left_anti")
     val adds = writeDataFiles(spark, root, kept.unionByName(src), id, props)
     // a full-table rewrite (no key bounds) leaves no rows the delete
     // files could refer to: retire them like overwriteWhere does, or
     // every such merge accretes dead-but-live delete files forever
-    val dropDeletes = if (preds.isEmpty) deletes.map(_._1) else Seq.empty
+    val dropDeletes = if (preds.isEmpty) deletes.map(_.path) else Seq.empty
     val (retSchemaJ, retProps) =
       if (preds.isEmpty) retiredNamesMeta(schema, props)
       else (None, Map.empty[String, String])
     commitOrCleanup(root, id, Commit(id, Some(id - 1), System.currentTimeMillis(),
-      "merge", adds, victimPaths ++ dropDeletes, retProps, retSchemaJ))
+      "merge", adds, victims.map(_.path) ++ dropDeletes, retProps, retSchemaJ))
   }
 
   /** Generalized MERGE with the full clause grammar. The plan is one
@@ -3208,9 +3188,8 @@ object GraftTable {
     if (commitProps.isEmpty && clauses == mergeDefaultClauses &&
         keyPairs.forall(p => p._1.equalsIgnoreCase(p._2)))
       return merge(spark, root, source, keyPairs.map(_._1))
-    val planner = ckptPlanner(spark, root, None)
-    val (schema, props) = dmlHeader(planner, root)
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    val p = ckptPlanner(spark, root, None)
+    val (schema, props, types) = (p.schema, p.properties, p.types)
     val keyCols = keyPairs.map(_._1)
     require(keyCols.nonEmpty && keyCols.forall(types.contains), s"bad merge keys: $keyCols")
     require(clauses.nonEmpty, "MERGE needs at least one WHEN clause")
@@ -3250,9 +3229,8 @@ object GraftTable {
     // a BY SOURCE clause can change ANY target row: no key-bounds
     // pruning — every live data file is a victim
     val preds = if (bySourceClauses.nonEmpty) Seq.empty else boundPreds
-    val (baseId, victimPaths, delFiles, _) =
-      dmlVictims(spark, root, planner, schema, types, preds)
-    val id = baseId + 1
+    val (victims, delFiles) = p.files(preds)
+    val id = p.targetId + 1
     // presence flags (not key-null checks: a target row may legally
     // carry null keys — it never matches, but it still exists).
     // Names are picked FRESH against the joined frame: create() only
@@ -3265,7 +3243,7 @@ object GraftTable {
       Iterator.iterate(base)(_ + "_").dropWhile(n => takenNames.contains(n.toLowerCase)).next()
     val tPresent = freshFlag("_gt_present")
     val sPresent = freshFlag("_g#s_present")
-    val tgt = readPaths(spark, root, schema, victimPaths, delFiles)
+    val tgt = readFiles(spark, root, schema, victims, delFiles)
       .withColumn(tPresent, lit(true))
     val srcRen = source
       .select(srcCols.map(c => col(c).as(mergeSourcePrefix + c)): _*)
@@ -3321,12 +3299,12 @@ object GraftTable {
     // full-table rewrite (BY SOURCE clauses, or no derivable key
     // bounds): no surviving file predates this commit, so live delete
     // files and historical column names retire with it
-    val dropDeletes = if (preds.isEmpty) delFiles.map(_._1) else Seq.empty
+    val dropDeletes = if (preds.isEmpty) delFiles.map(_.path) else Seq.empty
     val (retSchemaJ, retProps) =
       if (preds.isEmpty) retiredNamesMeta(schema, props)
       else (None, Map.empty[String, String])
     commitOrCleanup(root, id, Commit(id, Some(id - 1), System.currentTimeMillis(),
-      "merge", adds, victimPaths ++ dropDeletes, retProps ++ commitProps, retSchemaJ))
+      "merge", adds, victims.map(_.path) ++ dropDeletes, retProps ++ commitProps, retSchemaJ))
   }
 
   // ── read / time travel / pruning ────────────────────────────────────
@@ -3378,9 +3356,7 @@ object GraftTable {
     if (data.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         StructType(schema.fields :+ rowIdPhys))
-    val core = liveRowsWithIds(spark, root, schema, data.map(_.path),
-      deletes.map(f => (f.path, f.content.getOrElse(1), f.eqCols.getOrElse(Seq.empty))),
-      extraPhys = Seq(rowIdPhys))
+    val core = liveRowsWithIds(spark, root, schema, data, deletes, extraPhys = Seq(rowIdPhys))
     import spark.implicits._
     val m = data.map(f => (f.path.split('/').last, f.firstRowId))
       .toDF("_gf_lin_name", "_gf_first")
@@ -3433,8 +3409,7 @@ object GraftTable {
     import spark.implicits._
     val w = (bins.size - 1).toString.length
     val files = bins.zipWithIndex.flatMap { case (b, i) => b.map(_ -> s"%0${w}d".format(i)) }
-    val core = liveRowsWithIds(spark, root, schema, files.map(_._1.path),
-      deletes.map(f => (f.path, f.content.getOrElse(1), f.eqCols.getOrElse(Seq.empty))),
+    val core = liveRowsWithIds(spark, root, schema, files.map(_._1), deletes,
       extraPhys = Seq(rowIdPhys))
     val m = files.zipWithIndex.map { case ((f, bin), ord) =>
       (f.path.split('/').last, f.firstRowId, bin, ord)
@@ -3460,12 +3435,9 @@ object GraftTable {
     * re-applied row-wise above; pruning only shrinks the file list). */
   private[lake] def readWithRowIdsPruned(spark: SparkSession, root: String,
       asOf: Option[Long], preds: Seq[Pred]): DataFrame = {
-    val snap = state(root, asOf)
-    val schema = snap.schema
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    val data = prunedData(types, specHistory(snap.properties), preds,
-      snap.files.filter(_.isData), statAliases(schema))
-    readFilesWithLineage(spark, root, schema, data, snap.files.filter(_.isDelete))
+    val p = snapshotPlanner(state(root, asOf))
+    val (data, deletes) = p.files(preds)
+    readFilesWithLineage(spark, root, p.schema, data, deletes)
       .withColumnRenamed("_gf_row_id", "_row_id")
   }
 
@@ -3745,21 +3717,6 @@ object GraftTable {
       mayMatchPartition(types, specForFile(specs, f), preds)(f) &&
       mayMatch(types, preds, aliases)(f))
 
-  /** Read a set of data files, applying the snapshot's position-delete
-    * files (merge-on-read): rows are addressed by the parquet source's
-    * `_metadata.file_path`/`row_index` and anti-joined against the
-    * delete set. With no delete files this is a plain parquet scan
-    * (the fast path — no extra columns, no join). */
-  private def readFiles(spark: SparkSession, root: String, schema: StructType,
-      files: Seq[FileEntry], deletes: Seq[FileEntry]): DataFrame =
-    readPaths(spark, root, schema, files.map(_.path),
-      deletes.map(f => (f.path, f.content.getOrElse(1), f.eqCols.getOrElse(Seq.empty))))
-
-  /** `deletes` = (path, content, eqCols): content=1 position deletes
-    * anti-join on (file, row ordinal); content=2 equality deletes
-    * anti-join null-safely on their key columns, restricted to data
-    * files whose snapshot-id name prefix ≤ the delete's — later
-    * appends are NOT affected (the Iceberg sequence-number rule). */
   /** True when any field carries historical physical names (a rename
     * happened at or before this snapshot's schema). */
   private[lake] def hasRenames(schema: StructType): Boolean =
@@ -3784,27 +3741,39 @@ object GraftTable {
       else coalesce((f.name +: hs.reverse).map(col): _*).as(f.name)
     } ++ keep.map(col): _*)
 
-  private def readPaths(spark: SparkSession, root: String, schema: StructType,
-      dataPaths: Seq[String], deletes: Seq[(String, Int, Seq[String])]): DataFrame =
-    if (dataPaths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  /** Read a set of data files, applying the snapshot's delete files
+    * (merge-on-read, [[liveRowsWithIds]]). With no delete files this
+    * is a plain parquet scan (the fast path — no extra columns, no
+    * join). */
+  private def readFiles(spark: SparkSession, root: String, schema: StructType,
+      files: Seq[FileEntry], deletes: Seq[FileEntry]): DataFrame =
+    if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else if (deletes.isEmpty) {
-      val (remote, opts) = prepareV1Read(root, dataPaths)
+      val paths = files.map(_.path)
+      val (remote, opts) = prepareV1Read(root, paths)
       val raw = spark.read.options(opts).schema(physReadSchema(schema))
-        .parquet(dataPaths.map(p => remote.getOrElse(p, s"$root/$p")): _*)
+        .parquet(paths.map(p => remote.getOrElse(p, s"$root/$p")): _*)
       if (hasRenames(schema)) logicalProject(raw, schema) else raw
     }
-    else liveRowsWithIds(spark, root, schema, dataPaths, deletes)
+    else liveRowsWithIds(spark, root, schema, files, deletes)
       .drop("_gf_path", "_gf_pos", "_gf_snap")
 
   /** The MoR read core: data rows with their (_gf_path, _gf_pos,
-    * _gf_snap) identity columns, all delete files already applied. */
+    * _gf_snap) identity columns, all delete files already applied.
+    * Position deletes (content 1) and deletion-vector containers
+    * (content 3) anti-join on (file, row ordinal); equality deletes
+    * (content 2) anti-join null-safely on their key columns, restricted
+    * to data files whose snapshot-id name prefix is below the delete's
+    * — later appends are NOT affected (the Iceberg sequence-number
+    * rule). */
   private def liveRowsWithIds(spark: SparkSession, root: String, schema: StructType,
-      dataPaths: Seq[String], deletes: Seq[(String, Int, Seq[String])],
+      files: Seq[FileEntry], deletes: Seq[FileEntry],
       extraPhys: Seq[StructField] = Seq.empty): DataFrame = {
-    val (remote, opts) = prepareV1Read(root, dataPaths, deletes.map(_._1))
-    val posD = deletes.filter(_._2 == 1)
-    val dvD = deletes.filter(_._2 == 3)
-    val eqD = deletes.filter(_._2 == 2)
+    val dataPaths = files.map(_.path)
+    val (remote, opts) = prepareV1Read(root, dataPaths, deletes.map(_.path))
+    val posD = deletes.filter(_.content.contains(1))
+    val dvD = deletes.filter(_.content.contains(3))
+    val eqD = deletes.filter(_.content.contains(2))
     var df = spark.read.options(opts)
       .schema(StructType(physReadSchema(schema).fields ++ extraPhys))
       .parquet(dataPaths.map(p => remote.getOrElse(p, s"$root/$p")): _*)
@@ -3833,10 +3802,10 @@ object GraftTable {
       // executor-side and union in — one anti-join either way.
       val baseName = (c: Column) => substring_index(c, "/", -1)
       val posPart = Option.when(posD.nonEmpty)(
-        spark.read.schema(posDeleteSchema).parquet(posD.map(d => s"$root/${d._1}"): _*)
+        spark.read.schema(posDeleteSchema).parquet(posD.map(d => s"$root/${d.path}"): _*)
           .select(baseName(col("file_path")).as("_gf_name"), col("pos").as("_gf_pos")))
       val dvPart = Option.when(dvD.nonEmpty)(
-        GraftDv.positionsDf(spark, dvD.map(d => s"$root/${d._1}"), "_gf_name", "_gf_pos"))
+        GraftDv.positionsDf(spark, dvD.map(d => s"$root/${d.path}"), "_gf_name", "_gf_pos"))
       val del = (posPart.toSeq ++ dvPart).reduce(_.unionByName(_))
         .distinct()   // re-deleting an already-deleted row is a no-op
       df = df.withColumn("_gf_name", baseName(col("_gf_path")))
@@ -3856,15 +3825,14 @@ object GraftTable {
     // sharded equality delete commits many key files at one snapshot,
     // and joining them file-by-file would stack O(shards) anti-joins
     // into the plan — same sequence bound + same keys = one union read
-    eqD.groupBy { case (p, _, cols) =>
-      (p.split('/').last.takeWhile(_.isDigit).toLong, cols)
-    }.toSeq.sortBy { case ((snapId, cols), _) => (snapId, cols.mkString(",")) }
-      .foreach { case ((snapId, cols), files) =>
+    eqD.groupBy(d => (d.snapshotOfName, d.eqCols.getOrElse(Seq.empty)))
+      .toSeq.sortBy { case ((snapId, cols), _) => (snapId, cols.mkString(",")) }
+      .foreach { case ((snapId, cols), group) =>
         val liveCols = cols.map { c =>
           schema.fieldNames.find(_.equalsIgnoreCase(c))
             .orElse(prevToLive.get(c.toLowerCase))
             .getOrElse(throw new IllegalArgumentException(
-              s"equality-delete file(s) ${files.map(_._1).mkString(", ")} key on " +
+              s"equality-delete file(s) ${group.map(_.path).mkString(", ")} key on " +
                 s"'$c', which is not in the read schema (dropped after the delete " +
                 "was written); narrow the change range to end before the DROP " +
                 "COLUMN, or run rewrite_equality_deletes before dropping " +
@@ -3874,7 +3842,7 @@ object GraftTable {
         // gives their at-write key types (never the read schema's — a
         // key written as INT stays INT after a widening), and the read
         // then runs no schema-inference job
-        val paths = files.map(f => s"$root/${f._1}")
+        val paths = group.map(f => s"$root/${f.path}")
         val keys = spark.read.schema(parquetSchema(spark, paths.head)).parquet(paths: _*)
           .select(cols.map(c => col(c).as(s"_gfk_$c")): _*).distinct()
         val cond = cols.zip(liveCols).map { case (c, lc) =>
@@ -3890,13 +3858,8 @@ object GraftTable {
     * property-based cross-check (PruningPropertySpec) can assert the
     * pruned file set covers every matching row without a Spark job
     * per generated case. */
-  private[graft] def liveDataFiles(root: String, preds: Seq[Pred]): Seq[FileEntry] = {
-    val snap = state(root)
-    val schema = snap.schema
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    prunedData(types, specHistory(snap.properties), preds,
-      snap.files.filter(_.isData), statAliases(schema))
-  }
+  private[graft] def liveDataFiles(root: String, preds: Seq[Pred]): Seq[FileEntry] =
+    snapshotPlanner(state(root)).files(preds)._1
 
   /** Test-only twin of the readWhere predicate extraction: analyze a
     * Column against `schema` and extract the stats-text conjuncts. */
@@ -3912,14 +3875,16 @@ object GraftTable {
     * difference between listing a few files and scanning a lake. */
   def scan(spark: SparkSession, root: String, preds: Seq[Pred],
       asOf: Option[Long] = None): (DataFrame, Int, Int) = {
-    val snap = state(root, asOf)
-    val schema = snap.schema
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    val dataFiles = snap.files.filter(_.isData)
-    val live = prunedData(types, specHistory(snap.properties), preds, dataFiles,
-      statAliases(schema))
-    val df = readFiles(spark, root, schema, live, snap.files.filter(_.isDelete))
-    (applyPreds(df, types, preds), dataFiles.size, live.size)
+    val plan = scanWith(spark, root, snapshotPlanner(state(root, asOf)), preds)
+    (plan.df, plan.totalFiles.toInt, plan.liveFiles.toInt)
+  }
+
+  /** The pruned, delete-applied, predicate-filtered read `p` plans. */
+  private def scanWith(spark: SparkSession, root: String, p: FilePlanner,
+      preds: Seq[Pred]): ScanPlan = {
+    val (live, deletes) = p.files(preds)
+    ScanPlan(applyPreds(readFiles(spark, root, p.schema, live, deletes), p.types, preds),
+      p.totalData, live.size.toLong, p.distributed)
   }
 
   /** Apply the predicates as real row filters on the pruned scan, so
@@ -4130,62 +4095,73 @@ object GraftTable {
     * under `preds` — manifest-exact planner statistics (row counts are
     * pre-delete-file upper bounds, which is the conservative direction
     * for join sizing). */
-  private[lake] def statsForScan(spark: SparkSession, root: String, snap: Snapshot,
-      preds: Seq[Pred]): (Long, Long) = {
-    val schema = snap.schema
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    val live = prunedData(types, specHistory(snap.properties), preds,
-      snap.files.filter(_.isData), statAliases(schema))
+  private[lake] def statsForScan(snap: Snapshot, preds: Seq[Pred]): (Long, Long) = {
+    val live = snapshotPlanner(snap).files(preds)._1
     (math.max(1L, live.map(_.sizeBytes).sum), live.map(_.records).sum)
   }
 
   case class ScanPlan(df: DataFrame, totalFiles: Long, liveFiles: Long, distributed: Boolean)
 
-  /** Scan planning that scales with the manifest (SURVEY §5): below
-    * `graft.planning.distributed-threshold` files (default 1000), or
-    * without a parquet checkpoint, the driver prunes its in-memory
-    * FileEntry list exactly like scan(). Above it, pruning runs as a
-    * Spark job over `ckptfiles-N.parquet` and only the SURVIVING paths
-    * (plus the small post-checkpoint commit tail) ever reach the
-    * driver — at millions of files the manifest never materializes
-    * driver-side. Run rewriteManifests periodically to keep the tail
+  /** Scan planning that scales with the manifest (SURVEY §5): the
+    * same read as scan(), planned by [[ckptPlanner]] — a Spark job over
+    * `ckptfiles-N.parquet` above the planning threshold, so at millions
+    * of files the manifest never materializes driver-side. Run
+    * rewriteManifests periodically to keep the post-checkpoint tail
     * short, exactly as Iceberg/Delta checkpointing assumes. */
   def planScan(spark: SparkSession, root: String, preds: Seq[Pred],
       asOf: Option[Long] = None): ScanPlan =
-    ckptPlanner(spark, root, asOf) match {
-      case None =>
-        val (df, total, live) = scan(spark, root, preds, asOf)
-        ScanPlan(df, total.toLong, live.toLong, distributed = false)
-      case Some(p) =>
-        val types = p.schema.fields.map(f => f.name -> f.dataType).toMap
-        val (dataPaths, deletes, totalData) = p.prune(preds)
-        val df = applyPreds(readPaths(spark, root, p.schema, dataPaths, deletes),
-          types, preds)
-        ScanPlan(df, totalData(), dataPaths.size.toLong, distributed = true)
-    }
+    scanWith(spark, root, ckptPlanner(spark, root, asOf), preds)
 
-  /** The checkpoint-backed distributed planner shared by planScan and
-    * row-level DML victim selection: the table header (target
-    * snapshot, properties, schema) resolves from ckptmeta + ordered
-    * tail replay, and `prune` runs the stats/partition prune as a
-    * Spark job over the ckptfiles parquet — returning (live data
-    * paths, live delete files, total-data-count THUNK) with only the
-    * SURVIVORS ever reaching the driver. The count is lazy because
-    * only planScan's diagnostics want it — DML victim selection
-    * discards it, and forcing it there would cost every row-level op
-    * a second full-manifest job. None when no checkpoint covers the
-    * target or the file count sits below the planning threshold (the
-    * exact driver path is cheaper there). */
-  private[lake] case class CkptPlanner(targetId: Long,
-      properties: Map[String, String], schema: StructType,
-      prune: Seq[Pred] => (Seq[String], Seq[(String, Int, Seq[String])], () => Long),
-      /** Metadata-delete support (both closures are Spark jobs over the
-        * checkpoint parquet, never a driver file list): the DISTINCT
-        * (partition tuple, specId) pairs of live data files — O(live
-        * partitions) driver rows — and a resolver from satisfied
-        * partition strings to victim paths. */
-      partitionPlane: () => (Seq[(Option[Map[String, String]], Int)],
-        Set[String] => Seq[String]))
+  /** Which data and delete files snapshot `targetId` serves under a
+    * predicate set: THE planning decision. Every read, every DML op
+    * and the native scan ask a planner, so no two planes can disagree
+    * on a file list. Two backings, one rule ([[ckptPlanner]]): below
+    * `graft.planning.distributed-threshold` live files (default 1000),
+    * or with no parquet checkpoint covering the target, the driver
+    * prunes the replayed Snapshot's FileEntry list
+    * ([[snapshotPlanner]]); at or above it the prune runs as ONE Spark
+    * job over `ckptfiles-N.parquet` plus the post-checkpoint tail, and
+    * only survivors reach the driver ([[checkpointPlanner]] — those
+    * entries carry no stats maps, so runtime filters prune them by
+    * partition tuple only). The rule reads the ckptmeta's file count
+    * alone, before any tail commit.
+    *  - `files(preds)`: (data files surviving partition + stats
+    *    pruning, every live delete file)
+    *  - `totalData`: the live data-file count — lazy, since only
+    *    planScan's diagnostics want it and above the threshold it is
+    *    a second job over the checkpoint
+    *  - `partitionPlane()`: metadata-delete support — the DISTINCT
+    *    (partition tuple, specId) pairs of live data files and a
+    *    resolver from satisfied partition strings to victim paths */
+  private[lake] abstract class FilePlanner(val targetId: Long,
+      val properties: Map[String, String], val schema: StructType) {
+    val specs: IndexedSeq[Seq[PTransform]] = specHistory(properties)
+    val types: Map[String, DataType] = schema.fields.map(f => f.name -> f.dataType).toMap
+    protected lazy val aliases: StatAliases = statAliases(schema)
+    def distributed: Boolean
+    def files(preds: Seq[Pred]): (Seq[FileEntry], Seq[FileEntry])
+    def totalData: Long
+    def partitionPlane(): (Seq[(Option[Map[String, String]], Int)], Set[String] => Seq[String])
+  }
+
+  private def partitionPairs(data: Seq[FileEntry]): Seq[(Option[Map[String, String]], Int)] =
+    data.map(f => (f.partition.filter(_.nonEmpty), f.specIdOr0)).distinct
+
+  private def filesInPartitions(data: Seq[FileEntry], sat: Set[String]): Seq[String] =
+    data.filter(f => f.partition.filter(_.nonEmpty).exists(m => sat.contains(tupleString(m))))
+      .map(_.path)
+
+  /** The driver planner over a snapshot already in hand (the replay
+    * cache's, or the caller's own): no log read, no Spark job. */
+  private[lake] def snapshotPlanner(snap: Snapshot): FilePlanner =
+    new FilePlanner(snap.snapshotId, snap.properties, snap.schema) {
+      private val (data, deletes) = snap.files.partition(_.isData)
+      def distributed: Boolean = false
+      def files(preds: Seq[Pred]): (Seq[FileEntry], Seq[FileEntry]) =
+        (prunedData(types, specs, preds, data, aliases), deletes)
+      def totalData: Long = data.size.toLong
+      def partitionPlane() = (partitionPairs(data), filesInPartitions(data, _))
+    }
 
   /** Meta + ordered tail replay for the newest parquet checkpoint at
     * or before `target` — THE shared replay discipline behind scan
@@ -4277,103 +4253,76 @@ object GraftTable {
     }
   }
 
+  /** The planner of snapshot `asOf` (default: main's head), by the
+    * rule on [[FilePlanner]]. Below the threshold this costs one
+    * ckptmeta probe on top of the cached replay, nothing more. */
   private def ckptPlanner(spark: SparkSession, root: String,
-      asOf: Option[Long]): Option[CkptPlanner] = {
+      asOf: Option[Long]): FilePlanner = {
     val ids = listCommitIds(root)
     require(ids.nonEmpty, s"not a GraftTable (empty log): $root")
     val target = asOf.getOrElse(mainHeadId(root, ids))
     require(ids.contains(target),   // same loud contract as state()
       s"snapshot $target not in log (expired or never existed); have ${ids.min}..${ids.max}")
-    val ctOpt = ckptTail(root, target)
-    if (ctOpt.isEmpty) return None
-    val ct = ctOpt.get
-    val schema = ct.schema
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    val specs = specHistory(ct.props)
-    val props = ct.props
-    // tail-touched paths resolve from the delta (re-adds carry their
-    // full FileEntry); untouched paths resolve from the checkpoint
-    val tailAdds = ct.tailAdds
-    Some(CkptPlanner(target, props, schema, { preds =>
-      val ckDf = ckptSurvivorsDf(spark, root, ct)
-      val aliases = statAliases(schema)
-      val pruneCond = preds.map(predCond(types, specs, _, aliases))
-        .foldLeft(col("content") === 0)(_ && _)
-      // ONE job returns live paths + the (tiny) delete list + the total
-      val rows = ckDf
-        .withColumn("live", pruneCond)
-        .filter(col("content") =!= 0 || col("live"))
-        .select(col("path"), col("content"), col("live"), col("eqcols"))
-        .collect()
-      val ckLive = rows.filter(r => r.getInt(1) == 0 && r.getBoolean(2)).map(_.getString(0))
-      val ckDeletes = rows.filter(_.getInt(1) != 0)
-        .map(r => (r.getString(0), r.getInt(1), r.getSeq[String](3)))
-      val tailLive = prunedData(types, specs, preds, tailAdds, aliases)
-      val dataPaths = ckLive.toSeq ++ tailLive.map(_.path)
-      val deletes = ckDeletes.toSeq ++ tailAdds.filter(_.isDelete)
-        .map(f => (f.path, f.content.getOrElse(1), f.eqCols.getOrElse(Seq.empty)))
-      val totalData = () =>
-        ckDf.filter(col("content") === 0).count() + tailAdds.count(_.isData)
-      (dataPaths, deletes, totalData)
-    }, () => {
-      val ckDf = ckptSurvivorsDf(spark, root, ct)
-      // dedupe on the RENDERED tuple: set ops on MAP columns are
-      // unsupported, and the string is the join key downstream anyway
-      val pairs = ckDf.filter(col("content") === 0)
-        .select(col("partition"), coalesce(col("specId"), lit(0)).as("sid"),
-          partStringCol(coalesce(col("partition"),
-            map().cast("map<string,string>"))).as("_gps"))
-        .dropDuplicates("_gps", "sid").collect()
-        .map(r => (Option(r.getAs[scala.collection.Map[String, String]](0))
-          .map(_.toMap).filter(_.nonEmpty), r.getInt(1))).toSeq
-      val tailPairs = tailAdds.filter(_.isData)
-        .map(f => (f.partition.filter(_.nonEmpty), f.specIdOr0)).distinct
-      val resolve = (sat: Set[String]) =>
-        if (sat.isEmpty) Seq.empty[String]
-        else {
-          import spark.implicits._
-          val satDf = sat.toSeq.toDF("_gsat")
-          val ckVictims = ckDf.filter(col("content") === 0)
-            .join(satDf, partStringCol(col("partition")) === col("_gsat"), "left_semi")
-            .select(col("path")).collect().map(_.getString(0)).toSeq
-          ckVictims ++ tailAdds.filter(f => f.isData &&
-            f.partition.filter(_.nonEmpty).exists(m => sat.contains(tupleString(m))))
-            .map(_.path)
-        }
-      ((pairs ++ tailPairs).distinct, resolve)
-    }))
+    ckptTail(root, target).map(checkpointPlanner(spark, root, target, _))
+      .getOrElse(snapshotPlanner(state(root, asOf)))
   }
 
-  /** Row-level DML victim selection (r8 verdict: the last driver-memory
-    * ceiling): with a live checkpoint above the planning threshold and
-    * real pruning predicates, victims resolve through the SAME
-    * distributed prune reads use — the driver holds only the victim
-    * paths (which the commit must name in `removes` regardless) plus
-    * the live delete-file list, never the full entry list. Empty preds
-    * (a full-table rewrite, O(table) by definition) still ride the
-    * planner — prune(Seq.empty) keeps everything but never replays
-    * FileEntries on the driver. Without a checkpoint the exact driver
-    * path plans as before. Returns (base snapshot id, victim data
-    * paths, live delete files, planned-distributed). */
-  private def dmlVictims(spark: SparkSession, root: String,
-      planner: Option[CkptPlanner], schema: StructType,
-      types: Map[String, DataType], preds: Seq[Pred])
-      : (Long, Seq[String], Seq[(String, Int, Seq[String])], Boolean) =
-    planner match {
-      case Some(p) =>
-        val (victims, dels, _) = p.prune(preds)
-        (p.targetId, victims, dels, true)
-      case _ =>
-        val snap = state(root)
-        val dataFiles = snap.files.filter(_.isData)
-        val touched =
-          if (preds.isEmpty) dataFiles
-          else prunedData(types, specHistory(snap.properties), preds, dataFiles,
-            statAliases(schema))
-        (snap.snapshotId, touched.map(_.path),
-          snap.files.filter(_.isDelete)
-            .map(f => (f.path, f.content.getOrElse(1), f.eqCols.getOrElse(Seq.empty))),
-          false)
+  /** The checkpoint-backed planner: the header (properties, schema)
+    * resolves from ckptmeta + ordered tail replay, and every prune is
+    * one Spark job over the checkpoint parquet. Tail-touched paths
+    * resolve from the tail delta (re-adds carry their full FileEntry);
+    * untouched paths resolve from the checkpoint. */
+  private def checkpointPlanner(spark: SparkSession, root: String, target: Long,
+      ct: CkptTail): FilePlanner =
+    new FilePlanner(target, ct.props, ct.schema) {
+      private val tailAdds = ct.tailAdds
+      private val tailData = tailAdds.filter(_.isData)
+      private def survivors = ckptSurvivorsDf(spark, root, ct)
+      def distributed: Boolean = true
+      def files(preds: Seq[Pred]): (Seq[FileEntry], Seq[FileEntry]) = {
+        val live = preds.map(predCond(types, specs, _, aliases)).foldLeft(lit(true))(_ && _)
+        // ONE job returns the surviving data files and the (tiny)
+        // delete list: delete files survive any predicate
+        val (ckData, ckDeletes) = survivors
+          .filter(col("content") =!= 0 || live)
+          .select(col("path"), col("sizeBytes"), col("records"), col("partition"),
+            col("content"), col("eqcols"), col("specId"), col("firstRowId"))
+          .collect().toSeq.map { r =>
+            FileEntry(r.getString(0), r.getLong(1), r.getLong(2), Map.empty,
+              Option(r.getAs[scala.collection.Map[String, String]](3)).map(_.toMap)
+                .filter(_.nonEmpty),
+              Some(r.getInt(4)).filter(_ != 0),
+              Option(r.getAs[scala.collection.Seq[String]](5)).map(_.toSeq).filter(_.nonEmpty),
+              Option.when(!r.isNullAt(6))(r.getInt(6)),
+              Option.when(!r.isNullAt(7))(r.getLong(7)))
+          }.partition(_.isData)
+        (ckData ++ prunedData(types, specs, preds, tailData, aliases),
+          ckDeletes ++ tailAdds.filter(_.isDelete))
+      }
+      lazy val totalData: Long =
+        survivors.filter(col("content") === 0).count() + tailData.size
+      def partitionPlane() = {
+        val ckData = survivors.filter(col("content") === 0)
+        // dedupe on the RENDERED tuple: set ops on MAP columns are
+        // unsupported, and the string is the join key downstream anyway
+        val pairs = ckData
+          .select(col("partition"), coalesce(col("specId"), lit(0)).as("sid"),
+            partStringCol(coalesce(col("partition"),
+              map().cast("map<string,string>"))).as("_gps"))
+          .dropDuplicates("_gps", "sid").collect()
+          .map(r => (Option(r.getAs[scala.collection.Map[String, String]](0))
+            .map(_.toMap).filter(_.nonEmpty), r.getInt(1))).toSeq
+        val resolve = (sat: Set[String]) =>
+          if (sat.isEmpty) Seq.empty[String]
+          else {
+            import spark.implicits._
+            ckData.join(sat.toSeq.toDF("_gsat"),
+                partStringCol(col("partition")) === col("_gsat"), "left_semi")
+              .select(col("path")).collect().map(_.getString(0)).toSeq ++
+              filesInPartitions(tailData, sat)
+          }
+        ((pairs ++ partitionPairs(tailData)).distinct, resolve)
+      }
     }
 
   /** Rendered-tuple-text → external value for local predicate
@@ -4428,36 +4377,22 @@ object GraftTable {
     * nondeterministic or touches any non-identity-partition column;
     * any live data file predates the current spec or lacks tuple
     * values (its rows are NOT pinned); or a partition value fails to
-    * parse. */
-  private def metadataDropVictims(spark: SparkSession, root: String,
-      planner: Option[CkptPlanner], schema: StructType,
-      props: Map[String, String], condition: Column): Option[(Long, Seq[String])] = {
+    * parse. Returns the victim paths, planned against `p.targetId`. */
+  private def metadataDropVictims(spark: SparkSession, p: FilePlanner,
+      condition: Column): Option[Seq[String]] = {
+    val schema = p.schema
     val expr = conditionExpr(spark, schema, condition)
     if (!expr.deterministic) return None
     val refs = expr.references.map(_.name).toSet
     if (refs.isEmpty) return None
-    val idCols = tableSpec(props).collect { case PIdentity(c) => c }.toSet
+    val idCols = tableSpec(p.properties).collect { case PIdentity(c) => c }.toSet
     if (!refs.subsetOf(idCols)) return None
-    val curSpecId = specHistory(props).size - 1
+    val curSpecId = p.specs.size - 1
     val refFields = schema.fields.filter(f => refs.contains(f.name)).toSeq
     if (refFields.size != refs.size) return None
     // type-support decline BEFORE any planner job (decimals etc.)
     if (!refFields.forall(f => partValueParseable(f.dataType))) return None
-    val (pairsAndBase, resolve): ((Seq[(Option[Map[String, String]], Int)], Long),
-        Set[String] => Seq[String]) = planner match {
-      case Some(p) =>
-        val (pairs, res) = p.partitionPlane()
-        ((pairs, p.targetId), res)
-      case None =>
-        val snap = state(root)
-        val files = snap.files.filter(_.isData)
-        ((files.map(f => (f.partition.filter(_.nonEmpty), f.specIdOr0)).distinct,
-          snap.snapshotId),
-          (sat: Set[String]) => files.filter(f =>
-            f.partition.filter(_.nonEmpty)
-              .exists(m => sat.contains(tupleString(m)))).map(_.path))
-    }
-    val (pairs, baseId) = pairsAndBase
+    val (pairs, resolve) = p.partitionPlane()
     // every live data file must be pinned by the CURRENT spec's tuples
     if (pairs.exists { case (t, sid) =>
       sid != curSpecId || !t.exists(m => refs.forall(m.contains)) }) return None
@@ -4479,18 +4414,8 @@ object GraftTable {
       .collect().map(_.getInt(0)).toSet
     val sat = parsed.zipWithIndex.collect {
       case ((m, _), i) if satIdx(i) => tupleString(m) }.toSet
-    Some((baseId, resolve(sat)))
+    Some(resolve(sat))
   }
-
-  /** Header (schema + properties) for DML planning: off the checkpoint
-    * planner when one is live (no full replay), else the cached
-    * driver state. */
-  private def dmlHeader(planner: Option[CkptPlanner],
-      root: String): (StructType, Map[String, String]) =
-    planner.map(p => (p.schema, p.properties)).getOrElse {
-      val s = state(root)
-      (s.schema, s.properties)
-    }
 
   /** DELETE whose WHERE needs the full SQL analyzer — IN/EXISTS/scalar
     * subqueries the Column front door cannot express. The live rows
@@ -4522,18 +4447,16 @@ object GraftTable {
     * relation when the inner table has a same-named column. */
   private def rewriteBySql(spark: SparkSession, root: String, whereSql: String,
       set: Option[Map[String, String]], targetAlias: Option[String] = None): Long = {
-    val planner = ckptPlanner(spark, root, None)
-    val (schema, props) = dmlHeader(planner, root)
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    val p = ckptPlanner(spark, root, None)
+    val (schema, props) = (p.schema, p.properties)
     set.foreach(s => require(s.keySet.subsetOf(schema.fieldNames.toSet),
       s"unknown update columns: ${s.keySet -- schema.fieldNames}"))
-    val (baseId, allPaths, deletes, _) =
-      dmlVictims(spark, root, planner, schema, types, Seq.empty)
-    val id = baseId + 1
+    val (all, deletes) = p.files(Seq.empty)
+    val id = p.targetId + 1
     val op = if (set.isEmpty) "overwrite" else "update"
     val view = s"graft_dml_${UUID.randomUUID().toString.replace("-", "")}"
     val vview = view + "_victims"
-    liveRowsWithIds(spark, root, schema, allPaths, deletes)
+    liveRowsWithIds(spark, root, schema, all, deletes)
       .drop("_gf_pos", "_gf_snap").createOrReplaceTempView(view)
     val from = targetAlias.fold(view)(a => s"$view AS `$a`")
     try {
@@ -4542,7 +4465,7 @@ object GraftTable {
       val victimNames = spark.sql(
         s"SELECT DISTINCT _gf_path FROM $from WHERE $whereSql")
         .collect().map(_.getString(0).split('/').last).toSet
-      val victims = allPaths.filter(p => victimNames.contains(p.split('/').last))
+      val victims = all.filter(f => victimNames.contains(f.path.split('/').last))
       if (victims.isEmpty) {
         return commitOrCleanup(root, id, Commit(id, Some(id - 1),
           System.currentTimeMillis(), op, Seq.empty, Seq.empty, Map.empty, None))
@@ -4570,13 +4493,13 @@ object GraftTable {
       val adds = writeDataFiles(spark, root, rewritten, id, props)
       // every live file held a matching row → full rewrite: retire the
       // delete files and historical names with it (overwriteWhere's rule)
-      val fullRewrite = victims.size == allPaths.size
-      val dropDeletes = if (fullRewrite) deletes.map(_._1) else Seq.empty
+      val fullRewrite = victims.size == all.size
+      val dropDeletes = if (fullRewrite) deletes.map(_.path) else Seq.empty
       val (retSchemaJ, retProps) =
         if (fullRewrite) retiredNamesMeta(schema, props)
         else (None, Map.empty[String, String])
       commitOrCleanup(root, id, Commit(id, Some(id - 1), System.currentTimeMillis(),
-        op, adds, victims ++ dropDeletes, retProps, retSchemaJ))
+        op, adds, victims.map(_.path) ++ dropDeletes, retProps, retSchemaJ))
     } finally {
       spark.catalog.dropTempView(view)
       scala.util.Try(spark.catalog.dropTempView(vview))
@@ -4589,11 +4512,9 @@ object GraftTable {
     * merge / overwriteWhere run this exact path. */
   def planDmlProbe(spark: SparkSession, root: String,
       preds: Seq[Pred]): (Seq[String], Seq[String], Boolean) = {
-    val planner = ckptPlanner(spark, root, None)
-    val (schema, _) = dmlHeader(planner, root)
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    val (_, victims, dels, dist) = dmlVictims(spark, root, planner, schema, types, preds)
-    (victims, dels.map(_._1), dist)
+    val p = ckptPlanner(spark, root, None)
+    val (victims, dels) = p.files(preds)
+    (victims.map(_.path), dels.map(_.path), p.distributed)
   }
 
   // ── change data capture ─────────────────────────────────────────────
@@ -5058,14 +4979,9 @@ object GraftTable {
     * entirely. */
   def readWhere(spark: SparkSession, root: String, condition: Column,
       asOf: Option[Long] = None): DataFrame = {
-    val snap = state(root, asOf)
-    val schema = snap.schema
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    val preds = extractPreds(conditionExpr(spark, schema, condition), types)
-    val live = prunedData(types, specHistory(snap.properties), preds,
-      snap.files.filter(_.isData), statAliases(schema))
-    readFiles(spark, root, schema, live, snap.files.filter(_.isDelete))
-      .filter(condition)
+    val p = snapshotPlanner(state(root, asOf))
+    val (live, deletes) = p.files(extractPreds(conditionExpr(spark, p.schema, condition), p.types))
+    readFiles(spark, root, p.schema, live, deletes).filter(condition)
   }
 
   // ── metadata tables (reference: .snapshots/.files/.history) ─────────
@@ -5421,21 +5337,13 @@ object GraftTable {
       name: String): Long = {
     val head = branchHeadId(root, name)
     val base = branches(root)(name)
-    val snap = state(root, Some(head))
-    val schema = snap.schema
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    val preds = extractPreds(conditionExpr(spark, schema, condition), types)
-    val dataFiles = snap.files.filter(_.isData)
-    val victims =
-      if (preds.isEmpty) dataFiles
-      else prunedData(types, specHistory(snap.properties), preds, dataFiles,
-        statAliases(schema))
-    val deletes = snap.files.filter(_.isDelete)
-      .map(f => (f.path, f.content.getOrElse(1), f.eqCols.getOrElse(Seq.empty)))
+    val p = snapshotPlanner(state(root, Some(head)))
+    val (victims, deletes) =
+      p.files(extractPreds(conditionExpr(spark, p.schema, condition), p.types))
     val id = math.max(head, listCommitIds(root).max) + 1
-    val kept = readPaths(spark, root, schema, victims.map(_.path), deletes)
+    val kept = readFiles(spark, root, p.schema, victims, deletes)
       .filter(!coalesce(condition, lit(false)))
-    val adds = writeDataFiles(spark, root, kept, id, snap.properties)
+    val adds = writeDataFiles(spark, root, kept, id, p.properties)
     commitOrCleanup(root, id, Commit(id, Some(head),
       System.currentTimeMillis(), "branch_overwrite", adds, victims.map(_.path),
       Map(branchNameProp -> name, branchBaseProp -> base.toString), None))
@@ -5453,24 +5361,15 @@ object GraftTable {
       keyCols: Seq[String], name: String): Long = {
     val head = branchHeadId(root, name)
     val base = branches(root)(name)
-    val snap = state(root, Some(head))
-    val schema = snap.schema
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    require(keyCols.nonEmpty && keyCols.forall(types.contains),
+    val p = snapshotPlanner(state(root, Some(head)))
+    require(keyCols.nonEmpty && keyCols.forall(p.types.contains),
       s"bad merge keys: $keyCols")
-    val preds = sourceKeyAnalysis(source, keyCols.map(k => (k, k)), types)
-    val dataFiles = snap.files.filter(_.isData)
-    val victims =
-      if (preds.isEmpty) dataFiles
-      else prunedData(types, specHistory(snap.properties), preds, dataFiles,
-        statAliases(schema))
-    val deletes = snap.files.filter(_.isDelete)
-      .map(f => (f.path, f.content.getOrElse(1), f.eqCols.getOrElse(Seq.empty)))
+    val (victims, deletes) = p.files(sourceKeyAnalysis(source, keyCols.map(k => (k, k)), p.types))
     val id = math.max(head, listCommitIds(root).max) + 1
-    val src = source.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    val kept = readPaths(spark, root, schema, victims.map(_.path), deletes)
+    val src = source.select(p.schema.fieldNames.map(col).toIndexedSeq: _*)
+    val kept = readFiles(spark, root, p.schema, victims, deletes)
       .join(src.select(keyCols.map(col): _*), keyCols, "left_anti")
-    val adds = writeDataFiles(spark, root, kept.unionByName(src), id, snap.properties)
+    val adds = writeDataFiles(spark, root, kept.unionByName(src), id, p.properties)
     commitOrCleanup(root, id, Commit(id, Some(head),
       System.currentTimeMillis(), "branch_merge", adds, victims.map(_.path),
       Map(branchNameProp -> name, branchBaseProp -> base.toString), None))
@@ -6188,7 +6087,7 @@ object GraftTable {
       k => concat(k, lit("="), element_at(m, k))), "/")
 
   /** (file count, threshold) from a parsed ckptmeta — THE
-    * driver-vs-distributed decision, shared by planScan and the
+    * driver-vs-distributed decision, shared by ckptPlanner and the
     * metadata views so the two planners can never split. */
   private def scaleOf(meta: Commit): (Long, Long) =
     (meta.properties.get("graft.ckpt.file-count").map(_.toLong).getOrElse(0L),
@@ -6414,22 +6313,15 @@ object GraftTable {
       else snap.properties.get("write.target-file-size-bytes")
         .map(_.toLong).getOrElse(128L * 1024 * 1024)
     val schema = snap.schema
-    val deletes = snap.files.filter(_.isDelete)
-    val smallAll = snap.files.filter(f => f.isData && f.sizeBytes < target)
+    val p = snapshotPlanner(snap)
     // rewrite_data_files(where => ...): compaction scoped to the
     // files the predicate may touch — "compact this partition"
     // without rewriting the table (the Iceberg procedure's `where`).
     // FILE selection only, rows are never filtered; an untranslatable
     // predicate keeps the full scope (conservative superset).
-    val small = where match {
-      case None => smallAll
-      case Some(cond) =>
-        val types = schema.fields.map(f => f.name -> f.dataType).toMap
-        val preds = extractPreds(conditionExpr(spark, schema, cond), types)
-        if (preds.isEmpty) smallAll
-        else prunedData(types, specHistory(snap.properties), preds, smallAll,
-          statAliases(schema))
-    }
+    val (live, deletes) =
+      p.files(where.toSeq.flatMap(c => extractPreds(conditionExpr(spark, schema, c), p.types)))
+    val small = live.filter(_.sizeBytes < target)
     if (small.isEmpty || small.size < minInputFiles) return snap.snapshotId
     // clustered tables: order candidate files by the partition
     // column's min stat UNDER THE COLUMN'S OWN COMPARATOR (a
@@ -6464,14 +6356,14 @@ object GraftTable {
     // a bin-pack that happens to rewrite EVERY live data file is a
     // full rewrite: retire historical names in the same commit
     val (retSchemaJ, retProps) =
-      if (small.size == snap.files.count(_.isData))
+      if (small.size == p.totalData)
         retiredNamesMeta(schema, snap.properties)
       else (None, Map.empty[String, String])
     val id = snap.snapshotId + 1   // planned against snap: conflicts fail loudly
     // live deletes apply in the read, so compacted files never
     // resurrect deleted rows
     val written =
-      if (snapshotNativePlan(spark, snap, Nil).isDefined) {
+      if (nativePlan(spark, p, Nil).isDefined) {
         // each task reads one bin in source order: only a partitioned
         // table's tuple sort needs the (file, position) tie-break
         val positions = tableSpec(snap.properties).nonEmpty
@@ -6626,19 +6518,6 @@ object GraftTable {
     target
   }
 
-  /** One checkpoint = artifacts at the same snapshot id:
-    *  - checkpoint-N.json       full file list — written only by the
-    *                            sub-threshold driver build; the
-    *                            distributed delta build skips it and
-    *                            the parquet is authoritative
-    *  - ckptmeta-N.json         properties/schema + file COUNT, no adds
-    *                            (O(1) parse, lets planScan decide
-    *                            driver-vs-distributed without touching
-    *                            the file list)
-    *  - ckptfiles-N.parquet     the file list as parquet, readable by
-    *                            executors for distributed pruning
-    * All are derived state: losing a put-if-absent race to an
-    * identical writer is fine. */
   /** ckptfiles-N.parquet rows as explicit Row + schema: a case-class
     * Dataset here trips Janino on the nested-in-object encoder (Spark
     * logs a CompileException and falls back to interpreted encoding on
@@ -6689,6 +6568,19 @@ object GraftTable {
     if (won) LakeStore.at(target).checkpointPlaced(target)
   }
 
+  /** One checkpoint = artifacts at the same snapshot id:
+    *  - checkpoint-N.json       full file list — written only by the
+    *                            sub-threshold driver build; the
+    *                            distributed delta build skips it and
+    *                            the parquet is authoritative
+    *  - ckptmeta-N.json         properties/schema + file COUNT, no adds
+    *                            (O(1) parse, lets ckptPlanner decide
+    *                            driver-vs-distributed without touching
+    *                            the file list)
+    *  - ckptfiles-N.parquet     the file list as parquet, readable by
+    *                            executors for distributed pruning
+    * All are derived state: losing a put-if-absent race to an
+    * identical writer is fine. */
   private def writeCheckpointArtifacts(root: String, snap: Snapshot): Unit = {
     val c = Commit(snap.snapshotId, None, snap.timestampMs, "checkpoint",
       snap.files, Seq.empty, snap.properties, Some(snap.schema.json))
@@ -6948,20 +6840,6 @@ object GraftTable {
     rows.toDF("key", "value")
   }
 
-  /** remove_orphan_files (reference: SPARK_ICEBERG_GUIDE.md §8.6):
-    * data files referenced by NO retained snapshot and older than the
-    * horizon. Returns deleted (or would-delete, if dryRun) paths.
-    *
-    * Referenced = every file ADDED by any retained commit or
-    * checkpoint (one forward pass — a full per-snapshot replay would
-    * be O(commits²) for the same answer, since removed files stay
-    * referenced by the older snapshots that still list them). Above
-    * the shared planning threshold the checkpoints' O(table) add
-    * lists stay in their `ckptfiles-K.parquet` form and membership is
-    * a distributed anti-join; the driver then holds only the
-    * directory listing (which any FS engine must enumerate to sweep)
-    * and the retained commits' adds — planScan's split, applied to
-    * maintenance. */
   /** The orphan JUDGMENT, separated from candidate discovery: which of
     * `rels` ("data/x.parquet" / "deletes/x.parquet" table-relative
     * paths) are referenced by NO commit in the log — retained, staged
@@ -7003,6 +6881,20 @@ object GraftTable {
     }
   }
 
+  /** remove_orphan_files (reference: SPARK_ICEBERG_GUIDE.md §8.6):
+    * data files referenced by NO retained snapshot and older than the
+    * horizon. Returns deleted (or would-delete, if dryRun) paths.
+    *
+    * Referenced = every file ADDED by any retained commit or
+    * checkpoint (one forward pass — a full per-snapshot replay would
+    * be O(commits²) for the same answer, since removed files stay
+    * referenced by the older snapshots that still list them). Above
+    * the shared planning threshold the checkpoints' O(table) add
+    * lists stay in their `ckptfiles-K.parquet` form and membership is
+    * a distributed anti-join; the driver then holds only the
+    * directory listing (which any FS engine must enumerate to sweep)
+    * and the retained commits' adds — planScan's split, applied to
+    * maintenance. */
   def removeOrphanFiles(root: String, olderThanMs: Long,
       dryRun: Boolean = false): Seq[String] = {
     val candidates = (listDir(dataDir(root)).map(("data", _)) ++
@@ -7077,7 +6969,7 @@ object GraftTable {
     * Non-empty `bins` puts the scan in bin mode (compaction's input):
     * `entries` are the bins' files, and each bin is one input
     * partition ([[binScanPlan]]). */
-  private[lake] case class NativePlan(schema: StructType,
+  private[graft] case class NativePlan(schema: StructType,
       entries: Seq[FileEntry], specs: IndexedSeq[Seq[PTransform]],
       currentSpecId: Int, distributedPlanned: Boolean,
       deletes: Seq[FileEntry] = Seq.empty,
@@ -7142,92 +7034,33 @@ object GraftTable {
         })
   }
 
-  /** Plan a scan for the native (DSv2 Batch / columnar) read path, or
-    * None when the snapshot needs read-time semantics only the
-    * DataFrame plane provides — a delete shape the deletion-vector
-    * reader can't serve (non-hashable or renamed equality keys).
-    * Renamed columns stay native: the plan carries the rename
-    * alternatives and the wrapping reader resolves which name each
-    * file physically carries (footer field set, cached per executor).
-    * Live MoR delete files ride along in `deletes` and apply
-    * as per-file row-index / key-set filters inside the columnar
-    * reader (GraftMorReaderFactory). Widened types and ADD-COLUMN
-    * null-fill stay native: both planes hand the SAME explicit read
-    * schema to the same vectorized parquet reader.
-    *
-    * Below the planning threshold the driver's entry list prunes
-    * exactly as scan() does; above it the prune runs as ONE Spark job
-    * over the checkpoint parquet and only survivors (path, size,
-    * records, partition, specId — no stats maps) reach the driver,
-    * the same discipline as planScan. A live delete file discovered by
-    * that job falls back (returns None) — the V1 plane re-plans, so
-    * MoR-heavy tables above threshold pay one extra metadata job. */
-  private[lake] def planNativeScan(spark: SparkSession, root: String,
-      preds: Seq[Pred], asOf: Option[Long]): Option[NativePlan] = {
-    val ids = listCommitIds(root)
-    if (ids.isEmpty) return None
-    val target = asOf.getOrElse(mainHeadId(root, ids))
-    if (!ids.contains(target)) return None   // V1 plane raises the loud error
-    ckptTail(root, target) match {
-      case Some(ct) =>
-        val schema = ct.schema
-        if (renamesAmbiguous(schema)) return None
-        val types = schema.fields.map(f => f.name -> f.dataType).toMap
-        val specs = specHistory(ct.props)
-        val aliases = statAliases(schema)
-        val keepCond = preds.map(predCond(types, specs, _, aliases))
-          .foldLeft(lit(true))(_ && _)
-        // delete files always survive the prune filter (they apply to
-        // whatever data files remain, regardless of the predicates)
-        val rows = ckptSurvivorsDf(spark, root, ct)
-          .filter(col("content") =!= 0 || keepCond)
-          .select(col("path"), col("sizeBytes"), col("records"),
-            col("content"), col("partition"), col("specId"), col("eqcols"),
-            col("firstRowId"))
-          .collect()
-        val ckDeletes = rows.filter(_.getInt(3) != 0).map { r =>
-          FileEntry(r.getString(0), r.getLong(1), r.getLong(2), Map.empty,
-            None, Some(r.getInt(3)),
-            Option(r.getAs[scala.collection.Seq[String]]("eqcols")).map(_.toSeq))
-        }.toSeq
-        val deletes = ckDeletes ++ ct.tailAdds.filter(_.isDelete)
-        if (!morNativeEligible(spark, schema, deletes)) return None
-        val ckEntries = rows.filter(_.getInt(3) == 0).map { r =>
-          val part = Option(r.getAs[scala.collection.Map[String, String]]("partition"))
-            .map(_.toMap).filter(_.nonEmpty)
-          val spec = Option.when(!r.isNullAt(5))(r.getInt(5))
-          FileEntry(r.getString(0), r.getLong(1), r.getLong(2),
-            Map.empty, part, None, None, spec,
-            Option.when(!r.isNullAt(7))(r.getLong(7)))
-        }.toSeq
-        val tailLive = prunedData(types, specs, preds,
-          ct.tailAdds.filter(_.isData), aliases)
-        Some(NativePlan(schema, ckEntries ++ tailLive, specs,
-          specs.size - 1, distributedPlanned = true, deletes,
-          renameAlts(schema)))
-      case None => snapshotNativePlan(spark, state(root, asOf), preds)
-    }
-  }
+  /** Plan a scan for the native (DSv2 Batch / columnar) read path:
+    * the [[ckptPlanner]]'s files for `preds`, or None when the snapshot
+    * needs read-time semantics only the DataFrame plane provides.
+    * Below the planning threshold this is the driver prune of the
+    * cached snapshot; above it the checkpoint planner's one job. */
+  private[graft] def planNativeScan(spark: SparkSession, root: String,
+      preds: Seq[Pred], asOf: Option[Long]): Option[NativePlan] =
+    nativePlan(spark, ckptPlanner(spark, root, asOf), preds)
 
-  /** The driver-side native plan of a snapshot already in hand: the
-    * data files surviving `preds` and every live delete file, or None
-    * when the snapshot needs the V1 plane (the same eligibility checks
-    * as [[planNativeScan]]). No log replay and no checkpoint job. */
-  private[lake] def snapshotNativePlan(spark: SparkSession, snap: Snapshot,
-      preds: Seq[Pred]): Option[NativePlan] = {
-    val schema = snap.schema
-    val deletes = snap.files.filter(_.isDelete)
-    if (renamesAmbiguous(schema) || !morNativeEligible(spark, schema, deletes)) None
+  /** `p`'s native plan, or None for the shapes the native reader
+    * cannot serve: an ambiguous rename, or a delete set
+    * [[morNativeEligible]] declines. Renamed columns stay native: the
+    * plan carries the rename alternatives and the wrapping reader
+    * resolves which name each file physically carries (footer field
+    * set, cached per executor). Live delete files ride along in
+    * `deletes` and apply as per-file row-index / key-set filters inside
+    * the columnar reader (GraftMorReaderFactory). Widened types and
+    * ADD-COLUMN null-fill stay native: both planes hand the SAME
+    * explicit read schema to the same vectorized parquet reader. */
+  private def nativePlan(spark: SparkSession, p: FilePlanner,
+      preds: Seq[Pred]): Option[NativePlan] =
+    if (renamesAmbiguous(p.schema)) None
     else {
-      val types = schema.fields.map(f => f.name -> f.dataType).toMap
-      val specs = specHistory(snap.properties)
-      val entries = prunedData(types, specs, preds,
-        snap.files.filter(_.isData), statAliases(schema))
-      Some(NativePlan(schema, entries, specs,
-        specs.size - 1, distributedPlanned = false, deletes,
-        renameAlts(schema)))
+      val (data, deletes) = p.files(preds)
+      Option.when(morNativeEligible(spark, p.schema, deletes))(NativePlan(p.schema, data,
+        p.specs, p.specs.size - 1, p.distributed, deletes, renameAlts(p.schema)))
     }
-  }
 
   /** The bin scan's plan ([[GraftBinScanProvider]]): snapshot
     * `snapshotId`'s native plan narrowed to the bins' data files, each
@@ -7236,7 +7069,7 @@ object GraftTable {
     * second replay and no checkpoint job. */
   private[lake] def binScanPlan(spark: SparkSession, root: String, snapshotId: Long,
       bins: Seq[Seq[String]]): NativePlan = {
-    val plan = snapshotNativePlan(spark, state(root, Some(snapshotId)), Nil)
+    val plan = nativePlan(spark, snapshotPlanner(state(root, Some(snapshotId))), Nil)
       .getOrElse(throw new IllegalArgumentException(
         s"snapshot $snapshotId of $root needs the V1 read plane; its bins cannot scan natively"))
     val byPath = plan.entries.map(f => f.path -> f).toMap

@@ -269,16 +269,24 @@ class PruningPropertySpec extends SparkSpec {
     // twin drift is exactly where the round-7/8 type-dispatch bugs
     // lived (decimal text order). Random predicates over tables whose
     // checkpoint forces the distributed path must produce the same
-    // live-file count and the same rows as the driver planner.
+    // live-file count and the same rows as the driver planner, and the
+    // native scan and DML victim selection must plan the driver's files.
     val layouts = Seq(
-      ("identity(c0)", DecimalType(9, 2)),   // the inversion-prone type
-      ("identity(c0)", StringType),
-      ("identity(c0)", TimestampType),
-      ("days(c0)", TimestampType),           // time-bucket range compare
-      ("months(c0)", DateType),
-      ("bucket(4,c0)", LongType),            // equality-only transforms
-      ("truncate(3,c0)", StringType))
-    for (((spec, c0dt), ti) <- layouts.zipWithIndex) {
+      ("identity(c0)", DecimalType(9, 2), false),   // the inversion-prone type
+      ("identity(c0)", StringType, false),
+      ("identity(c0)", TimestampType, false),
+      ("days(c0)", TimestampType, false),           // time-bucket range compare
+      ("months(c0)", DateType, false),
+      ("bucket(4,c0)", LongType, false),            // equality-only transforms
+      ("truncate(3,c0)", StringType, false),
+      // live position and equality delete files, in the checkpoint and
+      // in its tail
+      ("bucket(4,c0)", LongType, true))
+    val idKeys = StructType(Seq(StructField("id", LongType, nullable = false)))
+    def deleteIds(root: String, ids: Long*): Unit =
+      GraftTable.deleteEqualityMoR(spark, root,
+        spark.createDataFrame(ids.map(Row(_)).asJava, idKeys))
+    for (((spec, c0dt, withDeletes), ti) <- layouts.zipWithIndex) {
       val dts = Seq(c0dt, LongType, DoubleType, DateType)
       val schema = StructType(StructField("id", LongType, nullable = false) +:
         dts.zipWithIndex.map { case (dt, i) => StructField(s"c$i", dt, nullable = true) })
@@ -300,9 +308,20 @@ class PruningPropertySpec extends SparkSpec {
       val part1 = rows(0, 50)
       val part2 = rows(50, 70)
       GraftTable.append(spark, root, spark.createDataFrame(part1.asJava, schema))
+      if (withDeletes) {
+        GraftTable.deleteWhereMoR(spark, root, col("id") % 7 === 0)
+        deleteIds(root, 3L, 11L)
+      }
       GraftTable.rewriteManifests(root)   // parquet checkpoint
       // a post-checkpoint tail so the tail-resolution path participates
       GraftTable.append(spark, root, spark.createDataFrame(part2.asJava, schema))
+      if (withDeletes) {
+        GraftTable.deleteWhereMoR(spark, root, col("id") === 60L)
+        deleteIds(root, 5L, 65L)
+      }
+      val driverDeletes = GraftTable.state(root).files.filter(_.isDelete).map(_.path).toSet
+      assert(driverDeletes.size == (if (withDeletes) 4 else 0),
+        s"layout $ti: live delete files $driverDeletes")
       val pools: Seq[IndexedSeq[Any]] = (0 until dts.length).map(i =>
         (part1 ++ part2).flatMap(r => Option(r.get(i + 1))).toIndexedSeq)
       for (_ <- 0 until 12) {
@@ -317,6 +336,16 @@ class PruningPropertySpec extends SparkSpec {
             s"dist=${plan.liveFiles} driver=$dlive)")
         assert(plan.df.except(ddf).isEmpty && ddf.except(plan.df).isEmpty,
           s"seed=$seed layout=$ti: row mismatch under [${conjs.mkString(" AND ")}]")
+        val driverData = GraftTable.liveDataFiles(root, preds).map(_.path).toSet
+        val native = GraftTable.planNativeScan(spark, root, preds, None)
+          .getOrElse(fail(s"layout $ti: the native scan declined"))
+        assert(native.distributedPlanned &&
+          native.entries.map(_.path).toSet == driverData &&
+          native.deletes.map(_.path).toSet == driverDeletes,
+          s"seed=$seed layout=$ti: native plan disagrees under [${conjs.mkString(" AND ")}]")
+        val (victims, dels, dist) = GraftTable.planDmlProbe(spark, root, preds)
+        assert(dist && victims.toSet == driverData && dels.toSet == driverDeletes,
+          s"seed=$seed layout=$ti: DML victims disagree under [${conjs.mkString(" AND ")}]")
       }
     }
   }

@@ -311,23 +311,27 @@ class RowLineageSpec extends SparkSpec {
 
   test("compacting 40 small files runs no job outside its one SQL execution (no listing job)") {
     import spark.implicits._
-    val root = freshRoot("narrow-many")
-    GraftTable.create(spark, root, schema)
-    val rnd = new scala.util.Random(31)
-    (0 until 40).foreach { i =>
-      GraftTable.append(spark, root, spark.createDataFrame(
-        rnd.shuffle((i * 5 until i * 5 + 5).toList)
-          .map(k => Row(k.toLong, s"v$k")).asJava, schema).coalesce(1))
+    // a third of the bytes per bin, and a target that forces more than
+    // 16 bins (the write then stages more than 16 parts)
+    for ((name, divisor, minBins) <- Seq(("narrow-many", 3, 3), ("narrow-many-bins", 20, 17))) {
+      val root = freshRoot(name)
+      GraftTable.create(spark, root, schema)
+      val rnd = new scala.util.Random(31)
+      (0 until 40).foreach { i =>
+        GraftTable.append(spark, root, spark.createDataFrame(
+          rnd.shuffle((i * 5 until i * 5 + 5).toList)
+            .map(k => Row(k.toLong, s"v$k")).asJava, schema).coalesce(1))
+      }
+      GraftTable.deleteWhereMoR(spark, root, col("k") % 6 === 0)
+      GraftTable.deleteEqualityMoR(spark, root, Seq(7L, 77L).toDF("k"))
+      val before = rowsWithIds(root)
+      val target = GraftTable.state(root).files.filter(_.isData).map(_.sizeBytes).sum / divisor
+      val bins = planBins(root, target)
+      assert(bins.size >= minBins && bins.flatten.size === 40, s"planned ${bins.map(_.size)}")
+      compactNarrow(spark, root, target)
+      assert(GraftTable.state(root).files.count(_.isData) === bins.size)
+      assert(rowsWithIds(root) === before)
     }
-    GraftTable.deleteWhereMoR(spark, root, col("k") % 6 === 0)
-    GraftTable.deleteEqualityMoR(spark, root, Seq(7L, 77L).toDF("k"))
-    val before = rowsWithIds(root)
-    val target = GraftTable.state(root).files.filter(_.isData).map(_.sizeBytes).sum / 3
-    val bins = planBins(root, target)
-    assert(bins.size >= 3 && bins.flatten.size === 40, s"planned ${bins.map(_.size)}")
-    compactNarrow(spark, root, target)
-    assert(GraftTable.state(root).files.count(_.isData) === bins.size)
-    assert(rowsWithIds(root) === before)
   }
 
   /** Every row with its `_row_id`, whatever the schema. */

@@ -380,7 +380,7 @@ class S3LazyHydrationSpec extends SparkSpec {
       assert(ex2.getMessage.contains("readStreamChanges"))
 
       // delete-compaction maintenance reads its delete inputs directly
-      // (not through readPaths) — those reads hydrate first now, so a
+      // (not through readFiles) — those reads hydrate first now, so a
       // metadata-only follower can fold its deletes to a DV container
       assert(!Files.isDirectory(rootY.resolve("deletes")))
       GraftTable.rewriteDeletesToDV(spark, rootY.toString)
