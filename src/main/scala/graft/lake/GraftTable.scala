@@ -901,8 +901,7 @@ object GraftTable {
     // direct-write staging: the grafts3 scheme + client conf so footer
     // reads resolve the store
     extraConf.foreach { case (k, v) => conf.set(k, v) }
-    if (paths.size <= 1) return paths.map(readFooter(_, conf))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(paths.size, 8))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(paths.size.max(1).min(8))
     try {
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
       Await.result(Future.traverse(paths)(p => Future(readFooter(p, conf))), Duration.Inf)
